@@ -4,10 +4,13 @@
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Extra modes:
-  python bench.py --scaling   # run pipeline at local[8] vs local[32],
-                              # report docs/sec + scaling efficiency
-                              # (BASELINE.md two-cluster-size evidence)
+Extra modes (each prints one JSON line):
+  python bench.py --sf1           # the headline suite on a 10x
+                                  # replica of sf0.1, plus profile and
+                                  # assess tiers on the big tables
+  python bench.py --dedup-scale   # exact + near demotion stages at
+                                  # 8k/80k/800k docs, plan shape
+                                  # checked (BENCH/DEDUP_SCALE.json)
 """
 
 from __future__ import annotations
@@ -17,9 +20,10 @@ import os
 import sys
 import time
 
+from dataprof_spark.session import default_cpus
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = default_cpus()
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -57,78 +61,14 @@ def _steal_pct(t0: tuple[int, int], t1: tuple[int, int]) -> float:
     return round(100.0 * (t1[0] - t0[0]) / max(1, t1[1] - t0[1]), 2)
 
 
-def _headline_mutex_enter() -> str | None:
-    """Mutual exclusion with a concurrently-running --scaling-hunt:
-    set the hunt's hold file so no NEW pair starts during the timed
-    suite, then wait (bounded, 12 min) for any in-flight pair to
-    finish. Without this, the driver's per-round headline print and a
-    session-spanning hunt pair can land on top of each other — same-VM
-    contention the steal filter cannot see (the exact failure mode
-    behind BENCH_r05's phantom 14% regression). Returns the hold path
-    if WE created it (caller must remove it), None otherwise."""
-    bdir = "BENCH"
-    if not os.path.isdir(bdir):
-        return None
-    hold = os.path.join(bdir, ".hunt_hold")
-    created = None
-    try:
-        # O_EXCL create: a check-then-open('w') pair raced — two
-        # concurrent headline/strike processes could both pass the
-        # not-exists check, and the second's exit deleted the first's
-        # still-needed hold (ADVICE r6).
-        with open(hold, "x") as f:
-            f.write(f"headline pid={os.getpid()} at={time.time()}")
-        created = hold
-    except FileExistsError:
-        # a STALE hold (>1h, same threshold as the hunt's _held) is a
-        # crashed holder: the hunt already ignores it, so leaving it
-        # in place means NOBODY gates the hunt while we burn the box —
-        # exactly how r7 pairs 2-4 got self-load-contaminated. Take it
-        # over (refresh mtime, own the removal).
-        try:
-            if time.time() - os.path.getmtime(hold) >= 3600:
-                with open(hold, "w") as f:
-                    f.write(
-                        f"headline pid={os.getpid()} at={time.time()} "
-                        "(took over stale hold)"
-                    )
-                created = hold
-        except OSError:
-            pass  # live holder or vanished: either way, not ours
-    except OSError:
-        return None
-    marker = os.path.join(bdir, ".pair_running")
-    t_stop = time.time() + 720
-    while os.path.exists(marker) and time.time() < t_stop:
-        time.sleep(10.0)
-    return created
-
-
-def _headline_mutex_exit(created: str | None) -> None:
-    if created:
-        try:
-            os.remove(created)
-        except OSError:
-            pass
-
-
 def run_headline() -> dict:
     """Median-of-N timing per query (N = $BENCH_TRIALS, default 5),
     after a per-query warm-up execution. Single-shot timings on a
     shared host proved noisy (r3's pipeline_decisions artifact printed
-    0.851 s vs r2's 0.531 with no code change on that path); the
-    median-of-trials discipline the scaling protocol already uses is
-    applied here too, and the per-query [min, max] spread is disclosed
-    so any residual host noise is visible in the artifact. Mutually
-    exclusive with --scaling-hunt via the hold/marker files."""
-    _mutex = _headline_mutex_enter()
-    try:
-        return _run_headline_inner()
-    finally:
-        _headline_mutex_exit(_mutex)
-
-
-def _run_headline_inner() -> dict:
+    0.851 s vs r2's 0.531 with no code change on that path), so each
+    query reports the median of its trials and discloses the per-query
+    [min, max] spread, making residual host noise visible in the
+    artifact."""
     import statistics
 
     from dataprof_spark import queries as q
@@ -144,7 +84,8 @@ def _run_headline_inner() -> dict:
     # a STREAM DRAM probe before and after the timed suite (the axis
     # /proc/stat steal cannot see), per-query steal%, and loadavg.
     # Probes run OUTSIDE the timed windows. BENCH_SKIP_PROBE=1 skips
-    # them (sub-32-core hosts degrade gracefully inside the probe too).
+    # them; on a host with fewer than 32 cores the probe reports
+    # itself skipped.
     skip_probe = os.environ.get("BENCH_SKIP_PROBE", "0") == "1"
     load_pre = open("/proc/loadavg").read().split()[:3]
     probe_pre = {} if skip_probe else memory_bandwidth_probe(attempts=1)
@@ -229,59 +170,6 @@ def _run_headline_inner() -> dict:
     return result
 
 
-def run_headline_hunt(out_path: str = "BENCH/headline_hunt_r6.json") -> dict:
-    """Spread-mode for the headline suite (VERDICT r5 #1): repeat
-    run_headline every BENCH_HEADLINE_SPACING_S seconds (default 600)
-    until BENCH_HEADLINE_RUNS runs (default 3) accumulate, appending
-    each run — with its window self-certification block — to the
-    artifact the moment it completes (the file is the log; post-hoc
-    selection is impossible; re-invocation resumes). The summary keys
-    report the run whose own window certifies cleanest (lowest suite
-    steal, then highest pre-probe 1-group bandwidth) ALONGSIDE the
-    median total across all runs — both disclosed, neither chosen
-    after the fact: the selection rule is pre-declared right here."""
-    spacing = int(os.environ.get("BENCH_HEADLINE_SPACING_S", "600"))
-    max_runs = int(os.environ.get("BENCH_HEADLINE_RUNS", "3"))
-    out_path = os.environ.get("BENCH_HEADLINE_OUT", out_path)
-
-    state: dict = {"runs": []}
-    if os.path.exists(out_path):
-        with open(out_path) as f:
-            state = json.load(f)
-    import statistics
-    while len(state["runs"]) < max_runs:
-        state["runs"].append(run_headline())
-        totals = [r["value"] for r in state["runs"]]
-        cleanest = min(
-            state["runs"],
-            key=lambda r: (
-                r["window"]["steal_pct_suite"],
-                -(r["window"].get("stream_probe_pre") or {}).get(
-                    "bw_1group_gbs", 0.0
-                ),
-            ),
-        )
-        state.update({
-            "metric": "headline_queries_total_spread",
-            "unit": "sec",
-            "median_total": round(statistics.median(totals), 3),
-            "all_totals": totals,
-            "cleanest_window_total": cleanest["value"],
-            "cleanest_window_steal": cleanest["window"][
-                "steal_pct_suite"
-            ],
-            "n_runs": len(state["runs"]),
-        })
-        os.makedirs(os.path.dirname(out_path), exist_ok=True)
-        tmp = out_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f, indent=1)
-        os.replace(tmp, out_path)
-        if len(state["runs"]) < max_runs:
-            time.sleep(spacing)
-    return state
-
-
 def ensure_sf1(base_sf: str = "/root/testdata/sf0.1") -> str:
     """Deterministic sf1-scale fixture: 10 key-offset replicas of the
     sf0.1 tables (dims nation/region kept as-is), written once to the
@@ -339,19 +227,16 @@ BENCH_CACHE = os.path.join(os.path.dirname(__file__), ".bench_cache")
 BENCH_FILES = 64  # parquet files → natural input-split parallelism
 
 
-def ensure_bench_corpus(seed: int = 42, with_dups: bool = False) -> str:
+def ensure_bench_corpus(with_dups: bool = False) -> str:
     """Deterministic fixture corpus at bench scale (FIXTURES.md A1,
     ~100k docs), written once as 64 parquet files so Spark gets
-    file-granular input splits without a repartition shuffle. Distinct
-    seeds produce disjoint same-size shards (weak-scaling bench).
+    file-granular input splits without a repartition shuffle.
     with_dups appends 5% exact + 3% near duplicate copies (dedup-scale
     bench: demotion stages must be timed on non-empty loser sets)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    suffix = "" if seed == 42 else f"_s{seed}"
-    if with_dups:
-        suffix += "_dup"
+    suffix = "_dup" if with_dups else ""
     dest = os.path.join(BENCH_CACHE, f"pages_{BENCH_DOCS}{suffix}")
     marker = os.path.join(dest, "_DONE")
     if os.path.exists(marker):
@@ -359,9 +244,9 @@ def ensure_bench_corpus(seed: int = 42, with_dups: bool = False) -> str:
     from dataprof_spark.pipeline import fixtures
 
     os.makedirs(dest, exist_ok=True)
-    rows = fixtures.generate_pages(n=BENCH_DOCS, seed=seed)
+    rows = fixtures.generate_pages(n=BENCH_DOCS, seed=42)
     if with_dups:
-        rows = fixtures.inject_duplicates(rows, seed=seed)
+        rows = fixtures.inject_duplicates(rows, seed=42)
     per_file = (len(rows) + BENCH_FILES - 1) // BENCH_FILES
     for i in range(BENCH_FILES):
         chunk = rows[i * per_file : (i + 1) * per_file]
@@ -382,184 +267,6 @@ def ensure_bench_corpus(seed: int = 42, with_dups: bool = False) -> str:
         pq.write_table(table, os.path.join(dest, f"part_{i:03d}.parquet"))
     open(marker, "w").close()
     return dest
-
-
-def _executor_machinery():
-    """Shared phase machinery for the executor-scaling protocols:
-    returns a one_pair(flip) callable that runs one barrier-
-    synchronized 1×/4N paired trial and returns
-    (wall_1, wall_4, results_1, results_4, steal_1, steal_4).
-    The worker env (incl. DATAPROF_LANGID_CACHE) is captured at
-    build time, so callers choose the profile before calling."""
-    import subprocess
-    import tempfile
-
-    def shard_files(seed):
-        d = ensure_bench_corpus(seed)
-        return sorted(
-            os.path.join(d, f) for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
-
-    def worker_cmd(file_list, cores, barrier_dir):
-        # Pin each executor-process to its own 8-core set — exactly
-        # what a cluster manager's cgroup isolation gives a real
-        # executor. Without pinning, each JVM sizes GC/JIT/Python
-        # pools for all 32 cores and 4 JVMs oversubscribe the box —
-        # a sandbox artifact, not a property of the pipeline.
-        return [
-            "taskset", "-c", cores,
-            sys.executable, __file__, "--worker", ",".join(file_list),
-            "--barrier", barrier_dir,
-        ]
-
-    env = dict(os.environ, SPARK_GRAFT_CPUS="8")
-
-    def cpu_ticks():
-        """(steal, total) jiffies from /proc/stat — objective record
-        of hypervisor interference during each measured window."""
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(v) for v in parts[1:]]
-        return (vals[7] if len(vals) > 7 else 0), sum(vals)
-
-    def run_phase(worker_specs):
-        """Start workers, wait for all warm-ups, release the barrier,
-        time go → last `done` marker (teardown excluded — JVM
-        shutdown is constant noise, not pipeline work)."""
-        bdir = tempfile.mkdtemp(prefix="bench_barrier_")
-        procs = [
-            subprocess.Popen(
-                worker_cmd(fl, cores, bdir),
-                env=env, stdout=subprocess.PIPE, text=True,
-            )
-            for fl, cores in worker_specs
-        ]
-        while (
-            len([f for f in os.listdir(bdir) if f.startswith("ready")])
-            < len(procs)
-        ):
-            time.sleep(0.1)
-            if any(p.poll() is not None and p.poll() != 0 for p in procs):
-                raise RuntimeError("bench worker died before barrier")
-        open(os.path.join(bdir, "go"), "w").close()
-        steal0, total0 = cpu_ticks()
-        t0 = time.perf_counter()
-        while (
-            len([f for f in os.listdir(bdir) if f.startswith("done")])
-            < len(procs)
-        ):
-            time.sleep(0.05)
-            if any(p.poll() is not None and p.poll() != 0 for p in procs):
-                raise RuntimeError("bench worker died mid-measurement")
-        wall = time.perf_counter() - t0
-        steal1, total1 = cpu_ticks()
-        steal_pct = (
-            100.0 * (steal1 - steal0) / max(1, total1 - total0)
-        )
-        results = []
-        for p in procs:
-            stdout, _ = p.communicate()
-            results.append(json.loads(stdout.strip().splitlines()[-1]))
-        return wall, results, steal_pct
-
-    # WEAK scaling — the cluster-sizing definition: 4× the executors
-    # process 4× the data in (ideally) the same wall time. Each
-    # executor gets a full-size disjoint shard, so per-run fixed
-    # overhead amortizes identically in both phases.
-    core_sets = ["0-7", "8-15", "16-23", "24-31"]
-    spec_1 = [(shard_files(42), "0-7")]
-    spec_4 = [
-        (shard_files(42 + i), cores)
-        for i, cores in enumerate(core_sets)
-    ]
-
-    def one_pair(flip: bool):
-        # alternate phase order per trial: monotone host drift within
-        # a trial would otherwise bias every pair the same direction
-        if not flip:
-            w1, r1, s1 = run_phase(spec_1)
-            w4, r4, s4 = run_phase(spec_4)
-        else:
-            w4, r4, s4 = run_phase(spec_4)
-            w1, r1, s1 = run_phase(spec_1)
-        return w1, w4, r1, r4, s1, s4
-
-    return one_pair
-
-
-def run_executor_scaling() -> dict:
-    """N vs 4N *executors*, modeled faithfully in the sandbox: an
-    executor is an 8-thread JVM process pinned to its own 8 cores
-    (what a cluster manager's cgroup isolation provides). WEAK
-    scaling: the 4N cluster processes 4 disjoint full-size shards —
-    4× the data — in ideally the same wall time; measured windows are
-    barrier-synchronized across executors."""
-    one_pair = _executor_machinery()
-
-    # PAIRED design against time-varying host steal on this shared
-    # VM: each trial runs the 1× phase and the 4N phase back-to-back,
-    # so both sides of the ratio see the same host conditions. The
-    # estimator is the MEDIAN of ≥5 pairs (VERDICT r1 #3: a best-pair
-    # pick is not an estimator); every pair is listed for
-    # transparency.
-    n_trials = int(os.environ.get("BENCH_SCALING_TRIALS", "5"))
-    pairs = []
-    for t in range(n_trials):
-        w1, w4, r1, r4, s1, s4 = one_pair(t % 2 == 1)
-        # per-window DRAM probe (VERDICT r4 #7): the probe's ceiling
-        # swings ~2x between windows on this host, so each pair
-        # carries its own window's bandwidth number — every artifact
-        # is self-attributing
-        probe = memory_bandwidth_probe(attempts=1)
-        pairs.append((w1, w4, r1, r4, s1, s4, probe))
-    # PRE-DECLARED interference filter: a pair where either measured
-    # window saw ≥2% hypervisor steal (from /proc/stat, recorded
-    # independently of the outcome) measures the hypervisor, not the
-    # pipeline. The 4N phase runs all 32 cores, so steal hits it with
-    # 4× the probability of the 1× phase — an asymmetric bias that
-    # always LOWERS the ratio. Filter needs ≥3 survivors to apply;
-    # both medians + every pair's steal numbers are reported.
-    STEAL_CUT = 2.0
-    clean = [p for p in pairs if p[4] < STEAL_CUT and p[5] < STEAL_CUT]
-    chosen = clean if len(clean) >= 3 else pairs
-    ranked = sorted(chosen, key=lambda p: p[0] / p[1])
-    wall_1, wall_4, r1, r4, _s1, _s4, _pr = ranked[len(ranked) // 2]
-    ranked_all = sorted(pairs, key=lambda p: p[0] / p[1])
-    med_all = ranked_all[len(ranked_all) // 2]
-    eff_unfiltered = round(med_all[0] / med_all[1], 3)
-    docs_1 = sum(r["n_docs"] * r["n_runs"] for r in r1)
-    docs_4 = sum(r["n_docs"] * r["n_runs"] for r in r4)
-    thr_1, thr_4 = docs_1 / wall_1, docs_4 / wall_4
-    eff = (thr_4 / thr_1) / 4  # == wall_1/wall_4 when docs_4 == 4*docs_1
-    ceiling = hardware_ceiling()
-    return {
-        "metric": "executor_scaling_1_to_4",
-        "value": round(eff, 3),
-        "unit": "ratio",
-        "estimator": (
-            f"median of {len(chosen)}/{n_trials} paired trials "
-            f"(pairs with ≥{STEAL_CUT}% hypervisor steal in either "
-            "window excluded when ≥3 clean pairs remain)"
-        ),
-        "eff_unfiltered_median": eff_unfiltered,
-        "n_clean_pairs": len(clean),
-        "wall_1x_local8_sec": round(wall_1, 3),
-        "wall_4x_local8_sec": round(wall_4, 3),
-        "docs_per_sec_1x": round(thr_1, 1),
-        "docs_per_sec_4x": round(thr_4, 1),
-        "n_docs": BENCH_DOCS,
-        "per_worker_walls": [r["value"] for r in r4],
-        "all_pairs": [
-            {"wall_1": round(w1, 3), "wall_4": round(w4, 3),
-             "eff": round(w1 / w4, 3),
-             "steal_pct_1": round(s1, 2), "steal_pct_4": round(s4, 2),
-             "dram_probe": pr}
-            for w1, w4, _a, _b, s1, s4, pr in pairs
-        ],
-        "hardware_ceiling_eff": ceiling,
-        "normalized_eff": round(min(eff / ceiling, 1.0), 3),
-    }
 
 
 # STREAM-add kernel (a = b + c, 24 bytes/element) per pinned group:
@@ -693,466 +400,6 @@ def memory_bandwidth_probe(attempts: int = 2) -> dict:
         "bw_scaling_eff": round(min(eff, 1.0), 3),
         "kernel": "STREAM add (numpy, 8 procs x 128MiB arrays/group, "
                   f"best of {attempts} attempt(s))",
-    }
-
-
-def hardware_ceiling() -> float:
-    """This VM's own 4-group scaling ceiling, measured with the SAME
-    per-document work (core.gates.decide) in plain multiprocessing —
-    no Spark, no JVM. Shared DRAM/LLC between pinned core groups caps
-    weak-scaling efficiency; real cluster executors on separate hosts
-    do not share a memory subsystem, so spark_eff / ceiling is the
-    cluster-predictive number."""
-    import subprocess
-
-    worker = (
-        "import time, multiprocessing as mp\n"
-        "from dataprof_spark.pipeline import fixtures\n"
-        "from dataprof_spark.core import gates\n"
-        "rows = fixtures.generate_pages(n=5000)\n"
-        "def work(chunk):\n"
-        "    return sum(1 for r in chunk if gates.decide("
-        "r['url'], r['text'], r['lang'])['keep'])\n"
-        "chunks = [rows[i::8] for i in range(8)]\n"
-        "with mp.Pool(8) as p:\n"
-        "    p.map(work, chunks)\n"
-        "    t0 = time.perf_counter()\n"
-        "    for _ in range(3): p.map(work, chunks)\n"
-        "    print(time.perf_counter() - t0)\n"
-    )
-
-    def group(cores):
-        return subprocess.Popen(
-            ["taskset", "-c", cores, sys.executable, "-c", worker],
-            stdout=subprocess.PIPE, text=True,
-            cwd=os.path.dirname(__file__),
-        )
-
-    def attempt() -> float:
-        t1 = float(group("0-7").communicate()[0].strip())
-        procs = [group(c) for c in ("0-7", "8-15", "16-23", "24-31")]
-        walls = [float(p.communicate()[0].strip()) for p in procs]
-        return t1 / max(walls)
-
-    # two attempts, best, clamped: bursty host steal can make a single
-    # 1-group phase slower than the 4-group phase (ratio > 1 = noise)
-    return round(min(1.0, max(attempt(), attempt())), 3)
-
-
-MEASURE_RUNS = 3
-
-
-def run_worker(file_csv: str, barrier_dir: str | None = None) -> dict:
-    """One executor-process: local[8] pipeline over the given files.
-    2 warm-ups; with --barrier, signals ready after warm-up and waits
-    for the parent's `go` so all executors' measured windows coincide
-    (unsynchronized windows made concurrency contention look like
-    worker imbalance)."""
-    import statistics
-
-    from dataprof_spark.operators import gates
-    from dataprof_spark.session import get_spark
-
-    gc_opts = os.environ.get(
-        "BENCH_GC_OPTS", "-XX:+UseParallelGC"
-    )
-    spark = get_spark(
-        app_name="bench_worker", master="local[8]", shuffle_partitions=8,
-        extra_conf={
-            # size JVM GC/JIT pools for the pinned 8 cores, not the
-            # box; ParallelGC beats G1 for this allocation-heavy batch
-            # shape and its pauses don't thrash neighbours' caches
-            "spark.driver.extraJavaOptions": (
-                f"-XX:ActiveProcessorCount=8 {gc_opts}"
-            ),
-        },
-    )
-    pages = spark.read.parquet(*file_csv.split(","))
-    n = pages.count()
-    df = gates.decide(pages)
-
-    def job():
-        df.write.format("noop").mode("overwrite").save()
-
-    job()
-    job()
-    if barrier_dir:
-        open(os.path.join(barrier_dir, f"ready_{os.getpid()}"), "w").close()
-        go = os.path.join(barrier_dir, "go")
-        while not os.path.exists(go):
-            time.sleep(0.05)
-    times = []
-    for _ in range(MEASURE_RUNS):
-        t0 = time.perf_counter()
-        job()
-        times.append(time.perf_counter() - t0)
-    dt = statistics.median(times)
-    if barrier_dir:
-        open(
-            os.path.join(barrier_dir, f"done_{os.getpid()}"), "w"
-        ).close()
-    spark.stop()
-    return {
-        "metric": "worker_wall",
-        "value": round(dt, 3),
-        "unit": "sec",
-        "n_docs": n,
-        "n_runs": MEASURE_RUNS,
-        "runs": [round(t, 3) for t in times],
-    }
-
-
-def run_scaling(out_path: str = "BENCH/BASELINE.md") -> dict:
-    """Same pipeline job at local[8] and local[32] on identical input
-    (the bench fixture corpus); efficiency = (docs/s ratio) / 4
-    (ideal 4× speedup → 1.0). Sandbox evidence for the BASELINE.md
-    N-vs-4N-executors criterion."""
-    import subprocess
-
-    results = {}
-    for n in (8, 32):
-        env = dict(os.environ, SPARK_GRAFT_CPUS=str(n))
-        out = subprocess.run(
-            [sys.executable, __file__, "--pipeline-once"],
-            env=env,
-            capture_output=True,
-            text=True,
-            check=True,
-        )
-        results[n] = json.loads(out.stdout.strip().splitlines()[-1])
-    t8, t32 = results[8]["value"], results[32]["value"]
-    d8, d32 = results[8]["docs_per_sec"], results[32]["docs_per_sec"]
-    eff_threads = (d32 / d8) / 4 if d8 else None
-    dram = memory_bandwidth_probe()
-    execs = run_executor_scaling()
-    # production-weight configuration: langid memo-cache off stands in
-    # for real fastText/KenLM per-token work the memo cannot skip —
-    # the Python stage dominates and executor scaling rises
-    os.environ["DATAPROF_LANGID_CACHE"] = "0"
-    try:
-        execs_heavy = run_executor_scaling()
-    finally:
-        os.environ.pop("DATAPROF_LANGID_CACHE", None)
-    summary = {
-        "metric": "scaling_efficiency",
-        # headline = the production-weight configuration (real model
-        # forward passes), declared upfront — not max-of-configs
-        "value": execs_heavy["value"],
-        "unit": "ratio",
-        "executor_eff_heavy_model": execs_heavy["value"],
-        "thread_eff_8_to_32": round(eff_threads, 3) if eff_threads else None,
-        "executor_eff_1_to_4": execs["value"],
-        "t_local8_sec": t8,
-        "t_local32_sec": t32,
-        "docs_per_sec_8": d8,
-        "docs_per_sec_32": d32,
-        "executors": execs,
-        "executors_heavy": execs_heavy,
-        "dram_bandwidth": dram,
-        "n_docs": BENCH_DOCS,
-    }
-    os.makedirs(os.path.dirname(out_path), exist_ok=True)
-    with open(out_path, "w") as f:
-        f.write(
-            "# BENCH — two-cluster-size scaling evidence\n\n"
-            "Same pipeline job (full decisions: native heuristic gates "
-            "+ langid/perplexity/scrub pandas UDFs), same input "
-            f"({BENCH_DOCS} synthetic Common-Crawl-style pages, 64 "
-            "parquet files), at two cluster sizes, per BASELINE.md.\n\n"
-            "## Primary: N vs 4N executors (separate pinned JVMs, "
-            "weak scaling)\n\n"
-            "An executor is modeled as what it is on a real cluster: "
-            "its own 8-thread JVM + Python worker pool, pinned to its "
-            "own 8 cores. N = one executor over one shard; 4N = four "
-            "concurrent executors over four disjoint full-size shards "
-            "(4× the data), measured in barrier-synchronized windows.\n\n"
-            "| cluster | wall (s) | aggregate docs/sec |\n|---|---|---|\n"
-            f"| 1 × local[8], 1 shard | {execs['wall_1x_local8_sec']} | "
-            f"{execs['docs_per_sec_1x']} |\n"
-            f"| 4 × local[8], 4 shards | {execs['wall_4x_local8_sec']} | "
-            f"{execs['docs_per_sec_4x']} |\n\n"
-            f"**Executor-scaling efficiency: {execs['value']}** "
-            "(target ≥ 0.8)\n\n"
-            "Protocol: paired trials — each trial runs the 1× phase "
-            "and the 4N phase back-to-back so both sides of the ratio "
-            "see the same host conditions (this VM is shared; host-"
-            "steal bursts last minutes and pollute whole phases). "
-            f"Estimator: {execs['estimator']} — median, not best "
-            "(VERDICT r1 #3); steal is read from /proc/stat per "
-            "measured window, independent of the outcome, and the 4N "
-            "phase occupies all 32 cores so steal hits it with 4x the "
-            "probability of the 1x phase (an asymmetric bias that "
-            "only ever lowers the ratio). Unfiltered median: "
-            f"{execs['eff_unfiltered_median']}. All pairs: "
-            f"{execs['all_pairs']}.\n\n"
-            "With a PRODUCTION-WEIGHT model stage (per-token langid "
-            "memoization disabled — the sandbox stand-in for real "
-            "fastText/KenLM forward passes, which a memo cannot skip) "
-            "the Python stage dominates and the same protocol gives:\n\n"
-            "| cluster | wall (s) | aggregate docs/sec |\n|---|---|---|\n"
-            f"| 1 × local[8], 1 shard | {execs_heavy['wall_1x_local8_sec']} | "
-            f"{execs_heavy['docs_per_sec_1x']} |\n"
-            f"| 4 × local[8], 4 shards | {execs_heavy['wall_4x_local8_sec']} | "
-            f"{execs_heavy['docs_per_sec_4x']} |\n\n"
-            f"**Executor-scaling efficiency (production-weight): "
-            f"{execs_heavy['value']}**\n\n"
-            f"**Hardware ceiling of this VM: "
-            f"{execs['hardware_ceiling_eff']}** — the same per-document "
-            "work (core.gates.decide) in plain multiprocessing, no "
-            "Spark/JVM, degrades this much between 1 and 4 pinned core "
-            "groups: the box shares one DRAM/LLC across all 32 cores, "
-            "which real cluster executors on separate hosts do not. "
-            f"**Normalized efficiency (spark / ceiling): "
-            f"{execs['normalized_eff']}** — the cluster-predictive "
-            "number.\n\n"
-            + (
-                "**Independent hardware probe: skipped** "
-                f"({dram['skipped']}).\n\n" if "skipped" in dram else
-            "**Independent hardware probe (STREAM-add DRAM bandwidth, "
-            "no Spark/JVM/pipeline code):** one pinned 8-core group "
-            f"alone sustains {dram['bw_1group_gbs']} GB/s; all four "
-            f"groups together sustain {dram['bw_4group_gbs']} GB/s "
-            "aggregate — the memory subsystem itself weak-scales at "
-            f"**{dram['bw_scaling_eff']}** between 1 and 4 groups "
-            f"({dram['kernel']}). A single group saturates the box's "
-            "DRAM, so ANY memory-touching workload is capped by the "
-            "shared memory bus on this VM; separate cluster hosts "
-            "each bring their own. That the Spark pipeline scales at "
-            "0.7-0.8 raw — far ABOVE the pure-bandwidth ceiling — "
-            "shows it is compute-bound, not bus-bound; the residual "
-            "gap to 1.0 is the hardware term the probe quantifies.\n\n"
-            )
-            + "## Secondary: thread scaling inside ONE JVM\n\n"
-            "| master | wall (s) | docs/sec |\n|---|---|---|\n"
-            f"| local[8] | {t8} | {d8} |\n"
-            f"| local[32] | {t32} | {d32} |\n\n"
-            f"**Thread-scaling efficiency: {summary['thread_eff_8_to_32']}**"
-            " — bounded by single-JVM heap/GC sharing, which does not "
-            "exist between real executors; the hardware's own ceiling "
-            "measured with pure multiprocessing on this VM is ~0.78.\n\n"
-            "The pipeline is scan → project → decision emit: no "
-            "shuffle, so scaling is bounded only by executor count and "
-            "Python-worker fan-out — the property that carries to a "
-            "1000-executor cluster at 100 TB.\n"
-        )
-    return summary
-
-
-def _hunt_summary(pairs: list) -> dict:
-    """Same pre-declared estimator as run_executor_scaling (median of
-    pairs; steal≥2% pairs excluded when ≥3 clean remain), over the
-    hunt's accumulated pair records."""
-    STEAL_CUT = 2.0
-    pairs_in = pairs
-    # pairs that ran while the session itself was burning the box
-    # (hold-file gating failed — a stale hold is ignored by the hunt
-    # but blocked takeover until r7) are marked self_load_overlap at
-    # the moment of disclosure and excluded from BOTH the estimator
-    # and the clean count: the protocol's hold gate is equivalent to
-    # those pairs never launching. The marks are append-only in the
-    # artifact, with the overlapping jobs named.
-    pairs = [p for p in pairs if not p.get("self_load_overlap")]
-    clean = [
-        p for p in pairs
-        if p["steal_pct_1"] < STEAL_CUT and p["steal_pct_4"] < STEAL_CUT
-    ]
-    chosen = clean if len(clean) >= 3 else pairs
-
-    def _median(vals: list[float]) -> float:
-        s = sorted(vals)
-        n = len(s)
-        return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0
-
-    # Headline value = the declared estimator, literally: median of the
-    # per-pair efficiencies. r6's artifact printed the median-RANKED
-    # pair's throughput ratio instead, which diverges for even pair
-    # counts / varying per-pair run counts (printed 0.631 where the
-    # declared estimator gave 0.618 — VERDICT r6 note 2).
-    med_eff = _median([p["eff"] for p in chosen])
-    ranked = sorted(chosen, key=lambda p: p["eff"])
-    med = ranked[len(ranked) // 2]
-    thr_1 = med["docs_runs_1"] / med["wall_1"]
-    thr_4 = med["docs_runs_4"] / med["wall_4"]
-    return {
-        "metric": "scaling_efficiency",
-        "value": round(med_eff, 3),
-        "unit": "ratio",
-        "eff_ratio_of_median_walls": round(
-            _median([p["wall_1"] for p in chosen])
-            / _median([p["wall_4"] for p in chosen]), 3
-        ),
-        "profile": "production-weight (langid memo cache off)",
-        "estimator": (
-            f"median of {len(chosen)}/{len(pairs)} paired trials "
-            f"(pairs with ≥{STEAL_CUT}% hypervisor steal in either "
-            "window excluded when ≥3 clean pairs remain); pairs "
-            "spread across the session, persisted on completion"
-        ),
-        "eff_unfiltered_median": round(
-            _median([p["eff"] for p in pairs]), 3
-        ),
-        "n_clean_pairs": len(clean),
-        "n_self_load_excluded": sum(
-            1 for p in pairs_in if p.get("self_load_overlap")
-        ),
-        "wall_1x_local8_sec": round(med["wall_1"], 3),
-        "wall_4x_local8_sec": round(med["wall_4"], 3),
-        "docs_per_sec_1x": round(thr_1, 1),
-        "docs_per_sec_4x": round(thr_4, 1),
-        "n_docs": BENCH_DOCS,
-    }
-
-
-def run_scaling_hunt(out_path: str = "BENCH/scaling_hunt_r5.json") -> dict:
-    """Spread-out capture for the N→4N criterion: one production-
-    weight paired trial every BENCH_HUNT_SPACING_S seconds (default
-    480) until BENCH_HUNT_PAIRS pairs (default 12) accumulate or
-    BENCH_HUNT_DEADLINE_MIN minutes (default 300) elapse.
-
-    Why spacing: co-tenant interference on this shared VM arrives in
-    multi-minute bursts — r5's three CONTIGUOUS protocol runs each
-    landed wholly inside bad windows (medians 0.504-0.732) while r4's
-    cleaner day printed 0.828 with the identical protocol and plan.
-    Spacing the pairs across hours decorrelates the sample from any
-    single burst; it does not change the estimator, which stays the
-    pre-declared steal-filtered median over ALL pairs run. Every pair
-    is appended to the artifact the moment it completes (the file is
-    the log — post-hoc selection is impossible), and re-invocation
-    resumes the same artifact. Pre/post STREAM probes are recorded
-    per pair for attribution ONLY: across 21 r5 production-weight
-    pairs the probe did not predict pipeline efficiency (the two best
-    pairs carried two of the worst post-probes), so nothing is gated
-    on it.
-
-    Self-load hold: if BENCH/.hunt_hold exists when a pair is about to
-    start, the hunt waits for it to disappear before starting. This
-    gates ONLY on our own same-VM workload (pytest, local benches),
-    which /proc/stat steal cannot see (r4 lesson: a concurrent pytest
-    run silently polluted paired trials). It never inspects co-tenant
-    conditions or any outcome — it is equivalent to not launching
-    pairs while we are deliberately burning the box ourselves. While a
-    pair is in flight BENCH/.pair_running exists so the session's own
-    heavy jobs can symmetrically wait for the pair to finish."""
-    spacing = int(os.environ.get("BENCH_HUNT_SPACING_S", "480"))
-    max_pairs = int(os.environ.get("BENCH_HUNT_PAIRS", "12"))
-    deadline_min = float(os.environ.get("BENCH_HUNT_DEADLINE_MIN", "300"))
-    out_path = os.environ.get("BENCH_HUNT_OUT", out_path)
-
-    state = {"pairs": []}
-    if os.path.exists(out_path):
-        with open(out_path) as f:
-            state = json.load(f)
-    # production-weight profile: langid memo cache off. Restore the
-    # caller's prior value on exit instead of clobbering it (ADVICE r5).
-    prior_cache = os.environ.get("DATAPROF_LANGID_CACHE")
-    os.environ["DATAPROF_LANGID_CACHE"] = "0"
-    try:
-        one_pair = _executor_machinery()
-        hold_path = os.path.join(os.path.dirname(out_path) or ".", ".hunt_hold")
-        pair_marker = os.path.join(
-            os.path.dirname(out_path) or ".", ".pair_running"
-        )
-        t_end = time.time() + deadline_min * 60
-        def _held() -> bool:
-            # a hold older than an hour is a crashed holder, not a
-            # deliberate gate — ignore it rather than stall the hunt
-            try:
-                return time.time() - os.path.getmtime(hold_path) < 3600
-            except OSError:
-                return False
-
-        while len(state["pairs"]) < max_pairs and time.time() < t_end:
-            while _held() and time.time() < t_end:
-                time.sleep(15.0)
-            if time.time() >= t_end:
-                break
-            with open(pair_marker, "w") as f:
-                f.write(str(time.time()))
-            probe_pre = memory_bandwidth_probe(attempts=1)
-            i = len(state["pairs"])
-            w1, w4, r1, r4, s1, s4 = one_pair(i % 2 == 1)
-            probe_post = memory_bandwidth_probe(attempts=1)
-            try:
-                os.remove(pair_marker)
-            except OSError:
-                pass
-            state["pairs"].append({
-                "wall_1": round(w1, 3),
-                "wall_4": round(w4, 3),
-                "eff": round(w1 / w4, 3),
-                "steal_pct_1": round(s1, 2),
-                "steal_pct_4": round(s4, 2),
-                "docs_runs_1": sum(
-                    r["n_docs"] * r["n_runs"] for r in r1
-                ),
-                "docs_runs_4": sum(
-                    r["n_docs"] * r["n_runs"] for r in r4
-                ),
-                "per_worker_walls": [r["value"] for r in r4],
-                "probe_pre": probe_pre,
-                "probe_post": probe_post,
-                "at_unix": round(time.time(), 1),
-            })
-            state.update(_hunt_summary(state["pairs"]))
-            tmp = out_path + ".tmp"
-            os.makedirs(os.path.dirname(out_path), exist_ok=True)
-            with open(tmp, "w") as f:
-                json.dump(state, f, indent=1)
-            os.replace(tmp, out_path)
-            if len(state["pairs"]) >= max_pairs:
-                break
-            time.sleep(max(0.0, min(spacing, t_end - time.time())))
-    finally:
-        if prior_cache is None:
-            os.environ.pop("DATAPROF_LANGID_CACHE", None)
-        else:
-            os.environ["DATAPROF_LANGID_CACHE"] = prior_cache
-        try:
-            os.remove(
-                os.path.join(os.path.dirname(out_path) or ".", ".pair_running")
-            )
-        except OSError:
-            pass
-    return state
-
-
-def run_pipeline_once() -> dict:
-    """One pipeline run over the bench corpus at $SPARK_GRAFT_CPUS
-    (used by --scaling). Full materialization via the noop sink —
-    `count()` would let Catalyst prune the UDF columns and measure a
-    hollow plan. 2 warm-up runs (JIT + Python workers), median of 3
-    measured runs."""
-    import statistics
-
-    from dataprof_spark.operators import gates
-    from dataprof_spark.session import get_spark
-
-    src = ensure_bench_corpus()
-    spark = get_spark(app_name=f"bench_pipe_{CPUS}", master=f"local[{CPUS}]")
-    pages = spark.read.parquet(src)
-    n_docs = pages.count()
-    df = gates.decide(pages)
-
-    def job():
-        df.write.format("noop").mode("overwrite").save()
-
-    job()
-    job()  # 2 warm-ups: JVM JIT needs two passes to compile the hot path
-    times = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        job()
-        times.append(time.perf_counter() - t0)
-    dt = statistics.median(times)
-    spark.stop()
-    return {
-        "metric": "pipeline_wall",
-        "value": round(dt, 3),
-        "unit": "sec",
-        "docs_per_sec": round(n_docs / dt, 1),
-        "n_docs": n_docs,
-        "runs": [round(t, 3) for t in times],
-        "cpus": CPUS,
     }
 
 
@@ -1349,229 +596,15 @@ def run_dedup_scale() -> dict:
     return out
 
 
-def run_dedup_stage_breakdown() -> dict:
-    """VERDICT r6 #3: locate the growing constant in near-dup
-    demotion. Times the FOUR sub-stages of mark_near_duplicates
-    separately at two corpus scales (default 80k and 800k docs, the
-    86k/864k decision tables), and records the candidate-pair and
-    verified-pair counts — candidates drive the verify cost, so the
-    counts tell quadratic-bucket growth apart from per-doc work.
-    Sub-stages:
-      s1 minhash+bands projection (text scan + signature compute)
-      s2 LSH bucket self-join -> distinct candidate pairs
-      s3 shingle-Jaccard verify of the candidates
-      s4 loser-distinct + demotion join back onto decisions
-    s2..s4 chain on persisted inputs so each window times ONE stage.
-    Writes BENCH/DEDUP_STAGES.json."""
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
-
-    from dataprof_spark.operators import dedup, gates
-    from dataprof_spark.session import get_spark
-
-    # pause the session-spanning scaling hunt: a stage-timing window
-    # and a hunt pair on the same VM contaminate each other invisibly
-    _mutex = _headline_mutex_enter()
-    spark = get_spark(
-        app_name="bench_dedup_stages", master=f"local[{CPUS}]"
-    )
-    out: dict = {
-        "metric": "near_dup_stage_breakdown", "cpus": CPUS, "scales": {},
-    }
-    scales = tuple(
-        int(s) for s in os.environ.get(
-            "BENCH_DEDUP_SCALES", "80000,800000"
-        ).split(",")
-    )
-    for n in scales:
-        dec_dir = os.path.join(BENCH_CACHE, f"decisions_{n}_dup")
-        if not os.path.exists(os.path.join(dec_dir, "_DONE")):
-            global BENCH_DOCS
-            saved = BENCH_DOCS
-            BENCH_DOCS = n
-            try:
-                src_dir = ensure_bench_corpus(with_dups=True)
-            finally:
-                BENCH_DOCS = saved
-            pages = spark.read.parquet(src_dir)
-            gates.decide(pages).write.mode("overwrite").parquet(dec_dir)
-            open(os.path.join(dec_dir, "_DONE"), "w").close()
-        decisions = spark.read.parquet(dec_dir).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        n_rows = decisions.count()
-        kept = decisions.filter(F.col("keep")).select(
-            "url", "scrubbed_text"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        n_kept = kept.count()
-        n_bands = dedup.bands_for_threshold(dedup.N_PERM_DEFAULT, 0.7)
-        row: dict = {"n_docs": n_rows, "n_kept": n_kept,
-                     "n_bands": n_bands}
-
-        def timed(name, fn, runs=2):
-            walls, res = [], None
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                res = fn()
-                walls.append(round(time.perf_counter() - t0, 3))
-            row[name] = {"wall_sec": min(walls), "runs": walls}
-            return res
-
-        # s1: signature+band projection only (noop write = full scan)
-        def s1():
-            kept.select(
-                "url",
-                dedup.minhash_bands(
-                    dedup.minhash_signature(F.col("scrubbed_text")),
-                    n_bands,
-                ).alias("bands"),
-            ).write.format("noop").mode("overwrite").save()
-        timed("s1_minhash_bands", s1)
-
-        # s2: candidate table build END-TO-END — includes the eager
-        # localCheckpoint of the exploded band table, which executes
-        # at PLAN-BUILD time inside lsh_candidate_pairs (r7 fix: the
-        # first breakdown built the plan between the s1/s2 windows,
-        # so ~2/3 of the real candidate cost — the signature compute
-        # feeding the checkpoint — was attributed to no stage and the
-        # stage sum understated the pipeline wall ~2x). s1 remains
-        # the pure projection cost of the same signatures for
-        # reference; s2 repeats that compute from the CACHED kept
-        # table, so s1+s2+s3+s4 ≈ the cached-input pipeline wall.
-        pairs = None
-
-        def s2():
-            nonlocal pairs
-            if pairs is not None:
-                pairs.unpersist(blocking=True)
-            pairs = dedup.lsh_candidate_pairs(
-                kept, id_col="url", text_col="scrubbed_text",
-                n_bands=n_bands,
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            return pairs.count()
-        row["n_candidates"] = timed("s2_lsh_candidates", s2, runs=1)
-
-        # s3: verify on the ALREADY-persisted candidate table
-        verified = dedup.ngram_jaccard_pairs(
-            kept, pairs, id_col="url", text_col="scrubbed_text",
-            threshold=0.7, materialize=False,
-        )
-
-        def s3():
-            return verified.count()
-        row["n_verified"] = timed("s3_jaccard_verify", s3)
-
-        # s4: loser distinct + demotion join back, full materialize
-        vc = verified.localCheckpoint(eager=True)
-
-        def s4():
-            losers = vc.select(
-                F.col("id_b").alias("url")
-            ).distinct().withColumn("__nd", F.lit(True))
-            (
-                decisions.join(losers, "url", "left")
-                .withColumn(
-                    "keep", F.col("keep") & F.col("__nd").isNull()
-                )
-                .drop("__nd")
-                .write.format("noop").mode("overwrite").save()
-            )
-        timed("s4_demotion_join", s4)
-        pairs.unpersist(blocking=True)
-        kept.unpersist(blocking=True)
-        decisions.unpersist(blocking=True)
-        out["scales"][str(n_rows)] = row
-    spark.stop()
-    _headline_mutex_exit(_mutex)
-    s = sorted(out["scales"].items(), key=lambda kv: int(kv[0]))
-    if len(s) >= 2:
-        (ak, a), (bk, b) = s[0], s[-1]
-        ratios = {
-            k: round(b[k]["wall_sec"] / max(a[k]["wall_sec"], 1e-9), 2)
-            for k in ("s1_minhash_bands", "s2_lsh_candidates",
-                      "s3_jaccard_verify", "s4_demotion_join")
-        }
-        ratios["doc_ratio"] = round(int(bk) / int(ak), 2)
-        ratios["candidate_ratio"] = round(
-            b["n_candidates"] / max(a["n_candidates"], 1), 2
-        )
-        out["scaleup"] = ratios
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/DEDUP_STAGES.json", "w") as f:
-        json.dump(out, f, indent=1)
-    return out
-
-
-def run_scaling_strike(out_path: str = "BENCH/scaling_strike_r6.json") -> dict:
-    """Clean-window strike: ONE full production-weight executor
-    protocol (the same pre-declared median-of-pairs estimator as
-    --scaling's headline configuration), appended to a cumulative
-    artifact. Fired when the spread hunt's pair stream signals a
-    clean window (trigger rule, declared in BENCH/BASELINE.md: latest
-    hunt pair eff ≥ 0.75 with <1% steal in both windows); EVERY
-    strike is appended and reported regardless of outcome, so the
-    artifact shows all attempts, not a best pick. Does not rewrite
-    BASELINE.md (unlike --scaling). Mutually exclusive with an
-    in-flight hunt pair via the hold/marker files."""
-    out_path = os.environ.get("BENCH_STRIKE_OUT", out_path)
-    n_trials = int(os.environ.get("BENCH_SCALING_TRIALS", "5"))
-    mutex = _headline_mutex_enter()
-    prior_cache = os.environ.get("DATAPROF_LANGID_CACHE")
-    os.environ["DATAPROF_LANGID_CACHE"] = "0"
-    try:
-        res = run_executor_scaling()
-    finally:
-        if prior_cache is None:
-            os.environ.pop("DATAPROF_LANGID_CACHE", None)
-        else:
-            os.environ["DATAPROF_LANGID_CACHE"] = prior_cache
-        _headline_mutex_exit(mutex)
-    res["profile"] = "production-weight (langid memo cache off)"
-    res["n_trials"] = n_trials
-    res["at_unix"] = round(time.time(), 1)
-    state = {"strikes": []}
-    if os.path.exists(out_path):
-        with open(out_path) as f:
-            state = json.load(f)
-    state["strikes"].append(res)
-    os.makedirs(os.path.dirname(out_path) or ".", exist_ok=True)
-    tmp = out_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(state, f, indent=1)
-    os.replace(tmp, out_path)
-    return res
-
-
 def F_col(name):
     from pyspark.sql import functions as F
 
     return F.col(name)
 
-
 if __name__ == "__main__":
     if "--dedup-scale" in sys.argv:
         print(json.dumps(run_dedup_scale()))
-    elif "--dedup-stages" in sys.argv:
-        print(json.dumps(run_dedup_stage_breakdown()))
-    elif "--headline-hunt" in sys.argv:
-        print(json.dumps(run_headline_hunt()))
     elif "--sf1" in sys.argv:
         print(json.dumps(run_sf1()))
-    elif "--scaling-hunt" in sys.argv:
-        print(json.dumps(run_scaling_hunt()))
-    elif "--scaling-strike" in sys.argv:
-        print(json.dumps(run_scaling_strike()))
-    elif "--scaling" in sys.argv:
-        print(json.dumps(run_scaling()))
-    elif "--pipeline-once" in sys.argv:
-        print(json.dumps(run_pipeline_once()))
-    elif "--worker" in sys.argv:
-        files = sys.argv[sys.argv.index("--worker") + 1]
-        bdir = (
-            sys.argv[sys.argv.index("--barrier") + 1]
-            if "--barrier" in sys.argv
-            else None
-        )
-        print(json.dumps(run_worker(files, bdir)))
     else:
         print(json.dumps(run_headline()))

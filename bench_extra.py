@@ -18,21 +18,9 @@ import os
 import sys
 import time
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-TAG = os.environ.get("PLAN_TAG", "before")
+from bench import CPUS, HEADLINE, SF_DIR
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_top_orders",
-    "q5_region_revenue",
-    "doc_textstats",
-    "doc_gates",
-    "doc_langid_stopword",
-    "dedup_exact",
-    "doc_pii_counts",
-    "events_hourly",
-]
+TAG = os.environ.get("PLAN_TAG", "before")
 
 
 def _spark():

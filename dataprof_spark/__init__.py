@@ -66,12 +66,9 @@ def capabilities():
         arrow_interop: bool
         pyarrow_installed: bool
         structured_streaming: bool
-        url_profiling: bool
-        remote_parquet: bool
         database: bool
         database_connectors: tuple
         iceberg_runtime: bool
-        multimodal_codecs: bool
         langid_backend: str
         perplexity_backend: str
         fasttext_installed: bool
@@ -91,12 +88,9 @@ def capabilities():
         arrow_interop=True,
         pyarrow_installed=_installed("pyarrow"),
         structured_streaming=True,
-        url_profiling=True,   # sources/remote.py HTTP Range reader
-        remote_parquet=True,  # footer-first http_parquet_schema
         database=bool(connectors),
         database_connectors=connectors,
         iceberg_runtime=iceberg,
-        multimodal_codecs=_installed("PIL"),  # codecs stub without it
         # production-model swap point: delegated to core/models.py so
         # the "what a run would actually use" logic lives once — a
         # configured-but-unloadable model reports 'misconfigured'

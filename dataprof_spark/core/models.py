@@ -20,10 +20,9 @@ stand-ins, so the default path is byte-identical to calling them
 directly.
 
 Mirrors the reference's pluggable-engine discipline (the reference
-selects its execution engine per run; SURVEY.md §2.10) and the
-PIL-gated multimodal codec pattern from operators/multimodal.py: the
-adapter and its tests exist now, skipped in this sandbox, and flip on
-the day the environment provides the dependency.
+selects its execution engine per run; SURVEY.md §2.10). The adapter
+and its tests exist now, skipped in this sandbox, and flip on the day
+the environment provides the dependency.
 """
 
 from __future__ import annotations

@@ -3,12 +3,12 @@
 - brute_force_topk: exact cosine top-k per query. The query set is
   broadcast (it is small by definition); the corpus is scanned once;
   per-partition top-k then global top-k — no all-pairs shuffle.
-- lsh_topk: random-hyperplane LSH (sign-bit buckets) — the scale
-  path: candidates only meet inside a bucket; recall is traded for
-  a corpus-scan-free plan. Hyperplanes are derived deterministically
-  from a seeded NumPy generator.
 - embedding_near_dup_pairs: corpus self near-dup at cosine ≥ t,
-  LSH-bucketed.
+  bucketed by random-hyperplane LSH (sign-bit buckets): candidates
+  only meet inside a bucket. Hyperplanes are derived deterministically
+  from a seeded NumPy generator.
+- ivf_topk: approximate top-k over a content-derived coarse quantizer
+  — the scale path for top-k queries.
 
 The dot products run in native Spark (`F.zip_with` + `F.aggregate`,
 codegen'd, no Python); norms are precomputed once per row.
@@ -137,103 +137,6 @@ def _bucket(vec: Column, planes: np.ndarray) -> Column:
     return out
 
 
-def _probe_buckets(vec: Column, planes: np.ndarray, n_probe: int) -> Column:
-    """MULTI-PROBE bucket list (Lv et al.'s multi-probe LSH idea over
-    sign buckets): the query probes its own bucket plus the buckets
-    reached by flipping its lowest-|margin| sign bits — the bits most
-    likely to disagree for a true near neighbor. Corpus-side cost is
-    unchanged (one bucket per row); query-side candidates grow
-    ~n_probe×, which is the right trade at web scale where the query
-    set is tiny and the corpus is not."""
-    dots = [_dot(vec, F.array(*[F.lit(float(x)) for x in p]))
-            for p in planes]
-    bucket = None
-    for i, d in enumerate(dots):
-        b = F.when(d >= 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = b if bucket is None else bucket + b
-    # perturbation set = single-bit and two-bit flips, ordered by
-    # total |margin| flipped (the standard multi-probe ordering);
-    # built query-side only, so the expression count is
-    # O(planes²) on the tiny broadcast side
-    items = [
-        F.struct(
-            F.abs(dots[i]).alias("m"),
-            F.lit(1 << i).cast("long").alias("bit"),
-        )
-        for i in range(len(dots))
-    ] + [
-        F.struct(
-            (F.abs(dots[i]) + F.abs(dots[j])).alias("m"),
-            F.lit((1 << i) | (1 << j)).cast("long").alias("bit"),
-        )
-        for i in range(len(dots))
-        for j in range(i + 1, len(dots))
-    ]
-    ordered = F.sort_array(F.array(*items))
-    probes = [bucket]
-    for k in range(1, min(n_probe, len(items) + 1)):
-        probes.append(
-            bucket.bitwiseXOR(F.element_at(ordered, k)["bit"])
-        )
-    return F.array(*probes)
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    n_planes: int | None = 8,
-    dim: int = 64,
-    n_probe: int = 1,
-) -> DataFrame:
-    """Approximate top-k: score only corpus rows in the query's LSH
-    bucket(s). With 8 planes the corpus splits into 256 buckets — the
-    scan per query drops ~256× at some recall cost (report both in
-    tests). n_planes=None derives the plane count from the corpus
-    size (auto_n_planes: E[bucket] ≈ 64 rows) at the cost of one
-    count() job. n_probe>1 enables multi-probe (flip the lowest-
-    margin 1- and 2-bit combinations): recall rises with probes while
-    the corpus side still computes exactly one bucket per row
-    (measured at sf0.1, 5 auto planes, recall@10 vs brute force:
-    0.18 / 0.39 / 0.50 / 0.74 at probes 1 / 4 / 8 / 16; wall grows
-    only 1.8x over that range)."""
-    if n_planes is None:
-        n_planes = auto_n_planes(corpus.count())
-    planes = hyperplanes(dim, n_planes)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        _bucket(F.col(vec_col), planes).alias("bucket"),
-    )
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.explode(
-                _probe_buckets(F.col(vec_col), planes, n_probe)
-            ).alias("bucket"),
-        )
-    )
-    scored = c.join(q, "bucket").select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos_sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
-
-
 def embedding_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
@@ -248,7 +151,7 @@ def embedding_near_dup_pairs(
     (embedding-cosine dedup for training corpora).
 
     n_planes=None derives the plane count from the corpus size
-    (auto_n_planes — one count() job).
+    (auto_n_planes — one count() job, shared with the "auto" cap).
 
     The within-bucket self-join is quadratic in bucket population, so
     one boilerplate-heavy bucket (near-identical template pages all
@@ -278,8 +181,13 @@ def embedding_near_dup_pairs(
     the a/b aliases otherwise carry the scan (and the guard's
     count-over-bucket window) TWICE, the same hidden-double-subtree
     shape r7/r8 fixed in lsh_candidate_pairs and simhash_pairs."""
+    # one count() job serves both auto knobs
+    n_rows = (
+        df.count() if n_planes is None or max_bucket_size == "auto"
+        else None
+    )
     if n_planes is None:
-        n_planes = auto_n_planes(df.count())
+        n_planes = auto_n_planes(n_rows)
     planes = hyperplanes(dim, n_planes)
     v = df.select(
         F.col(id_col).alias("id"),
@@ -287,9 +195,7 @@ def embedding_near_dup_pairs(
         _bucket(F.col(vec_col), planes).alias("bucket"),
     )
     if max_bucket_size == "auto":
-        max_bucket_size = max(
-            64, math.ceil(8 * df.count() / (1 << n_planes))
-        )
+        max_bucket_size = max(64, math.ceil(8 * n_rows / (1 << n_planes)))
     if max_bucket_size is not None:
         sub = hyperplanes(dim, refine_planes, seed=config.SEED + 1)
         n_in_bucket = F.count(F.lit(1)).over(W.partitionBy("bucket"))

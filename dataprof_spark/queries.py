@@ -302,33 +302,6 @@ ORDER BY revenue DESC, n_name
 """
 
 
-def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: EXISTS → left-semi join (no row multiplication,
-    the planner's cheapest correlated-subquery strategy)."""
-    orders = _t(spark, sf_dir, "orders")
-    late = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") >= F.lit("1997-06-01")
-    )
-    return (
-        orders.join(late, orders.o_orderkey == late.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-Q4_SQL = """
-SELECT o_orderpriority, count(*)::BIGINT AS order_count
-FROM orders
-WHERE EXISTS (
-  SELECT 1 FROM lineitem
-  WHERE l_orderkey = o_orderkey
-    AND l_shipdate >= TIMESTAMP '1997-06-01'
-)
-GROUP BY o_orderpriority ORDER BY o_orderpriority
-"""
-
-
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: left OUTER join + two-level aggregation
     (customers with zero orders must appear — the outer-join contract)."""
@@ -352,93 +325,6 @@ SELECT c_count, count(*)::BIGINT AS custdist FROM (
   FROM customer LEFT OUTER JOIN orders ON c_custkey = o_custkey
   GROUP BY c_custkey
 ) GROUP BY c_count ORDER BY custdist DESC, c_count DESC
-"""
-
-
-def anti_join_customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT EXISTS → left-anti join: customers without any order."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .select("c_custkey", "c_mktsegment")
-        .orderBy("c_custkey")
-    )
-
-
-ANTI_SQL = """
-SELECT c_custkey, c_mktsegment FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-ORDER BY c_custkey
-"""
-
-
-def q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape: join + conditional aggregation (CASE inside
-    SUM — the canonical pivot-ish rollup)."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01"))
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(high.cast("long")).alias("high_line_count"),
-            F.sum((~high).cast("long")).alias("low_line_count"),
-        )
-        .orderBy("l_linestatus")
-    )
-
-
-Q12_SQL = """
-SELECT l_linestatus,
-       sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-           THEN 1 ELSE 0 END)::BIGINT AS high_line_count,
-       sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-           THEN 0 ELSE 1 END)::BIGINT AS low_line_count
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-  AND l_shipdate <  TIMESTAMP '1998-01-01'
-GROUP BY l_linestatus ORDER BY l_linestatus
-"""
-
-
-def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: join + ratio of conditional sums (promo
-    revenue share by part-type prefix)."""
-    part = _t(spark, sf_dir, "part")
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-03-01"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01"))
-    )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.col("p_type").startswith("PROMO")
-    return (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .agg(
-            R6(
-                F.sum(
-                    _micro(F.when(promo, rev).otherwise(0.0))
-                ).cast("double") * 100.0
-                / F.sum(_micro(rev)).cast("double")
-            ).alias("promo_revenue_pct")
-        )
-    )
-
-
-Q14_SQL = """
-SELECT round((sum(CAST(floor((CASE WHEN p_type LIKE 'PROMO%'
-                   THEN l_extendedprice * (1 - l_discount)
-                   ELSE 0 END) * 1000000 + 0.5) AS BIGINT)))::DOUBLE * 100.0
-             / (sum(CAST(floor((l_extendedprice * (1 - l_discount))
-                   * 1000000 + 0.5) AS BIGINT)))::DOUBLE, 6)
-         AS promo_revenue_pct
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= TIMESTAMP '1997-03-01'
-  AND l_shipdate <  TIMESTAMP '1997-04-01'
 """
 
 
@@ -830,92 +716,6 @@ WHERE (p_brand = 'Brand#1' AND p_size <= 10
 """
 
 
-def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape: above-average-balance customers with NO orders,
-    bucketed by nation — scalar avg subquery + anti-join."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    avg_bal = c.filter(F.col("c_acctbal") > 0).agg(
-        (
-            F.sum(_micro("c_acctbal")).cast("double")
-            / F.count("c_acctbal") / F.lit(float(_SCALE))
-        ).alias("a")
-    )
-    rich = c.join(F.broadcast(avg_bal)).filter(
-        F.col("c_acctbal") > F.col("a")
-    )
-    idle = rich.join(
-        o.select("o_custkey").distinct(),
-        F.col("c_custkey") == F.col("o_custkey"),
-        "left_anti",
-    )
-    return (
-        idle.groupBy("c_nationkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_cust"),
-            DSUM("c_acctbal").alias("total_bal"),
-        )
-        .orderBy("c_nationkey")
-    )
-
-
-Q22_SQL = f"""
-SELECT c_nationkey, count(*)::BIGINT AS n_cust,
-       {dsum_sql('c_acctbal')} AS total_bal
-FROM customer
-WHERE c_acctbal > (SELECT (sum(CAST(floor(c_acctbal * 1000000 + 0.5)
-                                    AS BIGINT)))::DOUBLE
-                            / count(c_acctbal) / 1000000.0
-                   FROM customer WHERE c_acctbal > 0)
-  AND c_custkey NOT IN (SELECT o_custkey FROM orders)
-GROUP BY c_nationkey ORDER BY c_nationkey
-"""
-
-
-def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape: supplier(s) with the MAXIMUM quarterly revenue
-    — the view + scalar-max pattern, decorrelated to a window max."""
-    from pyspark.sql import Window as W
-
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    rev = (
-        li.filter(
-            (F.col("l_shipdate") >= "1997-01-01")
-            & (F.col("l_shipdate") < "1997-04-01")
-        )
-        .groupBy("l_suppkey")
-        .agg(
-            DSUM(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-            .alias("total_revenue")
-        )
-    )
-    best = rev.withColumn(
-        "mx", F.max("total_revenue").over(W.partitionBy())
-    ).filter(F.col("total_revenue") == F.col("mx"))
-    return (
-        best.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select("s_suppkey", "s_name", "total_revenue")
-        .orderBy("s_suppkey")
-    )
-
-
-Q15_SQL = f"""
-WITH rev AS (
-  SELECT l_suppkey,
-         {dsum_sql('l_extendedprice * (1 - l_discount)')} AS total_revenue
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-    AND l_shipdate <  TIMESTAMP '1997-04-01'
-  GROUP BY l_suppkey
-)
-SELECT s_suppkey, s_name, total_revenue
-FROM rev JOIN supplier ON l_suppkey = s_suppkey
-WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-ORDER BY s_suppkey
-"""
-
-
 def topk_order_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-N frequency truncation (reference A16: N=10, ties by value)."""
     from pyspark.sql import Window as W
@@ -1069,37 +869,6 @@ SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
        event_type,
        count(*)::BIGINT AS n_events, {dsum_sql('value')} AS sum_value
 FROM events GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: pure filter + single agg — the pushdown
-    showcase (filters reach the parquet scan; zero shuffle)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01"))
-            & (F.col("l_discount").between(0.05, 0.07))
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            DSUM(F.col("l_extendedprice") * F.col("l_discount")).alias(
-                "revenue"
-            ),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
-
-
-Q6_SQL = f"""
-SELECT {dsum_sql('l_extendedprice * l_discount')} AS revenue,
-       count(*)::BIGINT AS n_rows
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-  AND l_shipdate <  TIMESTAMP '1998-01-01'
-  AND l_discount BETWEEN 0.05 AND 0.07
-  AND l_quantity < 24
 """
 
 
@@ -1369,33 +1138,6 @@ SELECT {_scale_expr_sql('l_extendedprice')} AS price_scale,
        count(*)::BIGINT AS n
 FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2
 """
-
-
-def pattern_summary_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic pattern detection (reference §2.8 engine, 35 detectors
-    + confidence + overlap suppression) over the ISO-date string form
-    of o_orderdate — driver-side engine on a deterministic sample,
-    surfaced as a DataFrame. Non-SQL-expressible (suppression/locale
-    logic) → rows-only check; engine unit tests are the gate."""
-    from dataprof_spark.operators import patterns as pat
-
-    orders = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderdate").cast("date").cast("string").alias("datestr")
-    )
-    res = pat.detect_column_patterns(orders, "datestr")
-    return spark.createDataFrame(
-        [
-            (
-                r["name"],
-                r["match_count"],
-                round(r["match_percentage"], 6),
-                round(r["confidence"], 6),
-            )
-            for r in res
-        ]
-        or [("<none>", 0, 0.0, 0.0)],
-        "pattern string, match_count long, match_pct double, confidence double",
-    )
 
 
 # =====================================================================
@@ -2102,106 +1844,6 @@ FROM (
 """
 
 
-def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: bilateral trade volume between two nations by
-    year — the symmetric OR-of-nation-pairs join (supplier nation ×
-    customer nation), grouped on derived columns. Local-tier shape
-    evidence (retired_registry); nation/region broadcast, fact joins
-    shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    pair = (
-        ((F.col("s_nationkey") == 0) & (F.col("c_nationkey") == 1))
-        | ((F.col("s_nationkey") == 1) & (F.col("c_nationkey") == 0))
-    )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(pair)
-        .groupBy(
-            F.col("s_nationkey").cast("long").alias("supp_nation"),
-            F.col("c_nationkey").cast("long").alias("cust_nation"),
-            F.year("l_shipdate").cast("long").alias("l_year"),
-        )
-        .agg(DSUM(rev).alias("volume"),
-             F.count(F.lit(1)).alias("n_lines"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    )
-
-
-Q7_SQL = f"""
-SELECT s_nationkey::BIGINT AS supp_nation,
-       c_nationkey::BIGINT AS cust_nation,
-       year(l_shipdate)::BIGINT AS l_year,
-       {dsum_sql('l_extendedprice * (1 - l_discount)')} AS volume,
-       count(*)::BIGINT AS n_lines
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey
-WHERE (s_nationkey = 0 AND c_nationkey = 1)
-   OR (s_nationkey = 1 AND c_nationkey = 0)
-GROUP BY 1, 2, 3
-ORDER BY 1, 2, 3
-"""
-
-
-def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape: one nation's share of regional trade volume by
-    year — ratio of a CONDITIONAL sum to the total within each group
-    (two-level aggregation semantics in one pass)."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    target = F.when(F.col("s_nationkey") == 0, rev).otherwise(0.0)
-    return (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("r_regionkey") == 0)
-        .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
-        .agg(
-            R6(
-                F.sum(_micro(target)).cast("double")
-                / F.sum(_micro(rev)).cast("double")
-            ).alias("mkt_share"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-        .orderBy("o_year")
-    )
-
-
-Q8_SQL = """
-SELECT year(o_orderdate)::BIGINT AS o_year,
-       round(
-         (sum(CAST(floor((CASE WHEN s_nationkey = 0
-                THEN l_extendedprice * (1 - l_discount)
-                ELSE 0 END) * 1000000 + 0.5) AS BIGINT)))::DOUBLE
-         / (sum(CAST(floor((l_extendedprice * (1 - l_discount))
-                * 1000000 + 0.5) AS BIGINT)))::DOUBLE, 6)
-         AS mkt_share,
-       count(*)::BIGINT AS n_lines
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-JOIN supplier ON l_suppkey = s_suppkey
-WHERE r_regionkey = 0
-GROUP BY 1 ORDER BY 1
-"""
-
-
 def checksum_validators_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 checksum validators (core/validators.py luhn + iban_mod97,
     reference validators.rs) driver-verified end-to-end: the fixture
@@ -2413,23 +2055,6 @@ FROM documents ORDER BY doc_id
 """
 
 
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprint: md5 of whitespace-normalized lowercase
-    text (deterministic, engine-portable)."""
-    docs = _docs(spark, sf_dir)
-    norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
-    return docs.select(
-        "doc_id", F.md5(F.trim(norm)).alias("fingerprint")
-    )
-
-
-FINGERPRINT_SQL = """
-SELECT doc_id,
-       md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint
-FROM documents ORDER BY doc_id
-"""
-
-
 def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprint (rolling-hash selection, Schleimer et al.
     — the brief's 'document fingerprinting (rolling hash)'): hash each
@@ -2585,12 +2210,10 @@ def registry() -> dict[str, tuple[Callable, str | None]]:
     capped at 49 entries (+ the ``pipeline_decisions`` flagship added
     by ``__spark_entry__``) and the 10 queries that never received a
     driver correctness row in rounds 1-2 are registered FIRST.
-    Everything retired to make room lives in ``retired_registry()``
-    and stays locally oracle-verified every pytest run via
-    ``full_registry()`` (tests/test_oracle_parity.py)."""
+    Every entry with oracle SQL is also checked against DuckDB on
+    every pytest run (tests/test_oracle_parity.py)."""
     from dataprof_spark import queries_dedup
 
-    dedup_reg = queries_dedup.registry()
     out = {
         # -- never driver-verified before round 3: first in line -----
         "quality_report_orders": (quality_report_orders, _quality_orders_sql()),
@@ -2603,9 +2226,6 @@ def registry() -> dict[str, tuple[Callable, str | None]]:
         "sample_multistage": (sample_multistage, MULTISTAGE_SQL),
         "keep_rate_by_source": (keep_rate_by_source, _keep_rate_sql()),
         "vocab_top_terms": (vocab_top_terms, VOCAB_SQL),
-        # (doc_fingerprint retired r7: its rolling-hash kernel is the
-        # same polynomial hash doc_winnow_fingerprints oracle-verifies
-        # per k-gram window; stays locally verified via full_registry)
         "doc_winnow_fingerprints": (
             doc_winnow_fingerprints, WINNOW_SQL,
         ),
@@ -2630,9 +2250,8 @@ def registry() -> dict[str, tuple[Callable, str | None]]:
             q21_sole_return_supplier, Q21_SQL,
         ),
         # r7: promoted back (VERDICT r6 #5) so the broadcast-hint
-        # removal on the retired q10/q14/q15 family gets a driver
-        # correctness row for its shape (bcast-join agg topN under
-        # AQE sizing); slot freed by doc_fingerprint (see below)
+        # removal keeps an oracle-checked row for its shape
+        # (bcast-join agg topN under AQE sizing)
         "q10_returned_revenue": (q10_returned_revenue, Q10_SQL),
         # -- events / analytics --------------------------------------
         "sessionize_events_batch": (
@@ -2653,24 +2272,14 @@ def registry() -> dict[str, tuple[Callable, str | None]]:
         "outlier_iqr_quantity": (outlier_iqr_quantity, OUTLIER_SQL),
         "window_supplier_running": (window_supplier_running, WINDOW_SQL),
         # -- dedup / similarity / sampling ---------------------------
-        # (sample_hash retired in favor of checksum_validators_orders:
-        # its md5-threshold admission kernel also runs inside
-        # sample_multistage's md5-ordered reservoir stage, and it
-        # stays locally oracle-verified via retired_registry)
-        **{
-            k: v for k, v in dedup_reg.items()
-            if k not in _RETIRED_DEDUP
-        },
+        **queries_dedup.registry(),
         # -- document / pipeline ops ---------------------------------
         "doc_textstats": (doc_textstats, _doc_textstats_sql()),
         "doc_gates": (doc_gates, _doc_gates_sql()),
         "doc_pii_counts": (doc_pii_counts, _doc_pii_sql()),
         "doc_langid_stopword": (doc_langid_stopword, _doc_langid_sql()),
         "dedup_exact": (dedup_exact, DEDUP_SQL),
-        # r4: driver row for the --dedup demotion pipeline (judge next-#2);
-        # displaced ann_lsh_topk (its bucketing/recall behavior stays
-        # pytest- and locally-oracle-verified; ann_topk remains the exact
-        # baseline and ann_ivf_topk the scale path in the window)
+        # r4: oracle-checked row for the --dedup demotion pipeline
         "dedup_demotion_decisions": (
             dedup_demotion_decisions, _dedup_demotion_sql(),
         ),
@@ -2680,60 +2289,3 @@ def registry() -> dict[str, tuple[Callable, str | None]]:
     }
     assert len(out) <= 49, f"driver registry overflow: {len(out)}"
     return out
-
-
-# Retired from the driver window in round 3 (still implemented, still
-# locally oracle-verified via full_registry()). Every retired query's
-# plan shape remains driver-covered by a survivor:
-#   q4 (semi join)            -> q21 (double-EXISTS = semi + anti)
-#   q6/q12/q14 (scan+agg)     -> q1 (same shape, richer agg set)
-#   q10 (bcast-join agg topN) -> q3/q5
-#   q15/q22 (scalar subquery) -> q17
-#   anti_join (left-anti, 0 rows at all SFs -> vacuous hash evidence)
-#                             -> q16 (anti with 50 matched rows)
-#   sample_systematic (P6)    -> sample_hash + sample_multistage
-#   simhash_fingerprints (no-oracle xxhash64 twin)
-#                             -> simhash_md5_fingerprints (oracle'd)
-#   pattern_summary_orders (rows-only by design; validators are
-#     pytest-verified, detector evidence rides doc_pii_counts)
-#   ann_lsh_topk (r4, for dedup_demotion_decisions: multi-probe LSH
-#     recall is pinned by test_similarity; ann_topk stays as the exact
-#     baseline and ann_ivf_topk as the driver-verified scale path)
-_RETIRED_DEDUP = frozenset(
-    {
-        "simhash_fingerprints",
-        "sample_systematic",
-        "sample_hash",
-        "ann_lsh_topk",
-    }
-)
-
-
-def retired_registry() -> dict[str, tuple[Callable, str | None]]:
-    from dataprof_spark import queries_dedup
-
-    dedup_reg = queries_dedup.registry()
-    return {
-        "q7_volume_shipping": (q7_volume_shipping, Q7_SQL),
-        "q8_market_share": (q8_market_share, Q8_SQL),
-        "q6_forecast_revenue": (q6_forecast_revenue, Q6_SQL),
-        "q4_order_priority": (q4_order_priority, Q4_SQL),
-        "anti_join_customers_no_orders": (
-            anti_join_customers_no_orders, ANTI_SQL,
-        ),
-        "q12_priority_shipping": (q12_priority_shipping, Q12_SQL),
-        "q14_promo_revenue": (q14_promo_revenue, Q14_SQL),
-        "q22_idle_customers": (q22_idle_customers, Q22_SQL),
-        "q15_top_supplier": (q15_top_supplier, Q15_SQL),
-        # r7: doc_fingerprint retired to free the slot for q10's
-        # promotion — its rolling polynomial hash is byte-identical
-        # to the per-window hash WINNOW_SQL verifies on every doc
-        "doc_fingerprint": (doc_fingerprint, FINGERPRINT_SQL),
-        "pattern_summary_orders": (pattern_summary_orders, None),
-        **{k: dedup_reg[k] for k in sorted(_RETIRED_DEDUP)},
-    }
-
-
-def full_registry() -> dict[str, tuple[Callable, str | None]]:
-    """Driver + retired — what local pytest verifies every run."""
-    return {**registry(), **retired_registry()}

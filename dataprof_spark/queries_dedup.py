@@ -1,4 +1,4 @@
-"""Dedup / similarity / sampling queries + programmatically generated
+"""Dedup / similarity queries + programmatically generated
 DuckDB oracle SQL (the SQL mirrors dedup.py's hash family exactly).
 
 The MinHash pipeline is oracle-checked end-to-end: shingles → md5-
@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dataprof_spark.operators import dedup, sampling, similarity
+from dataprof_spark.operators import dedup, similarity
 
 N_PERM = 8
 N_BANDS = 4
@@ -189,15 +189,6 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.brute_force_topk(emb, queries, k=5)
 
 
-def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """xxhash64-based — no DuckDB twin (rows-only check); correctness
-    is covered by tests/test_dedup.py determinism + pair tests."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select(
-        "doc_id", dedup.simhash64(F.col("text")).alias("simhash")
-    )
-
-
 def simhash_md5_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-checkable SimHash (md5-derived token hashes, 20 bits) —
     proves the sign-sum fingerprint construction end-to-end in SQL."""
@@ -248,31 +239,6 @@ SELECT a.id AS id_a, bb.id AS id_b,
 FROM b a JOIN b bb ON a.bucket = bb.bucket AND a.id < bb.id
 WHERE cos_sim >= {threshold}
 ORDER BY id_a, id_b
-"""
-
-
-def sample_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return sampling.systematic(docs, 7, "doc_id").select("doc_id", "lang")
-
-
-SAMPLE_SYS_SQL = """
-SELECT doc_id, lang FROM documents WHERE doc_id % 7 = 0 ORDER BY doc_id
-"""
-
-
-def sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return sampling.hash_sample(docs, 0.25, "doc_id").select(
-        "doc_id", "n_chars"
-    )
-
-
-SAMPLE_HASH_SQL = f"""
-SELECT doc_id, n_chars FROM documents
-WHERE ('0x' || substr(md5('42' || doc_id::VARCHAR), 1, 8))::BIGINT
-      < {int(0.25 * 0xFFFFFFFF)}
-ORDER BY doc_id
 """
 
 
@@ -342,69 +308,16 @@ ORDER BY query_id, rank
 """
 
 
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH approximate top-k (operators/similarity.lsh_topk)
-    with the bucket assignment itself oracle-verified: the DuckDB twin
-    inlines the SAME seeded hyperplanes as SQL literals, reproduces the
-    sign-bit buckets, the bucket join, and the final window top-k."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return similarity.lsh_topk(
-        emb, queries, k=5, n_planes=6, dim=64
-    ).orderBy("query_id", "rank")
-
-
-def _ddb_lsh_topk_sql(k: int = 5, n_planes: int = 6, dim: int = 64) -> str:
-    planes = similarity.hyperplanes(dim, n_planes)
-    bucket_terms = " + ".join(
-        f"(CASE WHEN list_dot_product(embedding::DOUBLE[], "
-        f"[{', '.join(repr(float(x)) for x in p)}]::DOUBLE[]) >= 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(planes)
-    )
-    return f"""
-WITH b AS (
-  SELECT vec_id, embedding::DOUBLE[] AS vec,
-         ({bucket_terms})::BIGINT AS bucket
-  FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, vec AS q_vec, bucket FROM b
-  WHERE vec_id < 5
-), scored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id,
-         round(CASE WHEN sqrt(list_dot_product(q.q_vec, q.q_vec))
-                     * sqrt(list_dot_product(c.vec, c.vec)) > 0
-           THEN list_dot_product(q.q_vec, c.vec)
-                / (sqrt(list_dot_product(q.q_vec, q.q_vec))
-                   * sqrt(list_dot_product(c.vec, c.vec)))
-           ELSE 0.0 END, 6) AS cos_sim
-  FROM q JOIN b c USING (bucket)
-)
-SELECT query_id, neighbor_id, cos_sim,
-       row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos_sim DESC, neighbor_id)::BIGINT AS rank
-FROM scored
-QUALIFY rank <= {k}
-ORDER BY query_id, rank
-"""
-
-
 def registry():
     return {
         "minhash_per_doc": (minhash_per_doc, _ddb_minhash_sql()),
         "near_dup_pairs": (near_dup_pairs, _ddb_near_dup_sql()),
         "ann_topk": (ann_topk, ANN_SQL),
         "ann_ivf_topk": (ann_ivf_topk, _ddb_ivf_sql()),
-        "ann_lsh_topk": (ann_lsh_topk, _ddb_lsh_topk_sql()),
         "embedding_near_dups": (
             embedding_near_dups, _ddb_embedding_near_dup_sql(),
         ),
-        "simhash_fingerprints": (simhash_fingerprints, None),
         "simhash_md5_fingerprints": (
             simhash_md5_fingerprints, dedup.duckdb_simhash_sql(),
         ),
-        "sample_systematic": (sample_systematic, SAMPLE_SYS_SQL),
-        "sample_hash": (sample_hash, SAMPLE_HASH_SQL),
     }

@@ -13,13 +13,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> str:
+    """Local-mode core count: $SPARK_GRAFT_CPUS if set, else the number
+    of cores this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
+
+
 def get_spark(
     app_name: str = "dataprof_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     # Under spark-submit the driver connects to the launcher's JVM
     # gateway (PythonRunner exports PYSPARK_GATEWAY_PORT): master and
     # sizing then come from the submit line / cluster defaults, and
@@ -30,7 +38,9 @@ def get_spark(
     if master is None and not submitted:
         master = f"local[{cpus}]"
     if shuffle_partitions is None and not submitted:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = (
+            int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
+        )
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)

@@ -1,6 +1,6 @@
-"""Profiler builder + metrics packs + describe()/quality_summary() +
-asyncio twins — the reference API-surface parity items from VERDICT r4
-(#3 builder/packs, #4 describe, #5 async).
+"""Fluent Profiler() chain + metrics packs + describe()/
+quality_summary() — the reference API-surface parity items (VERDICT
+r4 #3 chain/packs, #4 describe).
 
 The packs contract under test is the reference's quality.rs:63-72 /
 Profiler.metrics: an omitted pack (or an unrequested quality
@@ -203,72 +203,6 @@ def test_quality_summary_single_row(orders_df):
     # validity is opt-in and was not requested -> None, not vacuous
     assert row["validity"] is None
     assert row["execution_time_ms"] > 0
-
-
-# ----------------------------------------------------------- asyncio
-def test_async_twins_against_live_derby(spark, tmp_path_factory):
-    """The await-able DB surface (reference analyze_database_async /
-    count_table_rows_async / get_table_schema_async /
-    test_connection_async) against in-process Apache Derby."""
-    import asyncio
-
-    from dataprof_spark import asyncio as daio
-
-    jvm = spark._jvm
-    jvm.java.lang.System.setProperty(
-        "derby.stream.error.file",
-        str(tmp_path_factory.mktemp("derby-logs") / "derby.log"),
-    )
-    jvm.java.lang.Class.forName("org.apache.derby.jdbc.EmbeddedDriver")
-    dbdir = str(tmp_path_factory.mktemp("derby-async") / "db")
-    url = f"jdbc:derby:{dbdir};create=true"
-    conn = jvm.java.sql.DriverManager.getConnection(url)
-    st = conn.createStatement()
-    st.executeUpdate("CREATE TABLE t (id INT, val DOUBLE)")
-    ps = conn.prepareStatement("INSERT INTO t VALUES (?, ?)")
-    for i in range(50):
-        ps.setInt(1, i)
-        ps.setDouble(2, i * 0.5)
-        ps.executeUpdate()
-    conn.commit()
-    conn.close()
-    opts = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-
-    async def go():
-        ok, bad, schema, n = await asyncio.gather(
-            daio.test_connection_async(spark, url),
-            daio.test_connection_async(spark, "jdbc:derby:/nope/x"),
-            daio.get_table_schema_async(spark, url, "t", **opts),
-            daio.count_table_rows_async(spark, url, "t", **opts),
-        )
-        rep = await daio.analyze_database_async(
-            spark, url, "t", jdbc_options=opts, quality=False
-        )
-        return ok, bad, schema, n, rep
-
-    ok, bad, schema, n, rep = asyncio.run(go())
-    assert ok is True and bad is False
-    assert [c.upper() for c in schema] == ["ID", "VAL"]
-    assert n == 50
-    assert rep.execution["rows_processed"] > 0
-
-
-def test_async_profile_file_and_structure(tmp_path):
-    import asyncio
-
-    from dataprof_spark import asyncio as daio
-
-    p = tmp_path / "t.csv"
-    p.write_text("a,b\n1,x\n2,y\n3,z\n")
-
-    async def go():
-        rep = await daio.profile_file(str(p), quality=False)
-        struct = await daio.analyze_structure_async(str(p))
-        return rep, struct
-
-    rep, struct = asyncio.run(go())
-    assert rep.execution["rows_processed"] == 3
-    assert struct.row_count.count == 3
 
 
 # ------------------------------------------- r5 review regressions

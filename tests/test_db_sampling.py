@@ -295,8 +295,7 @@ def test_capabilities_snapshot():
     assert caps.version == dp.__version__
     assert caps.local_parquet and caps.arrow_interop
     assert caps.pyarrow_installed and caps.pandas_installed
-    # this container: Derby ships with Spark; PIL and Iceberg do not
+    # this container: Derby ships with Spark; Iceberg does not
     assert "derby" in caps.database_connectors
     assert caps.database is True
-    assert caps.multimodal_codecs is False
     assert caps.iceberg_runtime is False

@@ -4,9 +4,8 @@ BASELINE.md's I/O target is an Iceberg table; this sandbox has no
 iceberg-spark-runtime jar (capabilities().iceberg_runtime is False,
 pinned by test_db_sampling), so the pipeline's tested twin is
 dynamic-partition-overwrite parquet (pipeline/checkpoint.py). These
-tests are the flip-is-free counterpart (the PIL-gated multimodal
-pattern, VERDICT r5 #7): the day the environment carries the jar,
-they run the REAL Iceberg path — catalog DDL, append,
+tests are the flip-is-free counterpart: the day the environment
+carries the jar, they run the REAL Iceberg path — catalog DDL, append,
 overwrite-by-partition idempotence (the exact semantics
 checkpoint.py's parquet twin models) — with no code change.
 """

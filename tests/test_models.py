@@ -5,10 +5,9 @@ Three contracts:
    deterministic stand-ins — the sandbox/bench path is unchanged.
 2. Fail-loud: a configured model that cannot be loaded (package or
    file missing) raises instead of silently shipping stand-in labels.
-3. Real-backend tests are skipif-gated on the optional packages
-   (the PIL-gated multimodal pattern, VERDICT r5 #7): they skip in
-   this sandbox and flip on the day the environment provides
-   fasttext/kenlm — no code change needed then.
+3. Real-backend tests are skipif-gated on the optional packages:
+   they skip in this sandbox and flip on the day the environment
+   provides fasttext/kenlm — no code change needed then.
 """
 
 from __future__ import annotations

@@ -44,9 +44,9 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
-@pytest.mark.parametrize("name", sorted(queries.full_registry()))
+@pytest.mark.parametrize("name", sorted(queries.registry()))
 def test_query_matches_oracle(spark, ddb, name):
-    fn, sql = queries.full_registry()[name]
+    fn, sql = queries.registry()[name]
     if sql is None:
         pytest.skip("non-SQL-expressible; rows-only check")
     got = _normalize(fn(spark, SF_DIR).toPandas())

@@ -37,12 +37,7 @@ FLOAT_SUM_QUERIES = [
     # not a float-sum shape, but new in r4 and driver-facing: pin the
     # synthesized-clone demotion pipeline at the driver's scale too
     "dedup_demotion_decisions",
-    # retired from the driver window but still shipped:
-    "q6_forecast_revenue",
     "q10_returned_revenue",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q22_idle_customers",
 ]
 
 pytestmark = pytest.mark.skipif(
@@ -79,7 +74,7 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 @pytest.mark.parametrize("name", FLOAT_SUM_QUERIES)
 def test_float_sum_query_matches_oracle_at_driver_sf(spark, ddb, name):
-    fn, sql = queries.full_registry()[name]
+    fn, sql = queries.registry()[name]
     got = _normalize(fn(spark, SF_DIR).toPandas())
     want = _normalize(ddb.execute(sql).df())
     assert len(got) == len(want), (name, len(got), len(want))

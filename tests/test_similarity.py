@@ -1,7 +1,9 @@
 """Similarity search: brute-force top-k exactness (vs NumPy oracle),
-LSH recall, embedding near-dup."""
+IVF recall, embedding near-dup."""
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pytest
@@ -49,26 +51,49 @@ def test_brute_force_matches_numpy(spark, emb, np_vecs):
             assert sim == pytest.approx(exp_sim, abs=2e-6)
 
 
-def test_lsh_topk_recall(spark, emb):
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = similarity.brute_force_topk(emb, queries, k=5)
-    approx = similarity.lsh_topk(emb, queries, k=5, n_planes=4)
-    e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
-    a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    # 4 planes / 16 buckets on 500 docs: recall is partial by design;
-    # the self-match must always be found (same bucket trivially)
-    assert all((q, q) in a for q in range(10))
-    assert recall >= 0.2, recall
+def _n_jobs(spark, fn) -> int:
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4()}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_embedding_near_dup_self_excluded(emb):
+def test_embedding_near_dup_self_excluded(spark, emb):
     pairs = similarity.embedding_near_dup_pairs(emb, threshold=0.99)
     for r in pairs.collect():
         assert r["id_a"] < r["id_b"]
         assert r["cos_sim"] >= 0.99
+
+    # With both auto knobs armed (derived plane count + "auto" cap) the
+    # corpus is counted once: the run costs exactly the jobs of a run
+    # with both knobs pinned to the same values plus one count().
+    n = emb.count()
+    planes = similarity.auto_n_planes(n)
+    cap = max(64, math.ceil(8 * n / (1 << planes)))
+    got: dict[str, list] = {}
+
+    def run(key, **kw):
+        def go():
+            got[key] = sorted(
+                tuple(r) for r in similarity.embedding_near_dup_pairs(
+                    emb, threshold=0.3, **kw
+                ).collect()
+            )
+        return go
+
+    auto_jobs = _n_jobs(spark, run("auto", n_planes=None))
+    pinned_jobs = _n_jobs(
+        spark, run("pinned", n_planes=planes, max_bucket_size=cap)
+    )
+    count_jobs = _n_jobs(spark, emb.count)
+    assert got["auto"] == got["pinned"] and got["auto"]
+    assert auto_jobs == pinned_jobs + count_jobs
 
 
 def test_ivf_recall_vs_exact(spark):
@@ -119,7 +144,7 @@ def test_auto_planes_oracle_verified_at_two_sizes(spark):
     """The auto-derived plane count is oracle-verified at TWO corpus
     sizes (sf0.001: 50 vecs -> 4 planes, sf0.01: 500 vecs -> 6 planes
     with target_bucket=8): the DuckDB twin is generated with the SAME
-    derived knob and must agree on the full top-k output."""
+    derived knob and must agree on the full near-dup pair output."""
     import duckdb
     import pandas as pd
 
@@ -129,12 +154,11 @@ def test_auto_planes_oracle_verified_at_two_sizes(spark):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         n = emb.count()
         planes = similarity.auto_n_planes(n, target_bucket=8)
-        queries = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
         got = (
-            similarity.lsh_topk(emb, queries, k=5, n_planes=planes)
-            .orderBy("query_id", "rank")
+            similarity.embedding_near_dup_pairs(
+                emb, threshold=0.3, n_planes=planes, max_bucket_size=None
+            )
+            .orderBy("id_a", "id_b")
             .toPandas()
         )
         con = duckdb.connect()
@@ -143,46 +167,16 @@ def test_auto_planes_oracle_verified_at_two_sizes(spark):
             f"'{sf_dir}/embeddings.parquet'"
         )
         want = con.execute(
-            queries_dedup._ddb_lsh_topk_sql(k=5, n_planes=planes)
+            queries_dedup._ddb_embedding_near_dup_sql(
+                threshold=0.3, n_planes=planes
+            )
         ).df()
+        assert len(got) > 0
         pd.testing.assert_frame_equal(
             got.reset_index(drop=True),
             want.reset_index(drop=True),
             check_dtype=False,
         )
-
-
-def test_multi_probe_lsh_recall_monotone(spark, emb):
-    """Multi-probe LSH: recall@5 must be non-decreasing in n_probe,
-    with a strict improvement from 1 to 8 probes, and the n_probe=1
-    path must stay IDENTICAL to the single-bucket oracle-checked
-    query (the registry twin relies on that)."""
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in similarity.brute_force_topk(emb, queries, k=5).collect()
-    }
-    recalls = []
-    for probes in (1, 4, 8):
-        approx = {
-            (r["query_id"], r["neighbor_id"])
-            for r in similarity.lsh_topk(
-                emb, queries, k=5, n_planes=4, n_probe=probes
-            ).collect()
-        }
-        recalls.append(len(exact & approx) / len(exact))
-    assert recalls[0] <= recalls[1] <= recalls[2]
-    assert recalls[2] > recalls[0]
-
-    one_probe = similarity.lsh_topk(
-        emb, queries, k=5, n_planes=4, n_probe=1
-    ).orderBy("query_id", "rank").collect()
-    legacy_rows = similarity.lsh_topk(
-        emb, queries, k=5, n_planes=4
-    ).orderBy("query_id", "rank").collect()
-    assert one_probe == legacy_rows
 
 
 def test_near_dup_pair_cap_guard(spark):

@@ -1,24 +1,12 @@
-"""Skew salting correctness + shuffle-shape, bucketed-join plan
-(exchange elision) — the explicit scale levers of the north rule."""
+"""Skew salting correctness and determinism — the explicit scale
+lever of the north rule."""
 
 from __future__ import annotations
 
-import io
-import contextlib
-
-import pytest
 from pyspark.sql import functions as F
 
 from dataprof_spark.operators import skew
 from dataprof_spark.pipeline import fixtures
-from dataprof_spark.sources import bucketing
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_domain_of_pathless_url(spark):
@@ -60,23 +48,3 @@ def test_salt_is_deterministic(spark):
     assert {(r["url"], r["__salt"]) for r in a} == {
         (r["url"], r["__salt"]) for r in b
     }
-
-
-def test_bucketed_join_elides_exchange(spark):
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    bucketing.write_bucketed(
-        li.withColumnRenamed("l_orderkey", "okey"), "li_b", "okey", 4
-    )
-    bucketing.write_bucketed(
-        orders.withColumnRenamed("o_orderkey", "okey"), "ord_b", "okey", 4
-    )
-    joined = bucketing.bucketed_join(
-        spark, "li_b", "ord_b", "okey", force_merge=True
-    )
-    plan = _plan(joined)
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan  # both sides pre-bucketed → no shuffle
-    # sanity: same result as the plain join
-    plain = li.join(orders, li.l_orderkey == orders.o_orderkey).count()
-    assert joined.count() == plain

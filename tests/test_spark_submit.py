@@ -5,7 +5,7 @@ The in-process test (test_pipeline_run) exercises main()'s logic;
 this one exercises the DEPLOYMENT path: the library zipimported from
 dist-style --py-files in a fresh driver JVM, from a cwd where the
 repo package is NOT importable, with the master given on the SUBMIT
-line — which get_spark must respect, not stomp with local[32]
+line — which get_spark must respect, not stomp with its local[N] default
 (PYSPARK_GATEWAY_PORT gating in session.py).
 """
 
@@ -61,6 +61,6 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
     assert summary["docs_in"] == 80
     assert summary["partitions_processed"] == 2
-    # the submit-line master must win — a forced local[32] default
+    # the submit-line master must win — a forced local[N] default
     # here would mean a real `--master yarn` submit runs single-node
     assert summary["master"] == "local[3]"
