@@ -147,6 +147,49 @@ def ipv4_count(c: Column) -> Column:
     return F.regexp_count(c, F.lit(IPV4_PAT)).cast("long")
 
 
+def _cascade(
+    *,
+    wc: Column,
+    letters: Column,
+    stop: Column,
+    symr: Column,
+    ell: Column,
+    moji: Column,
+    dupf: Column,
+    eng: Column,
+) -> Column:
+    """The seven-gate heuristic cascade over precomputed signals: the
+    first failing gate's reason, NULL when the document passes. Gate
+    order and thresholds are core.gates.heuristic_reason's; the DuckDB
+    twin is queries._gates_reason_sql. Callers pass either lazily
+    evaluated signal expressions (heuristic_reason) or the fields of a
+    bound struct (heuristic_reason_and_pnum)."""
+    mwl = F.when(wc > 0, letters / wc).otherwise(F.lit(0.0))
+    return (
+        F.when(moji > 0, F.lit("garbled_encoding"))
+        .when(wc < config.MIN_WORDS, F.lit("too_short"))
+        .when(
+            (mwl < config.MEAN_WORD_LEN_MIN)
+            | (mwl > config.MEAN_WORD_LEN_MAX),
+            F.lit("mean_word_length"),
+        )
+        .when(symr > config.MAX_SYMBOL_RATIO, F.lit("symbol_ratio"))
+        .when(
+            ell / wc > config.MAX_ELLIPSIS_PER_WORD,
+            F.lit("ellipsis_ratio"),
+        )
+        .when(
+            eng & (stop < config.MIN_STOPWORD_COUNT),
+            F.lit("stopword_ratio"),
+        )
+        .when(
+            dupf > config.MAX_DUP_LINE_FRACTION,
+            F.lit("dup_line_fraction"),
+        )
+        .otherwise(F.lit(None).cast("string"))
+    )
+
+
 def heuristic_reason(c: Column, *, english: Column | bool = True) -> Column:
     """First-failing-gate drop reason (native twin of
     core.gates.heuristic_reason); NULL when the document passes.
@@ -172,37 +215,17 @@ def heuristic_reason(c: Column, *, english: Column | bool = True) -> Column:
         return bind_once(words, lambda ws: _reason_from(t, ws, eng))
 
     def _reason_from(t: Column, ws: Column, eng: Column) -> Column:
-        wc = F.size(ws).cast("long")
-        letters = F.length(F.concat_ws("", ws)).cast("long")
-        mwl = F.when(wc > 0, letters / wc).otherwise(F.lit(0.0))
-        stopwords = F.size(
-            F.filter(ws, lambda x: x.isin(*config.STOPWORDS_EN))
-        ).cast("long")
-        return (
-            F.when(mojibake_count(t) > 0, F.lit("garbled_encoding"))
-            .when(wc < config.MIN_WORDS, F.lit("too_short"))
-            .when(
-                (mwl < config.MEAN_WORD_LEN_MIN)
-                | (mwl > config.MEAN_WORD_LEN_MAX),
-                F.lit("mean_word_length"),
-            )
-            .when(
-                symbol_ratio(t) > config.MAX_SYMBOL_RATIO,
-                F.lit("symbol_ratio"),
-            )
-            .when(
-                ellipsis_count(t) / wc > config.MAX_ELLIPSIS_PER_WORD,
-                F.lit("ellipsis_ratio"),
-            )
-            .when(
-                eng & (stopwords < config.MIN_STOPWORD_COUNT),
-                F.lit("stopword_ratio"),
-            )
-            .when(
-                dup_line_fraction(t) > config.MAX_DUP_LINE_FRACTION,
-                F.lit("dup_line_fraction"),
-            )
-            .otherwise(F.lit(None).cast("string"))
+        return _cascade(
+            wc=F.size(ws).cast("long"),
+            letters=F.length(F.concat_ws("", ws)).cast("long"),
+            stop=F.size(
+                F.filter(ws, lambda x: x.isin(*config.STOPWORDS_EN))
+            ).cast("long"),
+            symr=symbol_ratio(t),
+            ell=ellipsis_count(t),
+            moji=mojibake_count(t),
+            dupf=dup_line_fraction(t),
+            eng=eng,
         )
 
     return bind_once(c, _reason)
@@ -272,8 +295,8 @@ def heuristic_reason_and_pnum(
     by the caller from the langid UDF output, timeliness from the
     timestamp column).
 
-    Why it exists (r8): gates.decide computed heuristic_reason AND
-    quality_score_col as two separate expression trees — Catalyst has
+    Why it exists (r8): gates.decide computed the gate cascade AND
+    the quality score as two separate expression trees — Catalyst has
     no CSE across them, so the word-run regex, mojibake regex,
     symbol translate and line split each ran TWICE per document
     (measured sf1.0: full decide 1.19 s vs 0.80 s for the sum of its
@@ -282,15 +305,12 @@ def heuristic_reason_and_pnum(
     derive from it. The score needs symr/moji/dupf for every row
     anyway, so the eager struct wastes nothing.
 
-    Term order and arithmetic mirror quality_score_col / the labeler
+    Term order and arithmetic mirror the labeler
     (core.gates.quality_score) exactly: left-associated
     completeness→consistency→uniqueness→accuracy weighted sum, so
-    (pnum + validity*w)/den is bit-identical to the old composition.
-    NULL text is treated as '' for ALL terms — matching the labeler's
-    ``text = text or ''`` (the old quality_score_col's
-    least(1.0, NULL) quirk rated a NULL text's completeness 1.0
-    where the labeler rates it 0.0; no fixture carries NULL text, and
-    the labeler is the parity contract for this path)."""
+    (pnum + validity*w)/den is bit-identical to its score. NULL text
+    is treated as '' for ALL terms — matching the labeler's
+    ``text = text or ''``."""
     c0 = F.coalesce(c, F.lit(""))
     eng = F.lit(english) if isinstance(english, bool) else english
 
@@ -316,31 +336,15 @@ def heuristic_reason_and_pnum(
 
     def _from(s: Column) -> Column:
         wc = s["wc"]
-        mwl = F.when(wc > 0, s["letters"] / wc).otherwise(F.lit(0.0))
-        reason = (
-            F.when(s["moji"] > 0, F.lit("garbled_encoding"))
-            .when(wc < config.MIN_WORDS, F.lit("too_short"))
-            .when(
-                (mwl < config.MEAN_WORD_LEN_MIN)
-                | (mwl > config.MEAN_WORD_LEN_MAX),
-                F.lit("mean_word_length"),
-            )
-            .when(
-                s["symr"] > config.MAX_SYMBOL_RATIO, F.lit("symbol_ratio")
-            )
-            .when(
-                s["ell"] / wc > config.MAX_ELLIPSIS_PER_WORD,
-                F.lit("ellipsis_ratio"),
-            )
-            .when(
-                eng & (s["stop"] < config.MIN_STOPWORD_COUNT),
-                F.lit("stopword_ratio"),
-            )
-            .when(
-                s["dupf"] > config.MAX_DUP_LINE_FRACTION,
-                F.lit("dup_line_fraction"),
-            )
-            .otherwise(F.lit(None).cast("string"))
+        reason = _cascade(
+            wc=wc,
+            letters=s["letters"],
+            stop=s["stop"],
+            symr=s["symr"],
+            ell=s["ell"],
+            moji=s["moji"],
+            dupf=s["dupf"],
+            eng=eng,
         )
         completeness = F.least(
             F.lit(1.0), wc / F.lit(float(config.MIN_WORDS))

@@ -9,8 +9,8 @@ and expressed as native Spark column operations so they scale:
                 bucket join. The classic near-dup pipeline: candidate
                 pairs only ever meet inside a band bucket, so the
                 shuffle is on (band_id, band_hash) — never all-pairs.
-- simhash:      64-bit sign-sum fingerprint over token hashes;
-                hamming-close pairs are near-dups
+- simhash:      sign-sum fingerprint over md5-derived token hashes
+                (the DuckDB-checked simhash_md5_fingerprints query)
 - ngram_jaccard: exact Jaccard over shingle sets for candidate pairs
                 (the verify step after LSH)
 - embedding cosine: see operators/similarity.py
@@ -519,8 +519,8 @@ def _simhash_from_hashes(hashes: Column, n_bits: int) -> Column:
 def simhash_md5_60(c: Column, n_bits: int = 20) -> Column:
     """Engine-portable SimHash: token hash = first 15 md5 hex chars
     (60 bits, fits signed 64 everywhere); fingerprint over the low
-    `n_bits` bits. Exists so the SimHash pipeline has a DuckDB oracle
-    (xxhash64 has no DuckDB twin); production uses simhash64."""
+    `n_bits` bits. md5, not xxhash64, so the fingerprint has a DuckDB
+    twin (duckdb_simhash_sql)."""
     toks = F.filter(F.split(F.lower(c), r"\s+", -1), lambda x: x != "")
     hashes = F.transform(
         toks, lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
@@ -549,123 +549,3 @@ WITH h AS (SELECT doc_id, {hashes} AS hs FROM documents)
 SELECT doc_id, ({bits})::BIGINT AS simhash FROM h ORDER BY doc_id
 """
 
-
-def simhash64(c: Column) -> Column:
-    """64-bit SimHash over word tokens (deterministic, native).
-
-    Single-pass: token → xxhash64 → ±1 bit vector, folded by ONE
-    aggregate/zip_with (see _simhash_from_hashes). Stays one
-    projection, no explode, no shuffle.
-    """
-    toks = F.filter(F.split(F.lower(c), r"\s+", -1), lambda x: x != "")
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    return _simhash_from_hashes(hashes, 64)
-
-
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    max_bucket: int = MAX_BUCKET_DEFAULT,
-    reliable: bool = False,
-) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance ≤ max_hamming.
-
-    Scale path: block on 4 16-bit chunks (a pair within hamming ≤3 of
-    64 bits must agree exactly on ≥1 of 4 chunks — pigeonhole), join
-    per chunk, verify hamming. Never all-pairs.
-
-    r8 (VERDICT r7 #1a — same two hazards r7 measured and fixed in
-    lsh_candidate_pairs, same fixes):
-
-    * The exploded chunk table is checkpointed before the self-join —
-      without it BOTH join sides carry the full text-scan → simhash64
-      subtree, i.e. a second full-corpus scan AND a second 64-bit
-      sign-sum fold per document (the exact hidden-second-scan shape
-      the r7 LSH fix killed). Guard-off (max_bucket=2^40) output is
-      byte-identical to the r7 shape (exceptAll both ways = 0 at 8k
-      docs).
-    * A degenerate (chunk_idx, chunk) bucket — e.g. every sub-16-token
-      doc whose high chunk is 0 — emits m(m−1)/2 candidates and m
-      grows with the corpus; buckets over ``max_bucket`` members are
-      star-reduced to hub pairs (min-id hub, m−1 pairs; hub
-      fingerprint via min_by so no extra join). Homogeneous near-dup
-      clusters still verify fully against the hub; member↔member
-      links in MIXED oversized buckets fall to the other 3 chunks —
-      the identical recall trade lsh_candidate_pairs documents.
-
-    Measured together (dup-planted bench corpus, 86k docs, paired
-    alternating runs, local[32]): r7 shape 20.6-22.3 s → r8 shape
-    4.8-5.6 s; scale growth in BENCH/SIMHASH_SCALE.json.
-
-    The hamming verify now runs BEFORE the distinct: it is a
-    deterministic per-row filter (≤3 of 64 bits), so filtering first
-    shrinks the distinct's shuffle by the false-candidate mass
-    without changing the result set.
-    """
-    sim = df.select(
-        F.col(id_col).alias("id"), simhash64(F.col(text_col)).alias("sh")
-    )
-    chunks = _cut_lineage(
-        sim.select(
-            "id",
-            "sh",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("chunk_idx"),
-                            F.shiftright(F.col("sh"), 16 * i)
-                            .bitwiseAND(F.lit(0xFFFF))
-                            .alias("chunk"),
-                        )
-                        for i in range(4)
-                    ]
-                )
-            ).alias("c"),
-        ).select("id", "sh", "c.chunk_idx", "c.chunk"),
-        reliable,
-    )
-    stats = chunks.groupBy("chunk_idx", "chunk").agg(
-        F.count("*").alias("bsz"),
-        F.min("id").alias("hub"),
-        F.min_by("sh", "id").alias("hub_sh"),
-    )
-    tagged = chunks.join(stats, ["chunk_idx", "chunk"])
-    small = tagged.filter(F.col("bsz") <= max_bucket)
-    a = small.alias("a")
-    b = small.select("chunk_idx", "chunk", "id", "sh").alias("b").hint(
-        "shuffle_hash"
-    )
-    all_pairs = a.join(
-        b,
-        (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-        & (F.col("a.chunk") == F.col("b.chunk"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        F.col("a.sh").alias("sh_a"),
-        F.col("b.sh").alias("sh_b"),
-    )
-    star_pairs = (
-        tagged.filter(
-            (F.col("bsz") > max_bucket) & (F.col("id") != F.col("hub"))
-        )
-        .select(
-            F.col("hub").alias("id_a"),
-            F.col("id").alias("id_b"),
-            F.col("hub_sh").alias("sh_a"),
-            F.col("sh").alias("sh_b"),
-        )
-    )
-    cand = all_pairs.unionByName(star_pairs)
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        cand.select(
-            "id_a", "id_b", hamming.cast("long").alias("hamming")
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )

@@ -5,7 +5,8 @@ Split by execution tier:
   pure `pyspark.sql.functions` expressions (functions/exprs.py) —
   whole-stage codegen, no Python.
 - VECTORIZED PYTHON (Arrow batches, never per-row): langid,
-  perplexity, and the byte-exact PII scrub. These call the SAME pure
+  perplexity, and the byte-exact PII scrub, fused into ONE pandas UDF
+  (make_enrich_udf). These call the SAME pure
   functions as the single-node labeler (core/*), which is what makes
   Spark output vs labeler output byte-identical by construction.
 
@@ -54,76 +55,15 @@ def heuristic_reason_col(
     return exprs.heuristic_reason(F.col(text_col), english=english)
 
 
-# ------------------------------------------------- vectorized pandas UDFs
+# ------------------------------------------------- vectorized pandas UDF
 #
-# Model-dispatching UDFs are FACTORIES: the fastText/KenLM config is
+# make_enrich_udf is a FACTORY: the fastText/KenLM config is
 # resolved from the environment on the DRIVER at plan time and shipped
 # to executors inside the UDF closure. An executor-side os.environ read
 # would silently use the stand-in on any non-local master (driver env
 # vars don't reach Python workers) while the single-node labeler used
 # the configured model — the exact divergence the fail-loud contract
 # forbids (ADVICE r6).
-
-
-def make_langid_udf(model_config: dict | None = None):
-    """Language-ID pandas UDF with driver-resolved model config."""
-    from dataprof_spark.core import models as _models
-
-    cfg = _models.resolved_config() if model_config is None else model_config
-
-    @pandas_udf(T.StringType())
-    def langid_udf(texts: pd.Series) -> pd.Series:
-        from dataprof_spark.core import models
-
-        preds = models.predict_batch(texts.tolist(), config=cfg)
-        return pd.Series([p[0] for p in preds], dtype=object)
-
-    return langid_udf
-
-
-def make_perplexity_udf(model_config: dict | None = None):
-    """Perplexity pandas UDF with driver-resolved model config."""
-    from dataprof_spark.core import models as _models
-
-    cfg = _models.resolved_config() if model_config is None else model_config
-
-    @pandas_udf(T.DoubleType())
-    def perplexity_udf(texts: pd.Series) -> pd.Series:
-        from dataprof_spark.core import models
-
-        return pd.Series(models.perplexity_batch(texts.tolist(), config=cfg))
-
-    return perplexity_udf
-
-
-_SCRUB_SCHEMA = T.StructType(
-    [
-        T.StructField("scrubbed_text", T.StringType()),
-        T.StructField("email", T.IntegerType()),
-        T.StructField("phone", T.IntegerType()),
-        T.StructField("ip", T.IntegerType()),
-        T.StructField("blocklist", T.IntegerType()),
-    ]
-)
-
-
-@pandas_udf(_SCRUB_SCHEMA)
-def scrub_udf(texts: pd.Series) -> pd.DataFrame:
-    """Byte-exact scrub — the SAME core.scrub compiled patterns the
-    labeler uses (Python `re` end-to-end, SURVEY.md §7.3 hard-part #1),
-    through the batch kernel (one C regex scan per category)."""
-    from dataprof_spark.core import scrub
-
-    scrubbed, counts = scrub.scrub_batch(texts)
-    return pd.DataFrame(
-        {
-            "scrubbed_text": scrubbed.reset_index(drop=True),
-            "email": counts["email"].astype("int32"),
-            "phone": counts["phone"].astype("int32"),
-            "ip": counts["ip"].astype("int32"),
-            "blocklist": counts["blocklist"].astype("int32"),
-        }
-    )
 
 
 _ENRICH_SCHEMA = T.StructType(
@@ -141,7 +81,7 @@ _ENRICH_SCHEMA = T.StructType(
 
 def make_enrich_udf(model_config: dict | None = None):
     """Factory for the fused enrich UDF; model config resolved on the
-    driver at plan time (see the factory comment above) and captured
+    driver at plan time (see the comment above) and captured
     in the closure, so executors use exactly what the driver planned
     — or raise, never silently degrade."""
     from dataprof_spark.core import models as _models
@@ -213,15 +153,15 @@ def decide(
     """
     c = F.col(text_col)
     # Model config resolved HERE (driver, plan time) and shipped in the
-    # UDF closure — see the factory comment above make_langid_udf.
+    # UDF closure — see the factory comment above make_enrich_udf.
     enrich = make_enrich_udf()
     # r8: ONE fused native pass computes the gate cascade AND the
     # text-derived quality-score terms (exprs.heuristic_reason_and_pnum
-    # — the separate heuristic_reason + quality_score_col trees ran
-    # the word/mojibake/symbol/line signal passes twice per document;
-    # Catalyst has no CSE across expression trees). Validity and
-    # timeliness are attached below from the UDF output / ts column
-    # with the identical arithmetic quality_score_col uses.
+    # — separate gate and score trees ran the word/mojibake/symbol/line
+    # signal passes twice per document; Catalyst has no CSE across
+    # expression trees). Validity and timeliness are attached below
+    # from the UDF output / ts column, in the labeler's term order
+    # (core.gates.quality_score).
     english = (
         F.col(lang_col) == "en" if lang_col is not None else F.lit(True)
     )
@@ -236,8 +176,10 @@ def decide(
     )
     reason = (
         F.when(F.col("_hs.reason").isNotNull(), F.col("_hs.reason"))
+        # null-safe: a NULL claimed lang never equals a prediction,
+        # as in the labeler (core.gates.full_reason)
         .when(
-            F.col("_py.pred_lang") != F.col(lang_col),
+            ~F.col("_py.pred_lang").eqNullSafe(F.col(lang_col)),
             F.lit("lang_mismatch"),
         )
         .when(
@@ -246,9 +188,9 @@ def decide(
         )
         .otherwise(F.lit(None).cast("string"))
     )
-    # score = (pnum + validity·w [+ timeliness·w]) / den — the same
-    # left-associated composition quality_score_col builds, with the
-    # four text dimensions pre-folded into _hs.pnum by the fused pass.
+    # score = (pnum + validity·w [+ timeliness·w]) / den — the
+    # labeler's left-associated sum, with the four text dimensions
+    # pre-folded into _hs.pnum by the fused pass.
     w = config.QUALITY_WEIGHTS
     validity = F.when(
         F.col("_py.pred_lang") == F.col(lang_col), 1.0
@@ -266,8 +208,10 @@ def decide(
             .when(year < now_year - config.STALE_YEARS, 0.5)
             .otherwise(1.0)
         )
-        # NULL timestamp = dimension unassessed (renormalized) —
-        # identical to quality_score_col's handling.
+        # NULL timestamp = dimension unassessed: excluded from BOTH
+        # numerator and denominator (renormalized), matching the
+        # labeler's warc_ts-is-None path — vacuous dimensions are
+        # never counted as perfect (quality.rs:395-411 discipline).
         w_t = F.when(ts.isNull(), F.lit(0.0)).otherwise(
             F.lit(float(w["timeliness"]))
         )
@@ -294,59 +238,3 @@ def decide(
         "quality_score",
     )
 
-
-def quality_score_col(
-    text_col: str = "text",
-    lang_col: str = "lang",
-    ts_col: str | None = "warc_ts",
-    now_year: int = 2026,
-    pred_lang: Column | None = None,
-) -> Column:
-    """Native twin of core.gates.quality_score. Dimensions assessed:
-    completeness, consistency, uniqueness, accuracy, validity, and
-    timeliness when a timestamp column exists; precision is unassessed
-    (renormalized away, mirroring quality.rs:395-411). Pass the
-    already-computed pred_lang column to avoid re-running langid."""
-    c = F.col(text_col)
-    w = config.QUALITY_WEIGHTS
-    if pred_lang is None:
-        pred_lang = make_langid_udf()(c)
-    completeness = F.least(
-        F.lit(1.0), exprs.word_count(c) / F.lit(float(config.MIN_WORDS))
-    )
-    consistency = F.when(exprs.mojibake_count(c) > 0, 0.0).otherwise(1.0)
-    uniqueness = F.lit(1.0) - exprs.dup_line_fraction(c)
-    accuracy = F.lit(1.0) - F.least(
-        F.lit(1.0), exprs.symbol_ratio(c) / F.lit(config.MAX_SYMBOL_RATIO)
-    )
-    validity = F.when(pred_lang == F.col(lang_col), 1.0).otherwise(0.0)
-    num = (
-        completeness * w["completeness"]
-        + consistency * w["consistency"]
-        + uniqueness * w["uniqueness"]
-        + accuracy * w["accuracy"]
-        + validity * w["validity"]
-    )
-    den = (
-        w["completeness"] + w["consistency"] + w["uniqueness"]
-        + w["accuracy"] + w["validity"]
-    )
-    num, den = num, F.lit(den)
-    if ts_col is not None:
-        ts = F.col(ts_col)
-        year = F.year(ts)
-        timeliness = (
-            F.when(year > now_year, 0.0)
-            .when(year < now_year - config.STALE_YEARS, 0.5)
-            .otherwise(1.0)
-        )
-        # NULL timestamp = dimension unassessed: excluded from BOTH
-        # numerator and denominator (renormalized), matching the
-        # labeler's warc_ts-is-None path — vacuous dimensions are
-        # never counted as perfect (quality.rs:395-411 discipline).
-        w_t = F.when(ts.isNull(), F.lit(0.0)).otherwise(
-            F.lit(float(w["timeliness"]))
-        )
-        num = num + F.coalesce(timeliness, F.lit(1.0)) * w_t
-        den = den + w_t
-    return num / den

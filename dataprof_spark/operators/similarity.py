@@ -180,7 +180,7 @@ def embedding_near_dup_pairs(
     r8: the bucketed projection is checkpointed before the self-join —
     the a/b aliases otherwise carry the scan (and the guard's
     count-over-bucket window) TWICE, the same hidden-double-subtree
-    shape r7/r8 fixed in lsh_candidate_pairs and simhash_pairs."""
+    shape r7 fixed in lsh_candidate_pairs."""
     # one count() job serves both auto knobs
     n_rows = (
         df.count() if n_planes is None or max_bucket_size == "auto"

@@ -1330,7 +1330,7 @@ GROUP BY term ORDER BY tf DESC, term LIMIT 100
 def doc_pii_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII detector counts per document (reference patterns.rs:45-104
     Email/Phone/IPv4 recast; native regexp_count — the scrubber itself
-    uses Python re, see operators/gates.scrub_udf)."""
+    uses Python re, see operators/gates.make_enrich_udf)."""
     docs = _docs(spark, sf_dir)
     c = F.col("text")
     return docs.select(

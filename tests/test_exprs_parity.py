@@ -87,14 +87,26 @@ def test_symbol_count_nonascii_whitespace_parity(spark):
 
 
 def test_heuristic_reason_parity(sdf):
+    """Fixture rows plus edge rows the mixture never emits: NULL,
+    empty and whitespace-only text, and a clean text with NULL lang."""
     from dataprof_spark.core import gates as pygates
     from dataprof_spark.operators import gates as sgates
 
-    got = _collect(
-        sdf, sgates.heuristic_reason_col("text", "lang")
+    clean = next(r["text"] for r in ROWS if r["_class"] == "clean_en")
+    edge = [
+        ("edge:null", None, "en"),
+        ("edge:empty", "", "en"),
+        ("edge:space", " \t\n  \n", "en"),
+        ("edge:nolang", clean, None),
+    ]
+    edge_df = sdf.sparkSession.createDataFrame(
+        edge, "url string, text string, lang string"
     )
-    for r in ROWS:
-        expect = pygates.heuristic_reason(
-            r["text"], english=(r["lang"] == "en")
-        )
-        assert got[r["url"]] == expect, (r["_class"], r["text"][:80])
+    got = _collect(
+        sdf.select("url", "text", "lang").unionByName(edge_df),
+        sgates.heuristic_reason_col("text", "lang"),
+    )
+    cases = [(r["url"], r["text"], r["lang"]) for r in ROWS] + edge
+    for url, text, lang in cases:
+        expect = pygates.heuristic_reason(text, english=(lang == "en"))
+        assert got[url] == expect, (url, (text or "")[:80])

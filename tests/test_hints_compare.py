@@ -1,50 +1,10 @@
-"""Semantic hints contracts (reference semantic_hints.rs themes:
-binding evidence, unknown-column error, inert-hint error) and report
-compare()."""
+"""Report compare(): column drift and quality deltas between two
+profile reports."""
 
 from __future__ import annotations
 
-import pytest
-
-from dataprof_spark.operators import hints, profiler, quality
+from dataprof_spark.operators import profiler, quality
 from dataprof_spark.sources import report
-
-
-@pytest.fixture(scope="module")
-def df(spark):
-    rows = [
-        ("a@x.com", "1", "u_1"),
-        ("b@y.org", "2", "u_2"),
-        ("not-an-email", "3", "u_3"),
-    ]
-    return spark.createDataFrame(rows, "email string, n string, uid string")
-
-
-def test_hint_binds_with_evidence(df):
-    out = hints.apply_hints(df, {"email": "email"})
-    b = out[0]
-    assert b.matched == 2 and b.non_null == 3
-    assert b.ratio == pytest.approx(2 / 3)
-
-
-def test_unknown_column_is_error(df):
-    with pytest.raises(hints.HintError, match="unknown column"):
-        hints.apply_hints(df, {"nope": "email"})
-
-
-def test_unknown_hint_is_error(df):
-    with pytest.raises(hints.HintError, match="unknown semantic hint"):
-        hints.apply_hints(df, {"email": "quux"})
-
-
-def test_inert_hint_is_error(df):
-    with pytest.raises(hints.HintError, match="zero values"):
-        hints.apply_hints(df, {"n": "email"})
-
-
-def test_identifier_hint_binds_by_existence(df):
-    out = hints.apply_hints(df, {"uid": "identifier"})
-    assert out[0].hint == "identifier"
 
 
 def test_report_compare(spark):

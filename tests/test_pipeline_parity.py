@@ -1,6 +1,8 @@
 """The BASELINE.md correctness gate: Spark pipeline decisions vs the
 single-node reference labeler — F1 ≥ 0.99 on `keep`, byte-identical
-scrubbed text per url, and per-class expected outcomes."""
+scrubbed text per url, and per-class expected outcomes. The labeler
+comparisons also cover edge rows the fixture mixture never emits:
+NULL / empty / whitespace-only text, NULL warc_ts, NULL lang."""
 
 from __future__ import annotations
 
@@ -11,16 +13,47 @@ from dataprof_spark.operators import gates as sgates
 from dataprof_spark.pipeline import fixtures, labeler
 
 ROWS = fixtures.generate_pages(n=400)
+_CLEAN = [r for r in ROWS if r["_class"] == "clean_en"]
+
+
+def _edge(i: int, text: str | None, lang: str | None, ts=True) -> dict:
+    base = _CLEAN[i]
+    return {
+        "url": f"https://edge.example/{i}",
+        "warc_ts": base["warc_ts"] if ts else None,
+        "html": b"",
+        "text": text,
+        "lang": lang,
+    }
+
+
+EDGE_ROWS = [
+    _edge(0, None, "en"),
+    _edge(1, "", "en"),
+    _edge(2, " \t\n  \n", "en"),
+    _edge(3, _CLEAN[3]["text"], "en", ts=False),
+    _edge(4, _CLEAN[4]["text"], None),
+    _edge(5, None, None, ts=False),
+]
+ALL_ROWS = ROWS + EDGE_ROWS
 
 
 @pytest.fixture(scope="module")
 def decisions(spark):
-    sdf = fixtures.pages_df(spark, ROWS)
+    edge = spark.createDataFrame(
+        [
+            (r["url"], r["warc_ts"], r["html"], r["text"], r["lang"])
+            for r in EDGE_ROWS
+        ],
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string",
+    )
+    sdf = fixtures.pages_df(spark, ROWS).unionByName(edge)
     return {r["url"]: r.asDict() for r in sgates.decide(sdf).collect()}
 
 
 def test_f1_vs_labeler(decisions):
-    labels = labeler.label_rows(ROWS)
+    labels = labeler.label_rows(ALL_ROWS)
     f1, diag = labeler.f1_score(labels, list(decisions.values()))
     assert f1 >= 0.99, diag
     # stronger than the target: identical decisions
@@ -28,15 +61,15 @@ def test_f1_vs_labeler(decisions):
 
 
 def test_scrubbed_text_byte_identical(decisions):
-    labels = {r["url"]: r for r in labeler.label_rows(ROWS)}
+    labels = {r["url"]: r for r in labeler.label_rows(ALL_ROWS)}
     for url, d in decisions.items():
         assert d["scrubbed_text"] == labels[url]["scrubbed_text"]
 
 
 def test_drop_reasons_match_labeler(decisions):
-    for r in ROWS:
+    for r in ALL_ROWS:
         expect = pygates.full_reason(r["text"], r["lang"])
-        assert decisions[r["url"]]["drop_reason"] == expect, r["_class"]
+        assert decisions[r["url"]]["drop_reason"] == expect, r["url"]
 
 
 def test_expected_outcome_per_class(decisions):
@@ -65,7 +98,7 @@ def test_pii_docs_scrubbed(decisions):
 
 
 def test_quality_score_parity(decisions):
-    for r in ROWS:
+    for r in ALL_ROWS:
         expect = pygates.quality_score(r["text"], r["lang"], r["warc_ts"])
         got = decisions[r["url"]]["quality_score"]
-        assert got == pytest.approx(expect, abs=1e-9), r["_class"]
+        assert got == pytest.approx(expect, abs=1e-9), r["url"]
