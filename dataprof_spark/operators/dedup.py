@@ -226,6 +226,22 @@ def minhash_bands(sig: Column, n_bands: int = N_BANDS_DEFAULT,
     return _bind_once(sig, bands_from)
 
 
+def _band_rows(
+    df: DataFrame, id_col: str, text_col: str, n_perm: int, n_bands: int
+) -> DataFrame:
+    """One (id, band_idx, band_hash) row per document band, in a
+    single select so the bands are computed once per document (why:
+    lsh_candidate_pairs, "The band rows come from ONE select")."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.posexplode(
+            minhash_bands(
+                minhash_signature(F.col(text_col), n_perm), n_bands, n_perm
+            )
+        ).alias("band_idx", "band_hash"),
+    )
+
+
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -237,12 +253,22 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) sharing ≥1 band bucket.
 
-    Plan shape: one projection (signatures) → explode bands →
+    Plan shape: one select (signatures → bands → posexplode) →
     checkpoint → per-bucket size/hub agg → self-join on
     (band_idx, band_hash) for normal buckets ∪ hub-star pairs for
     oversized ones → distinct pairs. The join key is a hash bucket,
     so co-located after one shuffle each side; nothing quadratic
     ever materializes.
+
+    The band rows come from ONE select (_band_rows) with posexplode
+    applied to the band expression directly. Exploding a projected
+    ``bands`` attribute instead lets Catalyst's
+    InferFiltersFromGenerate add ``isnotnull(bands) AND size(bands) >
+    0``, and pushdown substitutes the alias into that filter, so the
+    optimized plan carries the 16-permutation MinHash and the band
+    md5s three times; the lambdas are interpreted (CodegenFallback),
+    so every copy is paid per row (the 2^31-1 modulus appears 108
+    times in that plan, 36 in this one).
 
     Oversized-bucket guard (r7): a band bucket with m members emits
     m(m-1)/2 pairs, and degenerate buckets GROW WITH THE CORPUS —
@@ -285,17 +311,8 @@ def lsh_candidate_pairs(
     the safe direction: a runtime size check, not a hint, so it
     degrades to a shuffle join at scale.)
     """
-    sig = df.select(
-        F.col(id_col).alias("id"),
-        minhash_bands(
-            minhash_signature(F.col(text_col), n_perm), n_bands, n_perm
-        ).alias("bands"),
-    )
     exploded = _cut_lineage(
-        sig.select(
-            "id", F.posexplode("bands").alias("band_idx", "band_hash")
-        ),
-        reliable,
+        _band_rows(df, id_col, text_col, n_perm, n_bands), reliable
     )
     stats = exploded.groupBy("band_idx", "band_hash").agg(
         F.count("*").alias("bsz"), F.min("id").alias("hub")

@@ -332,7 +332,10 @@ def ivf_topk(
             F.col("probe.idx").cast("long").alias("cell"),
         )
     )
-    scored = c.join(q, "cell").select(
+    # null-safe key: an equi-join on the computed `cell` makes Catalyst
+    # infer isnotnull(cell), a Filter that re-runs every centroid dot
+    # product. Query cells are never NULL, so the rows are the same.
+    scored = c.join(q, c["cell"].eqNullSafe(q["cell"])).select(
         "query_id",
         "neighbor_id",
         F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos_sim"),

@@ -65,6 +65,16 @@ def get_spark(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             "128m",
         )
+        # Spark's generated-class cache is an LRU of 100 entries. One
+        # dedup phase-2 op (exact → near → write) cycles through ~115
+        # distinct generated classes, so the LRU missed on almost
+        # every class: Janino recompiled 74-88 classes per op in
+        # steady state and the JIT then compiled that bytecode again.
+        # At 1000, repeat ops compile 0 (a few AQE plan variants
+        # compile once), and a whole traced benchmark run compiles
+        # ~350 classes (dedup) / ~150 (backfill), well under the cap.
+        # Static conf: set once per JVM, so it lives in the builder.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

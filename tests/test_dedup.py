@@ -77,6 +77,39 @@ def test_minhash_signature_shape(docs):
     assert all(v is not None for r in sig for v in r["sig"])
 
 
+def _lambda_filters(df) -> list[str]:
+    """Filter lines of the optimized plan that evaluate a lambda."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [
+        ln for ln in plan.splitlines()
+        if "Filter" in ln and "lambdafunction" in ln
+    ]
+
+
+def test_band_rows_plan_has_no_lambda_filter(docs):
+    """The band table lsh_candidate_pairs checkpoints must compute the
+    MinHash bands once per document: no filter Catalyst infers from
+    the generator may re-run the (interpreted) lambda projection."""
+    rows = dedup._band_rows(
+        docs, "doc_id", "text", dedup.N_PERM_DEFAULT, dedup.N_BANDS_DEFAULT
+    )
+    assert _lambda_filters(rows) == []
+
+
+def test_ivf_topk_plan_has_no_lambda_filter(spark):
+    """Same guard for the IVF probe join: its key is the computed
+    centroid cell, so an inferred isnotnull(cell) would re-run every
+    centroid dot product in a Filter."""
+    from dataprof_spark.operators import similarity
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    queries = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    top = similarity.ivf_topk(emb, queries, k=5, n_cells=16, n_probe=4)
+    assert _lambda_filters(top) == []
+
+
 def test_simhash_single_pass_parity(spark):
     """The single-pass zip_with fold must produce bit-identical
     fingerprints to the legacy one-aggregate-per-bit formulation

@@ -182,3 +182,37 @@ def test_near_dup_cache_lifecycle_is_scoped(spark, rows):
         # the leak check: once the result is garbage, everything the
         # call persisted is released
         assert drain(baseline) <= baseline
+
+
+def test_codegen_cache_holds_phase2(spark):
+    """A repeated phase-2 pass (exact → near → write) must reuse its
+    generated classes: session.get_spark sizes Spark's codegen cache
+    above the pass's working set (~115 classes). With the default
+    100-entry LRU every repeat recompiles ~100 classes. A repeat may
+    still meet a few new ones — AQE's runtime re-planning can number
+    the stages or shape a join differently from pass to pass, and
+    each variant compiles once — so the passes repeat until one
+    compiles nothing, at most five times. The input carries injected
+    exact and near copies, so both demotion joins have losers."""
+    pages = fixtures.pages_df(
+        spark, fixtures.inject_duplicates(fixtures.generate_pages(n=400))
+    )
+    dec = sgates.decide(pages).localCheckpoint(eager=True)
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+
+    def phase2() -> int:
+        before = compiles.getCount()
+        out = dedup_stage.mark_near_duplicates(
+            dedup_stage.mark_exact_duplicates(dec)
+        )
+        out.write.format("noop").mode("overwrite").save()
+        return compiles.getCount() - before
+
+    phase2()
+    repeats: list[int] = []
+    while len(repeats) < 5 and 0 not in repeats:
+        repeats.append(phase2())
+    assert 0 in repeats, repeats
