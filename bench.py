@@ -436,46 +436,18 @@ def run_sf1() -> dict:
         result["approx_provenance_flagged"] = any(
             p.stats.get("quartiles_approximate") for p in profs
         )
-        # coarse cardinality tier (r6, VERDICT r5 #4): same profile
-        # with the rsd=0.05 HLL and no exact follow-up — the parity
-        # HLL at rsd=0.008 dominated the 42.6 s full-profile wall
-        t0 = time.perf_counter()
-        profs_c = profiler.profile(
-            spark.read.parquet(f"{sf1_dir}/lineitem.parquet"),
-            use_approx_percentiles=True, cardinality="coarse",
-        )
-        result["profile_lineitem_coarse_sec"] = round(
-            time.perf_counter() - t0, 3
-        )
-        result["coarse_provenance_flagged"] = all(
-            p.distinct_confidence == "coarse_hll" for p in profs_c
-        )
-        # quality path tiers (r7, VERDICT r6 #4): assess() on sf1
-        # orders — the quality_report_orders shape — at the exact
-        # parity tier vs the coarse HLL tier, so a 100 TB quality
-        # sweep has measured evidence the opt-out pays here too
+        # assess() on sf1 orders — the quality_report_orders shape —
+        # at the exact parity tier
         from dataprof_spark.operators import quality
 
         orders = spark.read.parquet(f"{sf1_dir}/orders.parquet")
         t0 = time.perf_counter()
-        rep_p = quality.assess(
+        quality.assess(
             orders, key_col="o_orderkey", with_validity=True
         )
         result["assess_orders_parity_sec"] = round(
             time.perf_counter() - t0, 3
         )
-        t0 = time.perf_counter()
-        rep_c = quality.assess(
-            orders, key_col="o_orderkey", with_validity=True,
-            cardinality="coarse",
-        )
-        result["assess_orders_coarse_sec"] = round(
-            time.perf_counter() - t0, 3
-        )
-        result["assess_distinct_confidence"] = {
-            "parity": rep_p.distinct_confidence,
-            "coarse": rep_c.distinct_confidence,
-        }
         spark.stop()
     finally:
         SF_DIR = old

@@ -105,13 +105,10 @@ BLOCKLIST_TERMS = (
 # Mirrors the reference's exact-below-threshold / HLL-above contract
 # (cardinality.rs:21, 50-223): exact HashSet up to 10k distinct, then
 # HyperLogLog precision 14 (~0.81% rsd) with is_approximate provenance.
+# HLL_LG_K is that precision as the lgConfigK of Spark's DataSketches
+# hll_sketch_agg (2^14 registers; exprs.hll_distinct).
 EXACT_DISTINCT_THRESHOLD = 10_000
-HLL_RSD = 0.008
-# Opt-in coarse tier (VERDICT r5 #4): HLL at rsd=0.05 is ~9× cheaper
-# than the parity rsd=0.008 on wide tables (r3 measurement) — for
-# callers who want the profile's shape, not reference-precision
-# cardinalities. Provenance: distinct_confidence="coarse_hll".
-HLL_RSD_COARSE = 0.05
+HLL_LG_K = 14
 
 # ------------------------------------------------------- profiler knobs
 TOP_K_VALUES = 10              # top/bottom frequency truncation (A16)

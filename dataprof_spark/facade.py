@@ -186,10 +186,9 @@ def profile(
     sample pass (§2.8) and marks the report patterns_scanned.
 
     ``cardinality`` selects the distinct-count tier: "parity"
-    (default — reference-precision HLL rsd=0.008 + exact follow-up
-    ≤10k), "coarse" (one rsd=0.05 HLL pass, ~9× cheaper, provenance
-    distinct_confidence="coarse_hll"), or "off" (no cardinality
-    aggregates; distinct_count=None). See operators.profiler.profile.
+    (default — exact ≤10k, else the reference's precision-14 HLL
+    sketch) or "off" (no cardinality aggregates;
+    distinct_count=None). See operators.profiler.profile.
 
     ``metrics`` selects metric packs (reference quality.rs:63-72 /
     Profiler.metrics, python/dataprof/__init__.py:1380-1396):
@@ -449,13 +448,13 @@ class Profiler:
         return self
 
     def cardinality(self, tier: str) -> "Profiler":
-        """Distinct-count tier: "parity" (reference-precision HLL +
-        exact follow-up), "coarse" (rsd=0.05, ~9× cheaper), "off"
-        (no cardinality aggregates, distinct_count=None)."""
-        if tier not in ("parity", "coarse", "off"):
+        """Distinct-count tier: "parity" (precision-14 HLL sketch +
+        exact follow-up) or "off" (no cardinality aggregates,
+        distinct_count=None)."""
+        if tier not in ("parity", "off"):
             raise ValueError(
-                f"cardinality tier must be 'parity', 'coarse' or "
-                f"'off', got {tier!r}"
+                f"cardinality tier must be 'parity' or 'off', "
+                f"got {tier!r}"
             )
         self._kwargs["cardinality"] = tier
         return self

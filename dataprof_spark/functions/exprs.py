@@ -445,6 +445,20 @@ def nulllike(c: Column) -> Column:
     return c.isNull() | (t == "") | F.lower(t).isin("null", "nan")
 
 
+def hll_distinct(c: Column) -> Column:
+    """Estimated distinct count of ``c``: a DataSketches HLL at
+    lgK = config.HLL_LG_K, the reference's precision 14
+    (cardinality.rs). The value goes in as xxhash64(c), so every type
+    is accepted (hll_sketch_agg itself takes only int, bigint, string
+    and binary). NULL is masked first: xxhash64(NULL) is the seed 42,
+    not NULL, and would count as one more value. Zero rows and an
+    all-NULL column estimate 0, as countDistinct does."""
+    return F.hll_sketch_estimate(
+        F.hll_sketch_agg(F.when(c.isNotNull(), F.xxhash64(c)),
+                         config.HLL_LG_K)
+    )
+
+
 def duckdb_signal_sql(text_expr: str = "text") -> dict[str, str]:
     """DuckDB-SQL fragments computing the SAME signals (RE2 dialect),
     for oracle_sql() generation. Keys match the Spark column aliases."""

@@ -8,8 +8,8 @@ twin of the reference's single-pass SIMD accumulators, simd.rs:55-116,
 and its merge()-based partial aggregation, which IS Spark's
 partial/final agg model). Distinct counts follow the reference's
 exact-below-threshold / HLL-above contract with an `is_approximate`
-provenance flag (cardinality.rs:21,50-223):
-approx_count_distinct(rsd=0.008) ≈ HLL precision 14.
+provenance flag (cardinality.rs:21,50-223): above the threshold the
+estimate is a DataSketches HLL at precision 14 (exprs.hll_distinct).
 
 Type inference for string columns applies the reference's rules
 (inference.rs:33-96): 100% i64 → integer; >80% finite f64 → float;
@@ -63,9 +63,8 @@ class ColumnProfile:
     # numeric sentinel (ADVICE r5)
     distinct_count: int | None
     distinct_is_approximate: bool
-    # provenance tier (VERDICT r5 #4): "exact" (≤ threshold,
-    # countDistinct), "hll" (parity tier, rsd=0.008 ≈ the reference's
-    # precision-14), "coarse_hll" (opt-in cheap tier, rsd=0.05),
+    # provenance tier: "exact" (≤ threshold, countDistinct), "hll"
+    # (above it: the HLL sketch at the reference's precision 14),
     # "not_computed" (schema pack / cardinality="off")
     distinct_confidence: str = "exact"
     stats: dict[str, Any] = field(default_factory=dict)
@@ -150,14 +149,10 @@ def profile(df: DataFrame, top_k: int = config.TOP_K_VALUES,
     aggregate buffers every value; the stats dict records which tier
     ran (the reference's exact-vs-approx provenance contract).
 
-    ``cardinality`` selects the distinct-count tier (VERDICT r5 #4 —
-    the parity HLL at rsd=0.008 dominated the sf1 full-profile wall):
-    - "parity" (default, unchanged): HLL rsd=0.008 ≈ the reference's
-      precision-14, exact countDistinct follow-up below the 10k
-      threshold (cardinality.rs contract).
-    - "coarse": one HLL pass at rsd=0.05 (~9× cheaper, r3
-      measurement), NO exact follow-up job. Every column reports
-      distinct_confidence="coarse_hll".
+    ``cardinality`` selects the distinct-count tier:
+    - "parity" (default): a DataSketches HLL at the reference's
+      precision 14 (exprs.hll_distinct), with an exact countDistinct
+      follow-up below the 10k threshold (cardinality.rs contract).
     - "off": no cardinality aggregates at all; distinct_count=None,
       distinct_confidence="not_computed". The string top-k and
       numeric-mode passes are cardinality-GUARDED (a top-k groupBy
@@ -166,9 +161,9 @@ def profile(df: DataFrame, top_k: int = config.TOP_K_VALUES,
       distributions still run.
 
     Execution notes (r3, measured on a 6M-row table):
-    - DECLARATIVE aggregates and TypedImperative ones (HLL
-      approx_count_distinct, percentile buffers) must NOT share one
-      agg — mixing forces the whole 80+-expression aggregate onto
+    - DECLARATIVE aggregates and TypedImperative ones (the HLL
+      sketch, percentile buffers) must NOT share one agg — mixing
+      forces the whole 80+-expression aggregate onto
       the slow object path (62s vs split).
     - Spark's stddev/skewness/kurtosis (CentralMomentAgg) are ~14x
       the cost of simple sums in a wide agg (0.5s -> 7s for 8
@@ -180,20 +175,14 @@ def profile(df: DataFrame, top_k: int = config.TOP_K_VALUES,
     - try_cast("bigint") on non-numeric strings is exception-driven
       (~10s per 6M-row column); the type-inference probes are regex.
     Net: 2 wide scans + the 2 follow-ups below, job count
-    independent of column count; 113s -> ~50s on the 6M-row table
-    (the remaining bulk is the HLL pass at the reference's
-    precision-14 rsd=0.008 — a deliberate parity choice).
+    independent of column count; 113s -> ~50s on the 6M-row table.
     Quartiles and deciles share ONE percentile buffer per column on
     the approx tier (deciles thereby inherit the 10000 accuracy
     instead of the old separate 1000)."""
-    if cardinality not in ("parity", "coarse", "off"):
+    if cardinality not in ("parity", "off"):
         raise ValueError(
-            f"cardinality must be 'parity', 'coarse' or 'off', "
-            f"got {cardinality!r}"
+            f"cardinality must be 'parity' or 'off', got {cardinality!r}"
         )
-    hll_rsd = (
-        config.HLL_RSD if cardinality == "parity" else config.HLL_RSD_COARSE
-    )
     fields = df.schema.fields
     decl_aggs: list = [F.count(F.lit(1)).alias("__total")]
     imp_aggs: list = []
@@ -207,9 +196,7 @@ def profile(df: DataFrame, top_k: int = config.TOP_K_VALUES,
         decl_aggs.append(F.sum(null_pred.cast("long")).alias(f"{n}__nulls"))
         if cardinality != "off":
             imp_aggs.append(
-                F.approx_count_distinct(c, rsd=hll_rsd).alias(
-                    f"{n}__approx_distinct"
-                )
+                exprs.hll_distinct(c).alias(f"{n}__approx_distinct")
             )
         if _is_numeric(f_.dataType):
             d = c.cast("double")
@@ -287,9 +274,8 @@ def profile(df: DataFrame, top_k: int = config.TOP_K_VALUES,
     total = row["__total"]
 
     # follow-up: exact distinct for columns under the threshold
-    # (the reference's exact-tier contract, cardinality.rs:151-183) —
-    # parity tier only; the coarse/off tiers exist to skip this cost —
-    # plus the centered power sums Σ(x-μ)^k (declarative — keeping
+    # (the reference's exact-tier contract, cardinality.rs:151-183;
+    # skipped when cardinality="off") plus the centered power sums Σ(x-μ)^k (declarative — keeping
     # them OUT of the imperative agg avoids the mixed-mode penalty;
     # μ needs pass 1, so they could not ride the first scan either)
     exact_cols = [
@@ -326,7 +312,6 @@ def profile(df: DataFrame, top_k: int = config.TOP_K_VALUES,
         distinct = exact.get(n, row.get(f"{n}__approx_distinct"))
         confidence = (
             "not_computed" if cardinality == "off"
-            else "coarse_hll" if cardinality == "coarse"
             else "exact" if n in exact
             else "hll"
         )

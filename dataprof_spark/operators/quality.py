@@ -47,9 +47,8 @@ class QualityReport:
     dimensions: dict[str, float] = field(default_factory=dict)
     details: dict[str, dict] = field(default_factory=dict)
     confidence: str = "exact"
-    # provenance of the uniqueness distinct counts — same 4-valued
-    # vocabulary as the profiler's per-column flag (VERDICT r6 #4):
-    # exact | hll | coarse_hll | not_computed
+    # provenance of the uniqueness distinct counts — same vocabulary
+    # as the profiler's per-column flag: exact | hll | not_computed
     distinct_confidence: str = "exact"
 
     @property
@@ -90,31 +89,27 @@ def assess(df: DataFrame, key_col: str | None = None,
     constant in column count. ``use_approx_percentiles=True`` switches
     the IQR fences to approx_percentile (needed at 10^11 rows; exact
     percentile buffers per group); ``use_approx_distinct=True``
-    switches the row/key distinct counts to HLL (exact countDistinct
-    expands every row into the shuffle at 10^11 rows). Either flag
-    records confidence="approx" — the reference's own exact-vs-approx
+    switches the row/key distinct counts to the precision-14 HLL
+    sketch, exprs.hll_distinct (exact countDistinct expands every row
+    into the shuffle at 10^11 rows). Either flag records
+    confidence="approx" — the reference's own exact-vs-approx
     provenance contract.
 
-    ``cardinality`` (VERDICT r6 #4 — the profiler's tier knob,
-    threaded through the quality path so a 100 TB sweep can skip the
-    rsd=0.008 pass here too):
-    - "parity" (default): behavior unchanged — exact countDistinct,
-      or rsd=0.008 HLL when ``use_approx_distinct=True``.
-    - "coarse": rsd=0.05 HLL (config.HLL_RSD_COARSE) regardless of
-      ``use_approx_distinct`` — ~(0.008/0.05)^2 ≈ 40× fewer HLL
-      registers per aggregate buffer.
+    ``cardinality`` is the profiler's tier knob, threaded through the
+    quality path:
+    - "parity" (default): exact countDistinct, or the HLL sketch when
+      ``use_approx_distinct=True``.
     - "off": no distinct aggregates at all; the uniqueness dimension
       reports None (renormalized out of the overall score, never
       counted perfect) and the key-uniqueness evidence is absent.
     The tier used is recorded as ``report.distinct_confidence``
-    (exact | hll | coarse_hll | not_computed) and mirrored in
-    ``details['uniqueness']`` — the same 4-valued provenance the
-    profiler emits.
+    (exact | hll | not_computed) and mirrored in
+    ``details['uniqueness']`` — the same provenance the profiler
+    emits.
     """
-    if cardinality not in ("parity", "coarse", "off"):
+    if cardinality not in ("parity", "off"):
         raise ValueError(
-            f"cardinality must be 'parity', 'coarse' or 'off', "
-            f"got {cardinality!r}"
+            f"cardinality must be 'parity' or 'off', got {cardinality!r}"
         )
     if dimensions is None:
         want = set(_ALL_DIMENSIONS)
@@ -163,16 +158,8 @@ def assess(df: DataFrame, key_col: str | None = None,
     # don't knock the whole declarative agg off the codegen fast path
     # (profiler.py r3 note); exact countDistinct is declarative and
     # stays in the main agg.
-    if cardinality == "coarse":
-        _distinct = lambda c: F.approx_count_distinct(  # noqa: E731
-            c, rsd=config.HLL_RSD_COARSE
-        )
-        _distinct_sink = pct_aggs
-        distinct_conf = "coarse_hll"
-    elif use_approx_distinct:
-        _distinct = lambda c: F.approx_count_distinct(  # noqa: E731
-            c, rsd=config.HLL_RSD
-        )
+    if use_approx_distinct:
+        _distinct = exprs.hll_distinct
         _distinct_sink = pct_aggs
         distinct_conf = "hll"
     else:
@@ -324,11 +311,11 @@ def assess(df: DataFrame, key_col: str | None = None,
     else:
         dup_rows = total - row["__distinct_rows"]
         if distinct_conf != "exact":
-            # HLL can overestimate (rsd 0.05 at the coarse tier), so
-            # the estimated duplicate count is floored at 0 — a
-            # negative duplicate count / >1.0 uniqueness is an
-            # estimator artifact, not a data property. Exact tier
-            # untouched (byte-identical oracle path).
+            # HLL can overestimate, so the estimated duplicate count
+            # is floored at 0 — a negative duplicate count / >1.0
+            # uniqueness is an estimator artifact, not a data
+            # property. Exact tier untouched (byte-identical oracle
+            # path).
             dup_rows = max(0, dup_rows)
     if dup_rows is None:
         det = None
@@ -438,8 +425,8 @@ def assess(df: DataFrame, key_col: str | None = None,
             },
             # which columns actually carried a __neg agg — a requested
             # positive_column that is NOT here (e.g. string-typed) was
-            # never checked, and callers (etl_gate) must not treat its
-            # absence from negatives_by_column as "no negatives"
+            # never checked, so its absence from negatives_by_column
+            # does not mean "no negatives"
             "negatives_checked_columns": [
                 n for n in num_cols if f"{n}__neg" in row
             ],
@@ -524,8 +511,7 @@ def assess(df: DataFrame, key_col: str | None = None,
 
     if "uniqueness" in want:
         report.distinct_confidence = distinct_conf
-    if (use_approx_percentiles or use_approx_distinct
-            or cardinality == "coarse"):
+    if use_approx_percentiles or use_approx_distinct:
         report.confidence = "approx"
 
     # ---- timeliness

@@ -17,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dataprof_spark.operators import gates
 
 EVENT_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -76,15 +75,6 @@ def run_to_memory(
             f"stream drain into '{table_name}' did not finish within "
             f"{timeout_s}s"
         )
-
-
-def streaming_quality_gate(stream: DataFrame) -> DataFrame:
-    """Per-microbatch document gating — the full native heuristic
-    cascade applied to a stream of pages (append mode, stateless:
-    exactly the 100 TB batch plan, re-targeted at a stream)."""
-    return stream.withColumn(
-        "drop_reason", gates.heuristic_reason_col("text", "lang")
-    ).withColumn("keep", F.col("drop_reason").isNull())
 
 
 def stream_dedup(

@@ -258,30 +258,21 @@ def test_quality_dimensions_without_quality_pack_raises(orders_df):
         )
 
 
-def test_cardinality_coarse_skips_followup_job(spark, orders_df):
-    """The coarse tier must actually SKIP the exact-distinct
-    follow-up action (that job is the tier's cost), and the builder
-    shorthand must thread the tier through to the profiler."""
-    orders_df.count()
-    n_coarse = _n_jobs(
-        spark,
-        lambda: facade.profile(
-            orders_df, quality=False, cardinality="coarse"
-        ),
-    )
-    n_parity = _n_jobs(
-        spark, lambda: facade.profile(orders_df, quality=False)
-    )
-    assert n_coarse < n_parity, (n_coarse, n_parity)
-
+def test_cardinality_tier_threads_through_builder(orders_df):
+    """The builder shorthand threads the tier through to the profiler,
+    and only "parity" and "off" exist: any other tier is refused by
+    the builder and by the profiler behind facade.profile."""
     rep = (
         facade.Profiler()
-        .cardinality("coarse")
+        .cardinality("off")
         .metrics(["schema", "statistics"])
         .profile(orders_df)
     )
     assert all(
-        c["distinct_confidence"] == "coarse_hll" for c in rep.columns
+        c["distinct_confidence"] == "not_computed" for c in rep.columns
     )
-    with pytest.raises(ValueError, match="cardinality tier"):
-        facade.Profiler().cardinality("cheap")
+    for tier in ("cheap", "coarse"):
+        with pytest.raises(ValueError, match="cardinality tier"):
+            facade.Profiler().cardinality(tier)
+    with pytest.raises(ValueError, match="cardinality must be"):
+        facade.profile(orders_df, quality=False, cardinality="coarse")

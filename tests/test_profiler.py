@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from dataprof_spark.operators import profiler, quality
 
 SF_DIR = "/root/testdata/sf0.001"
+SF01_DIR = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="module")
@@ -297,30 +298,136 @@ def test_quality_approx_distinct_provenance(spark):
         df, key_col="o_orderkey", use_approx_distinct=True
     )
     assert approx.confidence == "approx"
-    # HLL rsd 0.008 → within ~3% of the exact key uniqueness
+    # precision-14 HLL (σ ≈ 0.8%) → within 3% of the exact key
+    # uniqueness
     assert approx.details["uniqueness"]["key_uniqueness"] == pytest.approx(
         exact.details["uniqueness"]["key_uniqueness"], rel=0.03
     )
 
 
-# -------------------------------------------- cardinality tiers (r6)
-def test_cardinality_coarse_tier(spark, li_profiles):
-    """VERDICT r5 #4: the coarse tier runs ONE rsd=0.05 HLL pass — no
-    exact countDistinct follow-up — and every column carries the
-    coarse provenance. Values must still land within HLL error of
-    the parity tier's."""
-    df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    coarse = {p.name: p for p in profiler.profile(df, cardinality="coarse")}
-    for n, p in coarse.items():
-        assert p.distinct_confidence == "coarse_hll"
+# ---------------------------------------------- cardinality tiers
+def test_hll_distinct_matches_count_distinct(spark):
+    """The sketch helper straight on a small frame, not through
+    profile(): the exact follow-up there would hide a NULL-counting
+    bug. Doubles (NaN, ±0.0) and timestamps with NULLs, booleans and
+    binary all go in through the xxhash64 wrapper, and at this
+    cardinality the estimate must equal countDistinct exactly."""
+    import datetime as dt
+
+    from dataprof_spark.functions import exprs
+
+    t1, t2 = dt.datetime(2024, 1, 1, 10), dt.datetime(2024, 3, 5)
+    rows = [
+        (1.5, t1, True, bytearray(b"a")),
+        (None, None, False, bytearray(b"b")),
+        (-0.0, t1, None, None),
+        (0.0, t2, True, bytearray(b"a")),
+        (float("nan"), None, False, bytearray(b"")),
+        (float("nan"), t2, None, bytearray(b"c")),
+        (None, None, True, None),
+    ]
+    df = spark.createDataFrame(
+        rows, "d double, ts timestamp, b boolean, bin binary"
+    ).withColumn("all_null", F.lit(None).cast("double"))
+
+    def counts(frame):
+        aggs = []
+        for n in frame.columns:
+            aggs += [
+                exprs.hll_distinct(F.col(n)).alias(f"{n}__hll"),
+                F.countDistinct(n).alias(f"{n}__exact"),
+            ]
+        r = frame.agg(*aggs).collect()[0]
+        return {n: (r[f"{n}__hll"], r[f"{n}__exact"]) for n in frame.columns}
+
+    got = counts(df)
+    assert got == {
+        "d": (3, 3), "ts": (2, 2), "b": (2, 2), "bin": (4, 4),
+        "all_null": (0, 0),
+    }
+    assert set(counts(df.limit(0)).values()) == {(0, 0)}
+
+
+def test_hll_tier_within_3_sigma(spark):
+    """Every column the parity tier leaves on the HLL estimate (above
+    the 10k exact threshold) must be within 3σ of its exact count:
+    σ = 1.04/√2^14 for the precision-14 sketch."""
+    df = spark.read.parquet(f"{SF01_DIR}/lineitem.parquet")
+    hll = [p for p in profiler.profile(df) if p.distinct_confidence == "hll"]
+    assert hll, "sf0.01 lineitem has no column above the 10k threshold"
+    exact = df.agg(
+        *[F.countDistinct(p.name).alias(p.name) for p in hll]
+    ).collect()[0]
+    tol = 3 * 1.04 / 2 ** (14 / 2)
+    for p in hll:
         assert p.distinct_is_approximate
-        want = li_profiles[n].distinct_count
-        # rsd=0.05 → generous 5-sigma bound
-        assert p.distinct_count == pytest.approx(want, rel=0.25), n
-    # everything else identical to parity (same stats machinery)
-    assert coarse["l_extendedprice"].stats["mean"] == pytest.approx(
-        li_profiles["l_extendedprice"].stats["mean"]
+        assert abs(p.distinct_count - exact[p.name]) <= tol * exact[p.name], (
+            p.name, p.distinct_count, exact[p.name]
+        )
+
+
+_TXN = [
+    ("t1", "acc1", 100.0, "2026-01-05"),
+    ("t2", "acc2", 250.5, "2026-01-06"),
+    ("t3", "acc3", 99.99, "2026-01-07"),
+    ("t4", "acc1", 12.0, "2026-01-08"),
+]
+
+
+def _txn_df(spark, rows=_TXN):
+    return spark.createDataFrame(
+        rows,
+        "transaction_id string, account string, amount_eur double, "
+        "booked_at string",
+    ).withColumn("booked_at", F.to_date("booked_at"))
+
+
+def test_assess_cardinality_tiers(spark):
+    df = _txn_df(spark)
+    exact = quality.assess(df, key_col="transaction_id")
+    assert exact.distinct_confidence == "exact"
+    assert exact.details["uniqueness"]["distinct_confidence"] == "exact"
+
+    approx = quality.assess(
+        df, key_col="transaction_id", use_approx_distinct=True
     )
+    assert approx.distinct_confidence == "hll"
+    assert approx.confidence == "approx"
+    assert approx.details["uniqueness"]["duplicate_rows"] == 0
+    assert approx.details["uniqueness"]["key_uniqueness"] == 1.0
+
+    off = quality.assess(
+        df, key_col="transaction_id", cardinality="off"
+    )
+    assert off.distinct_confidence == "not_computed"
+    assert off.dimensions["uniqueness"] is None
+    assert off.details["uniqueness"] == {
+        "distinct_confidence": "not_computed"
+    }
+    # None dimensions renormalize out — never counted as perfect
+    assert 0.0 < off.overall_score <= 1.0
+
+    for tier in ("bogus", "coarse"):
+        with pytest.raises(ValueError, match="parity"):
+            quality.assess(df, cardinality=tier)
+
+
+def test_assess_positive_columns(spark):
+    """positive_columns adds a negatives check to a numeric column the
+    name hints miss; a string column gets no check, and
+    negatives_checked_columns says so."""
+    df = _txn_df(
+        spark, _TXN + [("t5", "acc2", -10.0, "2026-01-09")]
+    ).withColumnRenamed("amount_eur", "fee")
+    plain = quality.assess(df, dimensions=["accuracy"])
+    assert plain.details["accuracy"]["negatives_checked_columns"] == []
+    assert plain.details["accuracy"]["negatives_by_column"] == {}
+
+    acc = quality.assess(
+        df, dimensions=["accuracy"], positive_columns=["fee", "account"]
+    ).details["accuracy"]
+    assert acc["negatives_by_column"] == {"fee": 1}
+    assert acc["negatives_checked_columns"] == ["fee"]
 
 
 def test_cardinality_off_tier(spark):
@@ -340,6 +447,8 @@ def test_cardinality_off_tier(spark):
         off["l_shipdate"].stats.get("duration_days") is not None
     with pytest.raises(ValueError, match="cardinality"):
         profiler.profile(df, cardinality="cheap")
+    with pytest.raises(ValueError, match="cardinality"):
+        profiler.profile(df, cardinality="coarse")
 
 
 def test_cardinality_parity_provenance(li_profiles):

@@ -1,5 +1,5 @@
 """Structured Streaming: stream/batch parity on windowed aggregation,
-streaming quality gate, stateful sessionization."""
+stateful sessionization."""
 
 from __future__ import annotations
 
@@ -33,38 +33,6 @@ def test_stream_batch_parity_hourly(spark, tmp_path):
         for r in queries.events_hourly(spark, SF_DIR).collect()
     }
     assert got == want
-
-
-def test_streaming_quality_gate(spark, tmp_path):
-    from dataprof_spark.pipeline import fixtures
-
-    rows = fixtures.generate_pages(n=100)
-    pages = fixtures.pages_df(spark, rows)
-    src = tmp_path / "pages_src"
-    pages.write.parquet(str(src))
-
-    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-    stream = (
-        spark.readStream.schema(schema).parquet(str(src))
-    )
-    gated = sev.streaming_quality_gate(stream)
-    q = (
-        gated.select("url", "keep", "drop_reason")
-        .writeStream.format("memory")
-        .queryName("gated_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {r["url"]: r["drop_reason"] for r in spark.table("gated_stream").collect()}
-    from dataprof_spark.core import gates as pygates
-
-    assert len(got) == len(rows)
-    for r in rows:
-        expect = pygates.heuristic_reason(r["text"], english=(r["lang"] == "en"))
-        assert got[r["url"]] == expect
 
 
 def test_sessionize(spark, tmp_path):
