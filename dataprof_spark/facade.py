@@ -204,6 +204,7 @@ def profile(
     ``on_progress``/``progress_interval_ms`` attach a progress
     callback fed from SparkStatusTracker while the profile jobs run
     (reference Profiler.on_progress / progress_interval_ms)."""
+    _profiler.check_cardinality(cardinality)
     spark = spark or _default_spark()
     if metrics is not None:
         packs = {p.lower() for p in metrics}
@@ -451,11 +452,7 @@ class Profiler:
         """Distinct-count tier: "parity" (precision-14 HLL sketch +
         exact follow-up) or "off" (no cardinality aggregates,
         distinct_count=None)."""
-        if tier not in ("parity", "off"):
-            raise ValueError(
-                f"cardinality tier must be 'parity' or 'off', "
-                f"got {tier!r}"
-            )
+        _profiler.check_cardinality(tier)
         self._kwargs["cardinality"] = tier
         return self
 

@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from dataprof_spark import config
+from dataprof_spark.core.scrub import SCRUB_ORDER
 from dataprof_spark.functions import exprs
 
 
@@ -71,10 +72,7 @@ _ENRICH_SCHEMA = T.StructType(
         T.StructField("pred_lang", T.StringType()),
         T.StructField("ppl", T.DoubleType()),
         T.StructField("scrubbed_text", T.StringType()),
-        T.StructField("email", T.IntegerType()),
-        T.StructField("phone", T.IntegerType()),
-        T.StructField("ip", T.IntegerType()),
-        T.StructField("blocklist", T.IntegerType()),
+        *(T.StructField(k, T.IntegerType()) for k in SCRUB_ORDER),
     ]
 )
 
@@ -124,10 +122,7 @@ def _enrich_batch(texts: pd.Series, cfg: dict | None) -> pd.DataFrame:
             "pred_lang": pd.Series([p[0] for p in preds], dtype=object),
             "ppl": ppl,
             "scrubbed_text": scrubbed.reset_index(drop=True),
-            "email": counts["email"].astype("int32"),
-            "phone": counts["phone"].astype("int32"),
-            "ip": counts["ip"].astype("int32"),
-            "blocklist": counts["blocklist"].astype("int32"),
+            **{k: counts[k].astype("int32") for k in SCRUB_ORDER},
         }
     )
 
@@ -230,10 +225,7 @@ def decide(
         "drop_reason",
         F.col("_py.scrubbed_text").alias("scrubbed_text"),
         F.create_map(
-            F.lit("email"), F.col("_py.email"),
-            F.lit("phone"), F.col("_py.phone"),
-            F.lit("ip"), F.col("_py.ip"),
-            F.lit("blocklist"), F.col("_py.blocklist"),
+            *(x for k in SCRUB_ORDER for x in (F.lit(k), F.col(f"_py.{k}")))
         ).alias("scrub_counts"),
         "quality_score",
     )

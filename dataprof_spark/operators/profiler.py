@@ -137,12 +137,26 @@ def profile_schema_only(df: DataFrame) -> list[ColumnProfile]:
     ]
 
 
+def check_cardinality(tier: str) -> None:
+    """Refuse a distinct-count tier other than "parity" or "off" (the
+    one check behind profile, quality.assess and the facade)."""
+    if tier not in ("parity", "off"):
+        raise ValueError(
+            f"unknown cardinality tier {tier!r}: cardinality must be "
+            "'parity' or 'off'"
+        )
+
+
 def profile(df: DataFrame, top_k: int = config.TOP_K_VALUES,
             use_approx_percentiles: bool = False,
             cardinality: str = "parity") -> list[ColumnProfile]:
-    """Profile every column of `df` (3 jobs total, independent of
-    column count: wide agg → exact-distinct follow-up → one melt job
-    for top-k/mode/temporal distributions).
+    """Profile every column of `df` in 4 collects, independent of
+    column count: declarative wide agg → imperative wide agg (HLL
+    sketches, percentile buffers) → exact-distinct/moment follow-up →
+    one melt for top-k/mode/temporal distributions. Under AQE those
+    collects run as more Spark jobs than that (each shuffle stage is
+    submitted as its own job): a traced profile of the 5,400-row
+    dedup corpus counts 10.
 
     ``use_approx_percentiles=True`` switches the quartiles to
     approx_percentile — required at 10^10+ rows where the exact
@@ -179,10 +193,7 @@ def profile(df: DataFrame, top_k: int = config.TOP_K_VALUES,
     Quartiles and deciles share ONE percentile buffer per column on
     the approx tier (deciles thereby inherit the 10000 accuracy
     instead of the old separate 1000)."""
-    if cardinality not in ("parity", "off"):
-        raise ValueError(
-            f"cardinality must be 'parity' or 'off', got {cardinality!r}"
-        )
+    check_cardinality(cardinality)
     fields = df.schema.fields
     decl_aggs: list = [F.count(F.lit(1)).alias("__total")]
     imp_aggs: list = []

@@ -28,6 +28,7 @@ from dataprof_spark.operators.profiler import (
     _is_key_named,
     _is_numeric,
     _is_temporal,
+    check_cardinality,
 )
 
 MOJIBAKE_PAT = exprs.MOJIBAKE_PAT
@@ -107,10 +108,7 @@ def assess(df: DataFrame, key_col: str | None = None,
     ``details['uniqueness']`` — the same provenance the profiler
     emits.
     """
-    if cardinality not in ("parity", "off"):
-        raise ValueError(
-            f"cardinality must be 'parity' or 'off', got {cardinality!r}"
-        )
+    check_cardinality(cardinality)
     if dimensions is None:
         want = set(_ALL_DIMENSIONS)
     else:

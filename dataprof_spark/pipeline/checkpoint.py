@@ -13,9 +13,9 @@ Mechanism (Iceberg-shaped, parquet-backed in this sandbox):
   (the parquet twin of Iceberg's overwrite-by-partition) — the input
   is scanned exactly once per resume attempt, never once per bucket;
 - per-partition manifest counters (docs in/out, drop-reason histogram,
-  scrub counts) come from a constant number of column-pruned,
-  partition-pruned aggregations over the freshly WRITTEN output — not
-  from re-scanning the input;
+  scrub counts) come from ONE column-pruned, partition-pruned
+  aggregation over the freshly WRITTEN output — not from re-scanning
+  the input;
 - a manifest row (JSON file per partition — the sandbox twin of an
   Iceberg snapshot/metrics table) records the counters plus the
   n_buckets the run was hashed with; resume fails fast if re-invoked
@@ -37,6 +37,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataprof_spark.core.scrub import SCRUB_ORDER
 from dataprof_spark.operators import gates
 
 N_BUCKETS_DEFAULT = 8
@@ -135,6 +136,42 @@ def _write_manifest(out_dir: str, row: dict) -> None:
     os.replace(tmp, path)  # atomic commit
 
 
+def manifest_counters(written: DataFrame) -> dict[int, dict]:
+    """Per-``part_key`` manifest counters of a decisions table in ONE
+    aggregation: ``docs_in``, ``docs_out``, ``drop_reason_counts`` and
+    ``scrub_counts``.
+
+    Grouping by (part_key, drop_reason) gives the drop-reason
+    histogram directly; ``docs_in`` is the groups' total count and
+    ``docs_out`` the NULL-reason group's count (``keep`` is
+    ``drop_reason IS NULL`` by construction). Each scrub key is summed
+    per group and the groups' sums are added on the driver; as with
+    SQL SUM, a key whose values are all NULL gives None."""
+    out: dict[int, dict] = {}
+    for r in (
+        written.groupBy("part_key", "drop_reason")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            *(F.sum(F.col("scrub_counts")[k]).alias(k) for k in SCRUB_ORDER),
+        )
+        .collect()
+    ):
+        c = out.setdefault(int(r["part_key"]), {
+            "docs_in": 0, "docs_out": 0, "drop_reason_counts": {},
+            "scrub_counts": dict.fromkeys(SCRUB_ORDER),
+        })
+        c["docs_in"] += r["n"]
+        if r["drop_reason"] is None:
+            c["docs_out"] += r["n"]
+        else:
+            c["drop_reason_counts"][r["drop_reason"]] = r["n"]
+        sums = c["scrub_counts"]
+        for k in SCRUB_ORDER:
+            if r[k] is not None:
+                sums[k] = (sums[k] or 0) + r[k]
+    return out
+
+
 def run(
     pages: DataFrame,
     out_dir: str,
@@ -153,6 +190,10 @@ def run(
     the first K pending partitions — used by tests to simulate a
     killed run mid-way; it narrows the single job's filter, it does
     not add jobs.
+
+    A manifest row's ``bytes_in`` is the size of the parquet files
+    written for its partition: compressed bytes (zstd, see
+    session.get_spark), not the input's bytes.
     """
     t0 = time.perf_counter()
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -212,10 +253,9 @@ def run(
     else:
         _write()
 
-    # Manifest counters: a CONSTANT number of small aggregations over
-    # the freshly written output (partition-pruned to pending buckets,
-    # column-pruned to the counter columns) — never a re-scan of the
-    # input, never a per-bucket job loop.
+    # Manifest counters: ONE aggregation over the freshly written
+    # output (partition-pruned to pending buckets) — never a re-scan
+    # of the input, never a per-bucket job loop.
     spark = pages.sparkSession
     # explicit schema: an EMPTY input writes no parquet files at all
     # (only _SUCCESS), and schema inference over that dir raises
@@ -226,29 +266,7 @@ def run(
             F.col("part_key").isin(pending)
         )
     )
-    base = {
-        int(r["part_key"]): {"docs_in": r["docs_in"], "docs_out": r["docs_out"]}
-        for r in written.groupBy("part_key").agg(
-            F.count(F.lit(1)).alias("docs_in"),
-            F.sum(F.col("keep").cast("long")).alias("docs_out"),
-        ).collect()
-    }
-    hists: dict[int, dict[str, int]] = {k: {} for k in base}
-    for r in (
-        written.filter(~F.col("keep"))
-        .groupBy("part_key", "drop_reason")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    ):
-        hists[int(r["part_key"])][r["drop_reason"]] = r["n"]
-    scrubs: dict[int, dict[str, int]] = {k: {} for k in base}
-    for r in (
-        written.select("part_key", F.explode("scrub_counts").alias("k", "v"))
-        .groupBy("part_key", "k")
-        .agg(F.sum("v").alias("n"))
-        .collect()
-    ):
-        scrubs[int(r["part_key"])][r["k"]] = r["n"]
+    counters = manifest_counters(written)
 
     wall_ms = int((time.perf_counter() - t0) * 1000)
     rows = []
@@ -263,17 +281,16 @@ def run(
             if os.path.isdir(pdir)
             else 0
         )
-        counters = base.get(k, {"docs_in": 0, "docs_out": 0})
         row = {
             "run_id": run_id,
             "partition_id": k,
             "n_buckets": n_buckets,
             "input_fingerprint": fp,
             "input_snapshot_id": 0,
-            "docs_in": counters["docs_in"],
-            "docs_out": counters["docs_out"],
-            "drop_reason_counts": hists.get(k, {}),
-            "scrub_counts": scrubs.get(k, {}),
+            **counters.get(k, {
+                "docs_in": 0, "docs_out": 0,
+                "drop_reason_counts": {}, "scrub_counts": {},
+            }),
             "bytes_in": bytes_in,
             # run-level wall clock recorded on every row (the single
             # job processes all pending partitions together)

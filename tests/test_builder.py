@@ -274,5 +274,8 @@ def test_cardinality_tier_threads_through_builder(orders_df):
     for tier in ("cheap", "coarse"):
         with pytest.raises(ValueError, match="cardinality tier"):
             facade.Profiler().cardinality(tier)
-    with pytest.raises(ValueError, match="cardinality must be"):
-        facade.profile(orders_df, quality=False, cardinality="coarse")
+    # the schema pack alone passes no tier on to an operator, so
+    # facade.profile must refuse it itself
+    for packs in ({"quality": False}, {"metrics": ["schema"]}):
+        with pytest.raises(ValueError, match="cardinality must be"):
+            facade.profile(orders_df, cardinality="coarse", **packs)

@@ -198,3 +198,94 @@ def test_empty_input_writes_zero_count_manifests(spark, tmp_path):
     assert all(r["docs_in"] == 0 and r["docs_out"] == 0 for r in rows)
     # resume is a no-op: everything already done
     assert checkpoint.run(pages, str(tmp_path / "empty"), n_buckets=4) == []
+
+
+def _old_counter_queries(written) -> dict[int, dict]:
+    """The manifest counters as three separate aggregations (count and
+    sum(keep); the drop-reason histogram; the exploded scrub sums) —
+    the definition manifest_counters must reproduce in one pass."""
+    import pyspark.sql.functions as F
+
+    out = {
+        int(r["part_key"]): {
+            "docs_in": r["docs_in"], "docs_out": r["docs_out"],
+            "drop_reason_counts": {}, "scrub_counts": {},
+        }
+        for r in written.groupBy("part_key").agg(
+            F.count(F.lit(1)).alias("docs_in"),
+            F.sum(F.col("keep").cast("long")).alias("docs_out"),
+        ).collect()
+    }
+    for r in (
+        written.filter(~F.col("keep"))
+        .groupBy("part_key", "drop_reason")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    ):
+        out[int(r["part_key"])]["drop_reason_counts"][r["drop_reason"]] = (
+            r["n"]
+        )
+    for r in (
+        written.select("part_key", F.explode("scrub_counts").alias("k", "v"))
+        .groupBy("part_key", "k")
+        .agg(F.sum("v").alias("n"))
+        .collect()
+    ):
+        out[int(r["part_key"])]["scrub_counts"][r["k"]] = r["n"]
+    return out
+
+
+def test_manifest_counters_equal_the_three_old_queries(spark, tmp_path):
+    """The one-pass manifest counters equal the three aggregations
+    they replace, recomputed over the written decisions."""
+    pages = fixtures.pages_df(spark, ROWS)
+    out = str(tmp_path / "counters")
+    rows = checkpoint.run(pages, out, n_buckets=4)
+    want = _old_counter_queries(checkpoint.read_decisions(spark, out))
+    got = {
+        r["partition_id"]: {
+            k: r[k] for k in (
+                "docs_in", "docs_out", "drop_reason_counts", "scrub_counts",
+            )
+        }
+        for r in rows
+    }
+    assert got == want
+    # the fixture exercises every counter: drops, and PII scrubs
+    assert any(v["drop_reason_counts"] for v in got.values())
+    assert sum(v["scrub_counts"]["email"] for v in got.values()) > 0
+
+
+def test_manifest_counters_all_null_scrub_key_is_none(spark):
+    """SUM over only-NULL values is NULL: a scrub key whose values are
+    all NULL in a partition counts None, as the exploded sum did, and
+    a key with some values sums the non-NULL ones."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("part_key", T.LongType()),
+        T.StructField("keep", T.BooleanType()),
+        T.StructField("drop_reason", T.StringType()),
+        T.StructField(
+            "scrub_counts", T.MapType(T.StringType(), T.IntegerType())
+        ),
+    ])
+
+    def counts(email, phone):
+        return {"email": email, "phone": phone, "ip": None, "blocklist": 0}
+
+    df = spark.createDataFrame(
+        [
+            (0, True, None, counts(1, None)),
+            (0, False, "too_short", counts(None, None)),
+            (0, False, "too_short", counts(2, None)),
+            (1, False, "lang_mismatch", counts(None, 3)),
+        ],
+        schema,
+    )
+    got = checkpoint.manifest_counters(df)
+    assert got == _old_counter_queries(df)
+    assert got[0]["scrub_counts"] == {
+        "email": 3, "phone": None, "ip": None, "blocklist": 0,
+    }
+    assert got[1]["docs_out"] == 0

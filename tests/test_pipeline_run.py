@@ -46,3 +46,51 @@ def test_main_end_to_end(spark, tmp_path, capsys):
     )
     summary2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary2["partitions_processed"] == 0
+
+
+def _codecs(path) -> set[str]:
+    """Compression codec of every column chunk of every parquet file
+    under `path`."""
+    import pathlib
+
+    import pyarrow.parquet as pq
+
+    files = sorted(pathlib.Path(path).rglob("*.parquet"))
+    assert files, path
+    out = set()
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            out |= {rg.column(c).compression for c in range(rg.num_columns)}
+    return out
+
+
+def test_outputs_are_zstd(spark, tmp_path, capsys):
+    """Every product write is zstd parquet (session.get_spark sets the
+    codec): checkpoint.run's decisions, checkpoint.compact's rewrite
+    of them, and the phase-2 dedup output that main writes."""
+    from dataprof_spark.pipeline import checkpoint
+
+    src = tmp_path / "pages_in"
+    fixtures.pages_df(spark, fixtures.generate_pages(n=120)).write.parquet(
+        str(src)
+    )
+    out_dir = tmp_path / "out"
+    rc = run.main(
+        [
+            "--input", str(src),
+            "--output", str(out_dir),
+            "--buckets", "3",
+            "--dedup", "near",
+        ]
+    )
+    assert rc == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    decisions = out_dir / "decisions"
+    written = set(decisions.rglob("*.parquet"))
+    assert _codecs(decisions) == {"ZSTD"}
+    assert _codecs(summary["dedup"]["output"]) == {"ZSTD"}
+    checkpoint.compact(spark, str(out_dir))
+    assert set(decisions.rglob("*.parquet")).isdisjoint(written)
+    assert _codecs(decisions) == {"ZSTD"}
