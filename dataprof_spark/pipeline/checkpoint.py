@@ -23,8 +23,8 @@ Mechanism (Iceberg-shaped, parquet-backed in this sandbox):
   duplicate/lose documents);
 - resume() lists partitions with no ``done`` manifest and reprocesses
   only those. Safe because decisions are pure per-document functions
-  (core/gates.py) and rows are sorted within partitions — a retried
-  partition rewrites identical bytes.
+  (core/gates.py) and every writer sorts rows by one write order,
+  ``WRITE_ORDER`` — a retried partition rewrites identical bytes.
 """
 
 from __future__ import annotations
@@ -41,6 +41,15 @@ from dataprof_spark.core.scrub import SCRUB_ORDER
 from dataprof_spark.operators import gates
 
 N_BUCKETS_DEFAULT = 8
+
+# The decisions table's write order (the twin of an Iceberg table sort
+# order), used by every writer of the table: checkpoint.run, compact
+# and the phase-2 write in pipeline/run.py. Ascending sorts put NULL
+# first, so within a partition the kept rows (drop_reason NULL) come
+# first and then each drop reason's rows, each group ordered by url.
+# Rows with the same gate outcome compress better side by side, and a
+# reader filtering on `keep` can skip whole row groups by their stats.
+WRITE_ORDER = ("part_key", "drop_reason", "url")
 
 
 class BucketCountMismatch(ValueError):
@@ -191,7 +200,8 @@ def run(
     killed run mid-way; it narrows the single job's filter, it does
     not add jobs.
 
-    A manifest row's ``bytes_in`` is the size of the parquet files
+    Each partition is one file with its rows in ``WRITE_ORDER``. A
+    manifest row's ``bytes_in`` is the size of the parquet files
     written for its partition: compressed bytes (zstd, see
     session.get_spark), not the input's bytes.
     """
@@ -228,7 +238,7 @@ def run(
 
     # ONE write job: hash-repartition on part_key so each bucket is a
     # single task → a single deterministic file per partition dir;
-    # sortWithinPartitions gives byte-identical content on retry.
+    # sorting by WRITE_ORDER gives byte-identical content on retry.
     # Dynamic partition overwrite = Iceberg overwrite-by-partition:
     # only the pending part_key dirs are replaced, done ones untouched.
     dest = os.path.join(out_dir, "decisions")
@@ -236,7 +246,7 @@ def run(
     def _write() -> None:
         (
             decisions.repartition(len(pending), "part_key")
-            .sortWithinPartitions("part_key", "url")
+            .sortWithinPartitions(*WRITE_ORDER)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("part_key")
@@ -328,18 +338,19 @@ def compact(
 ) -> int:
     """Small-file compaction for the decisions table (the Iceberg
     `rewrite_data_files` twin): rewrite each part_key directory into
-    ceil(rows / target) files, preserving the sort-by-url determinism.
-    Long-running ingest accumulates one file per resume attempt per
-    partition; compaction restores large-scan-friendly file sizes.
-    ONE read + ONE dynamic-overwrite write; manifests are untouched
-    (counts are unchanged by construction). Returns files after."""
+    about ceil(rows / target) files, each sorted by ``WRITE_ORDER`` as
+    checkpoint.run writes them. Long-running ingest accumulates one
+    file per resume attempt per partition; compaction restores
+    large-scan-friendly file sizes. Files are sized from the
+    manifests' ``docs_in``, so the table is read ONCE, by the
+    dynamic-overwrite write itself; manifests are untouched (counts
+    are unchanged by construction). Returns files after."""
     import glob as _glob
 
     dest = os.path.join(out_dir, "decisions")
-    df = spark.read.parquet(dest)
-    n_parts = df.select("part_key").distinct().count()
-    rows_total = df.count()
-    per_part = max(1, rows_total // max(1, n_parts))
+    docs = [r["docs_in"] for r in _read_manifests(out_dir) if r["docs_in"]]
+    n_parts = max(1, len(docs))
+    per_part = max(1, sum(docs) // n_parts)
     files_per_part = max(1, -(-per_part // target_records_per_file))
     # hash-repartition BY part_key ALONE put each bucket's every row
     # into ONE task no matter how many partitions were requested (the
@@ -350,14 +361,13 @@ def compact(
     # partitionBy still routes rows to their part_key dir, and
     # maxRecordsPerFile does the file sizing.
     (
-        df.withColumn(
+        spark.read.parquet(dest)
+        .withColumn(
             "__slot",
             F.pmod(F.xxhash64("url"), F.lit(files_per_part)),
         )
-        .repartition(
-            max(1, n_parts * files_per_part), "part_key", "__slot"
-        )
-        .sortWithinPartitions("part_key", "url")
+        .repartition(n_parts * files_per_part, "part_key", "__slot")
+        .sortWithinPartitions(*WRITE_ORDER)
         .drop("__slot")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

@@ -120,7 +120,13 @@ def main(argv: list[str] | None = None) -> int:
                 dec, threshold=args.near_threshold
             )
         dedup_out = args.output.rstrip("/") + "_deduped"
-        dec.write.mode("overwrite").parquet(dedup_out)
+        # phase 2 keeps the decisions table's write order, so the rows
+        # its dedup demotes cluster by their new drop reason too
+        (
+            dec.sortWithinPartitions(*checkpoint.WRITE_ORDER)
+            .write.mode("overwrite")
+            .parquet(dedup_out)
+        )
         final = spark.read.parquet(dedup_out)
         summary["dedup"] = {
             "mode": args.dedup,

@@ -77,19 +77,22 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         # zstd is Iceberg's default data-file codec since 1.4
         # (write.parquet.compression-codec); Spark's default is
-        # snappy, which compresses scrubbed_text (169 of the decisions
-        # table's 187 B/doc) poorly. Every product write goes through
-        # a session built here, so this one line sets the codec for
-        # all of them. Decisions of the dedup corpus, 4 writes each:
-        #   codec     B/doc  write CPU
-        #   snappy    186.9  1.0-1.2 s
-        #   zstd 1    136.8  1.2-1.45 s
-        #   zstd 3    131.5  1.1-1.25 s   <- Parquet's default level
-        #   zstd 9    123.4  1.2-1.5 s
-        #   zstd 15   113.9  6.6-7.1 s
-        # Level 3 takes most of the gain at snappy's CPU cost, so no
-        # level is set.
+        # snappy, which compresses scrubbed_text poorly. Level 9 is
+        # the twin of Iceberg's write.parquet.compression-level.
+        # Every product write goes through a session built here, so
+        # these two lines set codec and level for all of them.
+        # Backfill decisions of 10k seeded pages, Spark's writer, 4
+        # vCPU, write CPU the median of 11 warm writes:
+        #   row order        zstd level  B/doc   write CPU
+        #   url              3           126.56  1.76 s
+        #   drop_reason,url  3           121.46  1.67 s
+        #   url              9           118.34  -
+        #   drop_reason,url  6           116.55  1.98 s
+        #   drop_reason,url  9           113.36  2.16 s
+        # (row order: checkpoint.WRITE_ORDER within a part_key.)
+        # Level 12 reaches 107 B/doc at about 2x level 3's write CPU.
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.hadoop.parquet.compression.codec.zstd.level", "9")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

@@ -184,6 +184,110 @@ def test_compact_preserves_content(spark, tmp_path):
     assert _table_hash(spark, out) == before_hash
 
 
+def _files_in_order(out_dir) -> list[list[tuple]]:
+    """(drop_reason, url) of each decisions file's rows, in file order;
+    asserts each file's rows follow the table's write order."""
+    import pyarrow.parquet as pq
+
+    files = sorted(glob.glob(f"{out_dir}/decisions/part_key=*/*.parquet"))
+    assert files
+    out = []
+    for f in files:
+        t = pq.read_table(f, columns=["drop_reason", "url"])
+        rows = list(zip(t["drop_reason"].to_pylist(), t["url"].to_pylist()))
+        # drop_reason NULLS FIRST (kept rows lead), then url
+        assert rows == sorted(
+            rows, key=lambda r: (r[0] is not None, r[0] or "", r[1])
+        ), f
+        out.append(rows)
+    return out
+
+
+def test_files_are_written_in_drop_reason_url_order(spark, tmp_path):
+    """Every file that checkpoint.run writes, across a kill and a
+    resume, and every file compact rewrites has its rows sorted by
+    (drop_reason NULLS FIRST, url)."""
+    pages = fixtures.pages_df(spark, ROWS)
+    out = str(tmp_path / "order")
+    checkpoint.run(pages, out, n_buckets=4, max_partitions=2)
+    checkpoint.run(pages, out, n_buckets=4)
+    files = _files_in_order(out)
+    assert len(files) == 4
+    # each file holds kept rows and more than one drop reason, so the
+    # order is not trivially met
+    assert all(len({r[0] for r in rows}) > 2 for rows in files)
+    before = _table_hash(spark, out)
+    # ~75 rows per partition at 30 per file: several files each
+    checkpoint.compact(spark, out, target_records_per_file=30)
+    assert len(_files_in_order(out)) > 4
+    assert _table_hash(spark, out) == before
+
+
+def test_at_most_one_mixed_keep_row_group_per_file(spark, tmp_path):
+    """With small row groups, the write order leaves at most one row
+    group per file whose `keep` statistics mix true and false: the
+    kept rows lead and then only dropped rows follow, so a reader
+    filtering on `keep` skips the other row groups by their stats."""
+    import pyarrow.parquet as pq
+
+    def check(out):
+        files = glob.glob(f"{out}/decisions/part_key=*/*.parquet")
+        assert files
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            keep = md.schema.names.index("keep")
+            stats = [
+                md.row_group(g).column(keep).statistics
+                for g in range(md.num_row_groups)
+            ]
+            assert len(stats) > 3, (f, len(stats))
+            assert all(s.has_min_max for s in stats)
+            assert sum(s.min != s.max for s in stats) <= 1, f
+
+    # 4 KiB row groups, their size checked every 4 rows. Parquet
+    # 1.16 (Spark 4.1) reads that bound from the page-size key; later
+    # releases read the block-size key.
+    small = {
+        "parquet.block.size": "4096",
+        "parquet.block.size.row.check.min": "4",
+        "parquet.page.size.row.check.min": "4",
+    }
+    saved = {k: spark.conf.get(k, None) for k in small}
+    for k, v in small.items():
+        spark.conf.set(k, v)
+    try:
+        out = str(tmp_path / "rowgroups")
+        checkpoint.run(fixtures.pages_df(spark, ROWS), out, n_buckets=2)
+        check(out)
+        checkpoint.compact(spark, out, target_records_per_file=10_000)
+        check(out)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_compact_sizes_files_from_manifests(spark, tmp_path):
+    """compact sizes its files from the manifests' docs_in, so the
+    only jobs it runs are its rewrite's. Sizing by scans instead
+    (select("part_key").distinct().count() and count()) ran 5 more
+    jobs on this table under AQE: 8 in all, against 3 now."""
+    pages = fixtures.pages_df(spark, ROWS)
+    out = str(tmp_path / "cmp_jobs")
+    checkpoint.run(pages, out, n_buckets=2, max_partitions=1)
+    checkpoint.run(pages, out, n_buckets=2)
+    jobs = _n_jobs(
+        spark,
+        lambda: checkpoint.compact(spark, out, target_records_per_file=60),
+    )
+    assert jobs <= 3, jobs
+    # ~150 rows per partition at 60 per file
+    files = glob.glob(f"{out}/decisions/part_key=*/*.parquet")
+    assert len(files) >= 6, len(files)
+
+
 def test_empty_input_writes_zero_count_manifests(spark, tmp_path):
     """An empty input (e.g. an empty day-partition of the crawl) must
     complete and mark every bucket done with zero counts — not die on

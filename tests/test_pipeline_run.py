@@ -94,3 +94,30 @@ def test_outputs_are_zstd(spark, tmp_path, capsys):
     checkpoint.compact(spark, str(out_dir))
     assert set(decisions.rglob("*.parquet")).isdisjoint(written)
     assert _codecs(decisions) == {"ZSTD"}
+
+
+def test_default_zstd_level_beats_level_3(spark, tmp_path):
+    """session.get_spark sets the zstd level (9): the session's default
+    write of the fixture decisions is strictly smaller than the same
+    rows written at Parquet's default level, 3."""
+    import pathlib
+
+    from dataprof_spark.operators import gates
+
+    rows = (
+        gates.decide(fixtures.pages_df(spark, fixtures.generate_pages(n=300)))
+        .repartition(1)
+        .sortWithinPartitions("url")
+        .localCheckpoint()
+    )
+
+    def size(path, **opts) -> int:
+        rows.write.options(**opts).parquet(str(tmp_path / path))
+        return sum(
+            f.stat().st_size
+            for f in pathlib.Path(tmp_path / path).glob("*.parquet")
+        )
+
+    default = size("default")
+    level3 = size("level3", **{"parquet.compression.codec.zstd.level": "3"})
+    assert 0 < default < level3, (default, level3)
