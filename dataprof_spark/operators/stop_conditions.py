@@ -1,11 +1,11 @@
 """Composable stop conditions (reference parity:
 crates/dataprof-core/src/stop_condition.rs:14-117).
 
-The reference stops a streaming single-node profile mid-file; the
-Spark recast stops an INCREMENTAL multi-file profile between chunks,
-where a chunk is the natural Spark granularity — one input file (or
-one microbatch). The condition algebra and its two subtle contracts
-are ported exactly:
+The reference stops a streaming single-node profile mid-file. A
+Spark scan has no chunk loop to stop, so ``facade.Profiler.stop_when``
+applies a condition through its row bound (``max_rows()``) and records
+it otherwise. The condition algebra and its two subtle contracts are
+ported exactly:
 
 - ``max_rows()``: the row count at which the condition can first fire
   on rows alone — ``Any`` takes the MIN of row-triggerable children,
@@ -14,10 +14,11 @@ are ported exactly:
 - ``is_row_limit_only()``: whether a parser that can only cap rows
   may enforce this condition without a real evaluator.
 
-SchemaStable delegates to the existing drift tracker
-(streaming/drift.py); MemoryPressure is evaluated from a caller-fed
-fraction (Spark executors manage their own memory — the knob exists
-for API parity and is fed from the driver's view when used).
+SchemaStable counts the rows since the caller last reported a schema
+change (``StopEvaluator.update(schema_changed=True)``); MemoryPressure
+is evaluated from a caller-fed fraction (Spark executors manage
+their own memory — the knob exists for API parity and is fed from the
+driver's view when used).
 """
 
 from __future__ import annotations
@@ -214,84 +215,3 @@ class StopEvaluator:
     def should_stop(self) -> bool:
         return self.triggered_reason is not None
 
-
-def profile_files_incrementally(
-    spark,
-    paths: list[str],
-    condition: StopCondition,
-    reader=None,
-    estimated_total_rows: int | None = None,
-    progress_sink=None,
-):
-    """Chunk-at-a-time incremental profile driver: one FILE per chunk
-    (Spark's natural streaming granularity — also what
-    maxFilesPerTrigger microbatching yields). Stops BETWEEN chunks
-    when the condition fires, returning the union DataFrame of the
-    consumed prefix plus provenance — the exact contract of the
-    reference's chunked engine, including "a condition met on the
-    last chunk is not a truncation" (files never read are the only
-    truncation evidence).
-
-    Scale note: this is the incremental/early-stop path for
-    profiling; a full-corpus query should just `spark.read` the whole
-    glob and let Catalyst parallelize.
-    """
-    import os
-
-    from dataprof_spark.streaming import drift
-
-    reader = reader or (lambda p: spark.read.parquet(p))
-    ev = StopEvaluator(condition, estimated_total_rows)
-    consumed = []
-    prev_fp = None
-    stopped_early = False
-    if progress_sink:
-        # reference ProgressEvent lifecycle: Started once before data
-        progress_sink.started(estimated_total_rows=estimated_total_rows)
-    for i, p in enumerate(paths):
-        df = reader(p)
-        consumed.append(df)
-        fp = drift.schema_fingerprint(drift.infer_batch_types(df))
-        changed = prev_fp is not None and fp != prev_fp
-        prev_fp = fp
-        n = df.count()
-        nbytes = os.path.getsize(p) if os.path.exists(p) else 0
-        ev.update(
-            chunk_rows=n,
-            chunk_bytes=nbytes,
-            schema_changed=changed,
-        )
-        if progress_sink:
-            if i == 0:
-                progress_sink.schema(df.columns)
-            if changed:
-                progress_sink.warning(f"schema changed at chunk {i}: {p}")
-            pct = (
-                round(100.0 * ev.state.rows / estimated_total_rows, 1)
-                if estimated_total_rows else None
-            )
-            progress_sink.chunk(
-                rows_processed=ev.state.rows,
-                bytes_consumed=ev.state.bytes,
-                percentage=pct,
-            )
-        if ev.should_stop and i < len(paths) - 1:
-            stopped_early = True
-            break
-    if progress_sink:
-        progress_sink.finished(
-            total_rows=ev.state.rows, total_bytes=ev.state.bytes,
-            truncated=stopped_early,
-        )
-    out = consumed[0]
-    for df in consumed[1:]:
-        out = out.unionByName(df, allowMissingColumns=True)
-    return {
-        "df": out,
-        "rows": ev.state.rows,
-        "bytes": ev.state.bytes,
-        "files_consumed": len(consumed),
-        "files_total": len(paths),
-        "truncated": stopped_early,
-        "truncation_reason": ev.triggered_reason if stopped_early else None,
-    }

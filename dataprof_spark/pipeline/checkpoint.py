@@ -25,6 +25,9 @@ Mechanism (Iceberg-shaped, parquet-backed in this sandbox):
   only those. Safe because decisions are pure per-document functions
   (core/gates.py) and every writer sorts rows by one write order,
   ``WRITE_ORDER`` — a retried partition rewrites identical bytes.
+
+``run`` is the one writer of decisions and their counters: the gated
+stream (streaming/metrics.py) calls it once per micro-batch.
 """
 
 from __future__ import annotations
@@ -188,7 +191,6 @@ def run(
     n_buckets: int = N_BUCKETS_DEFAULT,
     ts_col: str | None = "warc_ts",
     max_partitions: int | None = None,
-    progress_sink=None,
 ) -> list[dict]:
     """Process all not-yet-done partitions in ONE write job; returns
     the new manifest rows.
@@ -223,13 +225,7 @@ def run(
     if max_partitions is not None:
         pending = pending[:max_partitions]
     if not pending:
-        if progress_sink:
-            progress_sink.started()
-            progress_sink.finished(total_rows=0, truncated=False)
         return []
-    if progress_sink:
-        progress_sink.started()
-        progress_sink.schema(pages.columns)
 
     keyed = with_part_key(pages, n_buckets)
     if done or max_partitions is not None:
@@ -242,26 +238,14 @@ def run(
     # Dynamic partition overwrite = Iceberg overwrite-by-partition:
     # only the pending part_key dirs are replaced, done ones untouched.
     dest = os.path.join(out_dir, "decisions")
-
-    def _write() -> None:
-        (
-            decisions.repartition(len(pending), "part_key")
-            .sortWithinPartitions(*WRITE_ORDER)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("part_key")
-            .parquet(dest)
-        )
-
-    if progress_sink:
-        # chunk events WHILE the single distributed job runs, from
-        # SparkStatusTracker (PySpark's listener-style monitoring API)
-        from dataprof_spark.progress import JobProgressPoller
-
-        with JobProgressPoller(pages.sparkSession, progress_sink):
-            _write()
-    else:
-        _write()
+    (
+        decisions.repartition(len(pending), "part_key")
+        .sortWithinPartitions(*WRITE_ORDER)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("part_key")
+        .parquet(dest)
+    )
 
     # Manifest counters: ONE aggregation over the freshly written
     # output (partition-pruned to pending buckets) — never a re-scan
@@ -309,15 +293,6 @@ def run(
         }
         _write_manifest(out_dir, row)
         rows.append(row)
-    if progress_sink:
-        # truncated = pending partitions exist that this run did not
-        # process (the max_partitions kill-simulation path)
-        left_over = n_buckets - len(done) - len(pending)
-        progress_sink.finished(
-            total_rows=sum(r["docs_in"] for r in rows),
-            total_bytes=sum(r["bytes_in"] for r in rows),
-            truncated=left_over > 0,
-        )
     return rows
 
 

@@ -14,29 +14,17 @@ per-job progress comes from SparkStatusTracker — the public
 monitoring API the Spark UI itself uses — polled from a daemon
 thread while the job runs (JobProgressPoller). That is the PySpark
 idiom for listener-style progress (a JVM SparkListener subclass is
-not implementable from Python). Events can additionally be appended
-to the pipeline's metrics table (MetricsTableSink) so a run's
-progress rows live next to its per-partition lineage counters and
-survive the driver.
+not implementable from Python). A batch run's durable counters are
+its checkpoint manifests (pipeline/checkpoint.py); these events
+serve a live caller, ``facade.profile(on_progress=)``.
 """
 
 from __future__ import annotations
 
 import threading
 import time
-from dataclasses import asdict, dataclass
-from typing import Any, Callable
-
-# explicit schema so every append is parquet-compatible with the last
-# (an all-None column would otherwise be written as null type and
-# break schema merge on read)
-_ROW_SCHEMA = (
-    "kind string, rows_processed long, bytes_consumed long, "
-    "elapsed_s double, speed_rows_per_s double, percentage double, "
-    "estimated_total_rows long, truncated boolean, "
-    "peak_memory_mb double, message string, run_id string"
-)
-_ROW_FIELDS = [f.split()[0] for f in _ROW_SCHEMA.split(", ")]
+from dataclasses import dataclass
+from typing import Callable
 
 
 @dataclass
@@ -52,15 +40,6 @@ class ProgressEvent:
     truncated: bool = False
     peak_memory_mb: float | None = None
     message: str | None = None
-
-    def to_row(self, run_id: str) -> dict[str, Any]:
-        """Flat metrics-table row (column_names folded into message)."""
-        d = asdict(self)
-        cols = d.pop("column_names")
-        if cols and not d.get("message"):
-            d["message"] = ",".join(cols)
-        d["run_id"] = run_id
-        return d
 
 
 def _peak_rss_mb() -> float | None:
@@ -94,33 +73,32 @@ class ProgressSink:
         self._t0 = time.perf_counter()
         self._last_chunk = -1e9
         # emits arrive from two threads (JobProgressPoller's daemon
-        # thread + the main thread's lifecycle events); RLock so a
-        # subclass emit() may call back into locked methods (ADVICE r4)
+        # thread + the main thread's lifecycle events); the callback
+        # runs under the lock, and an RLock lets it emit in turn
         self._lock = threading.RLock()
 
     def emit(self, ev: ProgressEvent) -> None:
         with self._lock:
-            self._emit_locked(ev)
-
-    def _emit_locked(self, ev: ProgressEvent) -> None:
-        now = time.perf_counter()
-        if ev.kind == "chunk":
-            if now - self._last_chunk < self.min_interval_s:
-                return
-            self._last_chunk = now
-        if not ev.elapsed_s:
-            ev.elapsed_s = round(now - self._t0, 3)
-        if (
-            ev.kind == "chunk"
-            and ev.speed_rows_per_s is None
-            and ev.elapsed_s > 0
-        ):
-            ev.speed_rows_per_s = round(ev.rows_processed / ev.elapsed_s, 1)
-        if ev.kind == "finished" and ev.peak_memory_mb is None:
-            ev.peak_memory_mb = _peak_rss_mb()
-        self.events.append(ev)
-        if self.callback:
-            self.callback(ev)
+            now = time.perf_counter()
+            if ev.kind == "chunk":
+                if now - self._last_chunk < self.min_interval_s:
+                    return
+                self._last_chunk = now
+            if not ev.elapsed_s:
+                ev.elapsed_s = round(now - self._t0, 3)
+            if (
+                ev.kind == "chunk"
+                and ev.speed_rows_per_s is None
+                and ev.elapsed_s > 0
+            ):
+                ev.speed_rows_per_s = round(
+                    ev.rows_processed / ev.elapsed_s, 1
+                )
+            if ev.kind == "finished" and ev.peak_memory_mb is None:
+                ev.peak_memory_mb = _peak_rss_mb()
+            self.events.append(ev)
+            if self.callback:
+                self.callback(ev)
 
     # convenience constructors -----------------------------------------
     def started(
@@ -159,57 +137,6 @@ class ProgressSink:
 
     def warning(self, message: str) -> None:
         self.emit(ProgressEvent("warning", message=message))
-
-
-class MetricsTableSink(ProgressSink):
-    """ProgressSink that ALSO appends each event as a row of the
-    pipeline metrics table (same parquet dir layout as
-    streaming/metrics.py), so progress lineage survives the driver
-    and reconciles against the per-partition manifests. Appends are
-    tiny single-row writes; chunk events are rate-limited upstream."""
-
-    def __init__(
-        self,
-        spark,
-        metrics_dir: str,
-        run_id: str,
-        callback: Callable[[ProgressEvent], None] | None = None,
-        min_interval_s: float = 0.5,
-    ):
-        super().__init__(callback=callback, min_interval_s=min_interval_s)
-        self.spark = spark
-        self.metrics_dir = metrics_dir
-        self.run_id = run_id
-        self._buffer: list[dict] = []
-
-    def emit(self, ev: ProgressEvent) -> None:
-        with self._lock:
-            n_before = len(self.events)
-            self._emit_locked(ev)
-            if len(self.events) == n_before:  # rate-limited out
-                return
-            self._buffer.append(self.events[-1].to_row(self.run_id))
-        # one append per lifecycle event; chunk rows are buffered and
-        # land with the next non-chunk event (bounded write count)
-        if ev.kind != "chunk":
-            self.flush()
-
-    def flush(self) -> None:
-        # swap the buffer atomically so chunk rows appended by the
-        # poller thread mid-flush land in the NEXT flush, never dropped
-        # (ADVICE r4); the Spark write runs outside the lock
-        with self._lock:
-            buf, self._buffer = self._buffer, []
-        if not buf:
-            return
-        rows = [tuple(r.get(name) for name in _ROW_FIELDS) for r in buf]
-        self.spark.createDataFrame(rows, _ROW_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.metrics_dir)
-
-
-def read_progress(spark, metrics_dir: str):
-    return spark.read.parquet(metrics_dir)
 
 
 class JobProgressPoller:

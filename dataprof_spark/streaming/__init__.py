@@ -1,2 +1,3 @@
 """Structured Streaming operators: windowed event aggregation with
-watermarks, streaming quality gates, stateful sessionization."""
+watermarks, stateful sessionization, and the gated page stream, which
+runs checkpoint.run once per micro-batch."""

@@ -1,30 +1,26 @@
-"""Streaming twin of the pipeline metrics-table contract.
+"""Gated page stream: the checkpoint pipeline, one micro-batch at a time.
 
-The batch pipeline checkpoints counters (docs in/out, drop-reason
-histogram, scrub counts) into a manifest-backed metrics table
-(pipeline/checkpoint.py, read_metrics). This module gives the
-STREAMING ingest path the same lineage: each microbatch appends its
-decisions to the output table AND one metrics row per (batch,
-drop_reason) to a metrics table — so a killed stream restarts from
-Spark's own checkpoint and the metrics table still reconciles
-exactly with the decisions written (conservation law: docs_in =
-kept + sum(dropped), tested).
+A micro-batch is one more chunk of the batch pipeline, not a second
+system: ``foreachBatch`` hands each batch to ``checkpoint.run``, which
+writes it under ``<out_dir>/batches/<batch_id>/`` as the same decisions
+table (one file per ``part_key``, rows in ``WRITE_ORDER``) and the
+same per-partition manifests (docs in/out, drop-reason histogram,
+scrub counts) as a batch run. There is no stream-only schema; the
+readers below union the per-batch outputs.
 
-Plan shape per microbatch: ONE gates.decide projection over the
-batch (same zero-shuffle cascade as batch mode), one parquet append,
-one tiny groupBy(drop_reason) append. No state store — the gate is
-stateless per document; stateful operators (sessionization, dedup)
-live in sessionize.py / events.py.
+No state store — the gate is stateless per document; stateful
+operators (sessionization, dedup) live in sessionize.py / events.py.
 """
 
 from __future__ import annotations
 
+import json
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from dataprof_spark.operators import gates
+from dataprof_spark.pipeline import checkpoint
 
 PAGE_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, "
@@ -46,68 +42,73 @@ def run_gated_stream(
     run_id: str = "stream",
     timeout_s: int = 300,
 ) -> None:
-    """availableNow gated run: decisions + per-batch metrics written
-    IDEMPOTENTLY from the same foreachBatch.
+    """availableNow gated run: each micro-batch is one
+    ``checkpoint.run`` into ``<out_dir>/batches/<batch_id>``.
 
     foreachBatch is at-least-once: a crash after a write but before
-    the streaming checkpoint commits replays the batch (ADVICE r3).
-    Blind appends would then duplicate rows undetectably and break
-    the conservation law. Both tables therefore carry batch_id and
-    are written with dynamic partition overwrite on it — a replayed
-    batch overwrites its own partition with identical content
-    (gates.decide is deterministic per document), so the net effect
-    is exactly-once regardless of where a kill lands."""
-    decisions_dir = os.path.join(out_dir, "decisions")
-    metrics_dir = os.path.join(out_dir, "metrics")
-    ckpt_dir = os.path.join(out_dir, "_stream_checkpoint")
+    Spark's stream checkpoint commits replays the batch, and a lost
+    stream checkpoint replays every batch. A replay is safe when
+    Spark's file source hands the same files to the same batch id,
+    which it does for an unchanged input directory: the replayed
+    ``checkpoint.run`` finds that batch's manifests, skips its done
+    partitions and overwrites the rest with identical bytes.
+    ``checkpoint.input_fingerprint`` is None for a micro-batch frame
+    (``inputFiles()`` is empty), so ``InputMismatch`` does not guard
+    a batch directory against different input."""
 
     def emit(batch_df: DataFrame, batch_id: int) -> None:
-        out = gates.decide(batch_df).select(
-            "url", "keep", "drop_reason",
-            F.length("scrubbed_text").alias("scrubbed_len"),
-            F.lit(batch_id).alias("batch_id"),
+        checkpoint.run(
+            batch_df,
+            os.path.join(out_dir, "batches", str(batch_id)),
+            run_id=run_id,
         )
-        # cache: decisions parquet + metrics agg share one compute
-        out = out.cache()
-        try:
-            (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(decisions_dir)
-            )
-            (
-                out.groupBy(
-                    F.coalesce("drop_reason", F.lit("kept"))
-                    .alias("reason")
-                )
-                .agg(F.count(F.lit(1)).alias("n_docs"))
-                .withColumn("batch_id", F.lit(batch_id))
-                .withColumn("run_id", F.lit(run_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(metrics_dir)
-            )
-        finally:
-            out.unpersist()
 
     q = (
         stream.writeStream.foreachBatch(emit)
-        .option("checkpointLocation", ckpt_dir)
+        .option("checkpointLocation",
+                os.path.join(out_dir, "_stream_checkpoint"))
         .trigger(availableNow=True)
         .start()
     )
     if not q.awaitTermination(timeout_s):
-        # a timed-out drain must not look like success: the tables
-        # are missing trailing batches (the conservation-law
-        # reconciliation would silently break) and the query keeps
-        # writing into directories the caller is about to read
+        # a timed-out drain must not look like success: trailing
+        # batches are missing and the query keeps writing into
+        # directories the caller is about to read
         q.stop()
         raise TimeoutError(
             f"gated stream drain did not finish within {timeout_s}s"
         )
 
 
+def batch_dirs(out_dir: str) -> dict[int, str]:
+    """``checkpoint.run`` output directory of each micro-batch."""
+    root = os.path.join(out_dir, "batches")
+    if not os.path.isdir(root):
+        return {}
+    return {int(b): os.path.join(root, b) for b in os.listdir(root)}
+
+
 def read_stream_metrics(spark, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, "metrics"))
+    """Every batch's manifest rows, each with its ``batch_id``."""
+    rows = [
+        json.dumps({**r, "batch_id": b})
+        for b, d in sorted(batch_dirs(out_dir).items())
+        for r in checkpoint._read_manifests(d)
+    ]
+    return spark.read.json(spark.sparkContext.parallelize(rows))
+
+
+def read_stream_decisions(spark, out_dir: str) -> DataFrame:
+    """The union of every batch's decisions table. Spark cannot read
+    the batch tables as one path: a glob or a path list over the
+    per-batch ``decisions`` roots fails partition discovery with
+    CONFLICTING_DIRECTORY_STRUCTURES. A batch of zero rows wrote no
+    data file and is skipped."""
+    frames = [
+        checkpoint.read_decisions(spark, d)
+        for _, d in sorted(batch_dirs(out_dir).items())
+        if any(r["docs_in"] for r in checkpoint._read_manifests(d))
+    ]
+    if not frames:
+        raise FileNotFoundError(f"no stream decisions under {out_dir}")
+    return reduce(DataFrame.unionByName, frames)

@@ -133,7 +133,14 @@ def test_near_dup_cache_lifecycle_is_scoped(spark, rows):
     sc = spark.sparkContext
 
     def persisted_count() -> int:
-        return sc._jsc.getPersistentRDDs().size()
+        # SparkContext.persistentRdds holds its RDDs weakly. The public
+        # JavaSparkContext.getPersistentRDDs() returns a strong copy,
+        # and py4j drops the JVM binding of a returned object on its
+        # finalizer thread up to a second after Python lets go. That
+        # copy was the only path from a GC root to the released RDDs
+        # (heap dump of a stuck drain), so each reading pinned them
+        # across the next System.gc() and the drain raced it.
+        return sc._jsc.sc().persistentRdds().size()
 
     def drain(bound: int | None = None) -> int:
         """Release the storage of garbage-collected DataFrames: the

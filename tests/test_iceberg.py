@@ -1,8 +1,8 @@
 """Iceberg runtime round-trip — skipif-gated on the runtime jar.
 
 BASELINE.md's I/O target is an Iceberg table; this sandbox has no
-iceberg-spark-runtime jar (capabilities().iceberg_runtime is False,
-pinned by test_db_sampling), so the pipeline's tested twin is
+iceberg-spark-runtime jar (capabilities().iceberg_runtime is False),
+so the pipeline's tested twin is
 dynamic-partition-overwrite parquet (pipeline/checkpoint.py). These
 tests are the flip-is-free counterpart: the day the environment
 carries the jar, they run the REAL Iceberg path — catalog DDL, append,

@@ -241,3 +241,16 @@ def test_misconfigured_backend_reported(monkeypatch, tmp_path):
     monkeypatch.delenv("DATAPROF_KENLM_MODEL")
     assert models.langid_status() == "standin"
     assert models.perplexity_status() == "standin"
+
+
+def test_capabilities_snapshot():
+    import dataprof_spark as dp
+
+    caps = dp.capabilities()
+    assert caps.version == dp.__version__
+    assert caps.local_parquet and caps.arrow_interop
+    assert caps.pyarrow_installed and caps.pandas_installed
+    # this container: Derby ships with Spark; Iceberg does not
+    assert "derby" in caps.database_connectors
+    assert caps.database is True
+    assert caps.iceberg_runtime is False

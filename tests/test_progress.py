@@ -1,53 +1,31 @@
 """Progress-event surface (reference progress.rs / progress_tracker.rs
-/ memory_sampler.rs): lifecycle ordering, rate limiting, the
-metrics-table sink, mid-run conservation, and live chunk events from
-the StatusTracker poller during checkpoint.run's single write job."""
+/ memory_sampler.rs): lifecycle ordering through facade.profile, rate
+limiting, and live chunk events from the StatusTracker poller while a
+Spark job runs."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
 from dataprof_spark import progress
-from dataprof_spark.operators import stop_conditions as sc
-from dataprof_spark.pipeline import checkpoint, fixtures
-
-ROWS = fixtures.generate_pages(n=240)
 
 
-def _write_chunks(spark, tmp_path, n_files=4, rows_per=50):
-    paths = []
-    for i in range(n_files):
-        p = str(tmp_path / f"chunk{i}.parquet")
-        spark.range(i * rows_per, (i + 1) * rows_per).toDF(
-            "v"
-        ).coalesce(1).write.parquet(p)
-        paths.append(p)
-    return paths
+def test_profile_emits_lifecycle(spark):
+    """facade.profile(on_progress=) drives the sink: started first,
+    schema once with the column names, finished last with the row
+    total, no truncation and a peak-RSS sample."""
+    from dataprof_spark import facade
 
-
-def test_incremental_profile_emits_lifecycle(spark, tmp_path):
-    paths = _write_chunks(spark, tmp_path)
-    sink = progress.ProgressSink(min_interval_s=0.0)
-    res = sc.profile_files_incrementally(
-        spark, paths, sc.MaxRows(120), progress_sink=sink,
-        estimated_total_rows=200,
-    )
-    kinds = [e.kind for e in sink.events]
-    # started first, schema once after the first chunk, finished last
+    events = []
+    facade.profile(spark.range(200).toDF("v"), on_progress=events.append)
+    kinds = [e.kind for e in events]
     assert kinds[0] == "started"
     assert kinds.count("schema") == 1
+    assert events[kinds.index("schema")].column_names == ["v"]
     assert kinds[-1] == "finished"
-    chunks = [e for e in sink.events if e.kind == "chunk"]
-    assert len(chunks) == res["files_consumed"]
-    # cumulative rows are monotone and end at the consumed total
-    rows_seen = [c.rows_processed for c in chunks]
-    assert rows_seen == sorted(rows_seen)
-    assert rows_seen[-1] == res["rows"]
-    # percentage derived from the caller's estimate
-    assert chunks[0].percentage == 25.0
-    fin = sink.events[-1]
-    assert fin.truncated == res["truncated"] is True
-    assert fin.rows_processed == res["rows"]
+    fin = events[-1]
+    assert fin.rows_processed == 200
+    assert fin.truncated is False
     # memory-sampler twin: peak RSS recorded on Finished
     assert fin.peak_memory_mb and fin.peak_memory_mb > 0
 
@@ -62,54 +40,6 @@ def test_chunk_rate_limit_preserves_lifecycle_events():
     kinds = [e.kind for e in sink.events]
     # only the first chunk survives the interval, lifecycle all pass
     assert kinds == ["started", "chunk", "warning", "finished"]
-
-
-def test_checkpoint_run_metrics_sink_and_conservation(spark, tmp_path):
-    """Progress rows land in the metrics table next to the manifests;
-    mid-run (killed after 2 of 4 partitions) the finished row's
-    totals reconcile exactly with the decisions actually written —
-    the conservation law under partial progress."""
-    pages = fixtures.pages_df(spark, ROWS)
-    out = str(tmp_path / "out")
-    mdir = str(tmp_path / "out/progress_metrics")
-    sink = progress.MetricsTableSink(
-        spark, mdir, run_id="r1", min_interval_s=0.0
-    )
-    rows = checkpoint.run(
-        pages, out, run_id="r1", n_buckets=4, max_partitions=2,
-        progress_sink=sink,
-    )
-    assert len(rows) == 2
-    tbl = progress.read_progress(spark, mdir).toPandas()
-    assert set(tbl["run_id"]) == {"r1"}
-    kinds = list(tbl.sort_values("elapsed_s")["kind"])
-    assert kinds[0] == "started" and kinds[-1] == "finished"
-    fin = tbl[tbl["kind"] == "finished"].iloc[0]
-    # finished.truncated reflects the simulated kill (2 buckets left)
-    assert bool(fin["truncated"]) is True
-    # conservation vs what was actually written to the decisions table
-    written = spark.read.parquet(f"{out}/decisions")
-    assert int(fin["rows_processed"]) == written.count()
-    assert int(fin["rows_processed"]) == sum(r["docs_in"] for r in rows)
-    kept = written.filter(F.col("keep")).count()
-    assert kept == sum(r["docs_out"] for r in rows)
-
-    # resume completes the other 2 partitions under a second run_id;
-    # its finished row is not truncated and covers the remainder
-    sink2 = progress.MetricsTableSink(
-        spark, mdir, run_id="r2", min_interval_s=0.0
-    )
-    rows2 = checkpoint.run(
-        pages, out, run_id="r2", n_buckets=4, progress_sink=sink2,
-    )
-    tbl2 = progress.read_progress(spark, mdir).toPandas()
-    fin2 = tbl2[(tbl2["run_id"] == "r2") & (tbl2["kind"] == "finished")]
-    assert len(fin2) == 1 and bool(fin2.iloc[0]["truncated"]) is False
-    assert int(fin2.iloc[0]["rows_processed"]) == sum(
-        r["docs_in"] for r in rows2
-    )
-    total = spark.read.parquet(f"{out}/decisions").count()
-    assert total == len(ROWS)
 
 
 def test_poller_emits_during_live_job(spark):

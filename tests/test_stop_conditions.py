@@ -3,8 +3,6 @@ parity) and read-time encoding autodetect (robust_csv.rs policy)."""
 
 from __future__ import annotations
 
-import pytest
-
 from dataprof_spark.operators import stop_conditions as sc
 from dataprof_spark.sources import readers
 
@@ -73,47 +71,6 @@ def test_presets_match_reference():
     qs = sc.quality_sample()
     assert qs.max_rows() == 50_000
     assert not qs.is_row_limit_only()
-
-
-# ------------------------------------------------- incremental driver
-@pytest.fixture(scope="module")
-def five_files(spark, tmp_path_factory):
-    base = tmp_path_factory.mktemp("chunks")
-    paths = []
-    for i in range(5):
-        p = str(base / f"chunk_{i}.parquet")
-        spark.range(i * 100, (i + 1) * 100).toDF("id").coalesce(
-            1
-        ).write.parquet(p)
-        paths.append(p)
-    return paths
-
-
-def test_incremental_stops_between_chunks(spark, five_files):
-    res = sc.profile_files_incrementally(
-        spark, five_files, sc.MaxRows(250)
-    )
-    assert res["files_consumed"] == 3  # fired AFTER the 3rd chunk
-    assert res["rows"] == 300  # per-chunk checks may overshoot the cap
-    assert res["truncated"] is True
-    assert res["truncation_reason"] == "max_rows(250)"
-    assert res["df"].count() == 300
-
-
-def test_condition_met_on_last_chunk_is_not_truncation(spark, five_files):
-    """The reference's own contract test
-    (`a_condition_met_on_the_last_chunk_is_not_a_truncation`)."""
-    res = sc.profile_files_incrementally(
-        spark, five_files, sc.MaxRows(500)
-    )
-    assert res["files_consumed"] == 5
-    assert res["truncated"] is False
-    assert res["truncation_reason"] is None
-
-
-def test_never_consumes_everything(spark, five_files):
-    res = sc.profile_files_incrementally(spark, five_files, sc.Never())
-    assert res["files_consumed"] == 5 and res["rows"] == 500
 
 
 # ------------------------------------------------ encoding autodetect
