@@ -23,9 +23,9 @@ def capabilities():
     installation — the reference's `dataprof.capabilities()`
     (python/dataprof/__init__.py:133-170) recast for the Spark
     deployment: optional Python packages are discovered without
-    importing them; JDBC connectors are discovered by scanning the
-    Spark distribution's jars directory (the classpath
-    spark.read.jdbc actually uses)."""
+    importing them; the Iceberg runtime is discovered by scanning the
+    Spark distribution's jars directory (the classpath the session
+    loads)."""
     import importlib.util as _ilu
     import os as _os
     from dataclasses import dataclass as _dc
@@ -36,19 +36,14 @@ def capabilities():
         except (AttributeError, ImportError, ValueError):
             return False
 
-    connectors: tuple = ()
     iceberg = False
     try:
         import pyspark as _ps
 
         jars = _os.path.join(_os.path.dirname(_ps.__file__), "jars")
-        names = _os.listdir(jars)
-        known = ("derby", "postgresql", "mysql", "sqlite-jdbc", "h2-")
-        connectors = tuple(
-            sorted({k.rstrip("-") for k in known
-                    for n in names if n.startswith(k)})
+        iceberg = any(
+            "iceberg-spark-runtime" in n for n in _os.listdir(jars)
         )
-        iceberg = any("iceberg-spark-runtime" in n for n in names)
     except Exception:
         pass
 
@@ -66,8 +61,6 @@ def capabilities():
         arrow_interop: bool
         pyarrow_installed: bool
         structured_streaming: bool
-        database: bool
-        database_connectors: tuple
         iceberg_runtime: bool
         langid_backend: str
         perplexity_backend: str
@@ -88,8 +81,6 @@ def capabilities():
         arrow_interop=True,
         pyarrow_installed=_installed("pyarrow"),
         structured_streaming=True,
-        database=bool(connectors),
-        database_connectors=connectors,
         iceberg_runtime=iceberg,
         # production-model swap point: delegated to core/models.py so
         # the "what a run would actually use" logic lives once — a
@@ -111,14 +102,6 @@ def profile(source, **opts):
     return _profile(source, **opts)
 
 
-def analyze_to_arrow(source, **opts):
-    """Profile + hand the per-column statistics off as a pyarrow
-    Table (reference analyze_csv_to_arrow / analyze_parquet_to_arrow)."""
-    from dataprof_spark.facade import analyze_to_arrow as _f
-
-    return _f(source, **opts)
-
-
 def analyze_structure(path, max_rows=None):
     """Bounded-scan structure report (reference analyze_structure) —
     no Spark session needed."""
@@ -132,13 +115,3 @@ def list_patterns(locale=None):
     from dataprof_spark.facade import list_patterns as _f
 
     return _f(locale=locale)
-
-
-def Profiler():
-    """Fluent builder over profile() — the reference's `dp.Profiler()`
-    chain (engine/format/max_rows/sampling/locale/metrics/
-    quality_dimensions/.../profile). Imported lazily; returns a new
-    dataprof_spark.facade.Profiler instance."""
-    from dataprof_spark.facade import Profiler as _P
-
-    return _P()

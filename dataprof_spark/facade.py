@@ -145,15 +145,6 @@ def list_patterns(locale: str | None = None) -> list[dict[str, Any]]:
     ]
 
 
-def analyze_to_arrow(source: Any, **opts):
-    """Profile a source and return the per-column statistics as a
-    pyarrow Table — the reference's analyze_csv_to_arrow /
-    analyze_parquet_to_arrow (arrow_export.rs:308-340) unified behind
-    the facade's format dispatch: zero-copy hand-off of the ANALYSIS
-    RESULTS to pandas/polars, not of the data."""
-    return profile(source, **opts).to_arrow()
-
-
 _VALID_METRIC_PACKS = {"schema", "statistics", "patterns", "quality"}
 
 
@@ -176,8 +167,6 @@ def profile(
     positive_columns: list[str] | None = None,
     csv_delimiter: str | None = None,
     csv_flexible: bool | None = None,
-    on_progress: Any = None,
-    progress_interval_ms: int | None = None,
 ) -> ProfileReport:
     """Profile any supported source into a ProfileReport.
 
@@ -191,19 +180,16 @@ def profile(
     distinct_count=None). See operators.profiler.profile.
 
     ``metrics`` selects metric packs (reference quality.rs:63-72 /
-    Profiler.metrics, python/dataprof/__init__.py:1380-1396):
+    python/dataprof/__init__.py:1380-1396):
     "schema" (always included), "statistics", "patterns", "quality".
     An omitted pack contributes ZERO Spark aggregate expressions —
     e.g. metrics=["schema"] is one light agg job. ``metrics``
     overrides the ``quality``/``patterns`` booleans when given.
     ``quality_dimensions`` further narrows the quality pack to the
-    named ISO 25012 dimensions (Profiler.quality_dimensions).
+    named ISO 25012 dimensions.
     ``sampling`` is either a callable ``df -> df`` or a dict
     ``{"stages": [...], "id_col": ...}`` routed through
-    operators.sampling.multi_stage — applied BEFORE profiling.
-    ``on_progress``/``progress_interval_ms`` attach a progress
-    callback fed from SparkStatusTracker while the profile jobs run
-    (reference Profiler.on_progress / progress_interval_ms)."""
+    operators.sampling.multi_stage — applied BEFORE profiling."""
     _profiler.check_cardinality(cardinality)
     spark = spark or _default_spark()
     if metrics is not None:
@@ -262,26 +248,8 @@ def profile(
     cap = _readers.apply_row_cap(df, max_rows) if max_rows else None
     if cap:
         df = cap.df
-    poller = None
-    sink = None
+    t0 = time.perf_counter()
     try:
-        # progress setup sits INSIDE the try: a raising on_progress
-        # callback must still release the cached capped DataFrame
-        if on_progress is not None:
-            from dataprof_spark.progress import (
-                JobProgressPoller,
-                ProgressSink,
-            )
-
-            sink = ProgressSink(
-                callback=on_progress,
-                min_interval_s=(progress_interval_ms or 500) / 1000.0,
-            )
-            sink.started()
-            sink.schema([f.name for f in df.schema.fields])
-            poller = JobProgressPoller(spark, sink)
-            poller.__enter__()
-        t0 = time.perf_counter()
         if "statistics" in packs:
             profiles = _profiler.profile(
                 df, use_approx_percentiles=use_approx_percentiles,
@@ -314,13 +282,9 @@ def profile(
             }
             patterns_scanned = True
     finally:
-        if poller is not None:
-            poller.__exit__(None, None, None)
         if cap:
             cap.release()
     total = profiles[0].total_count if profiles else 0
-    if sink is not None:
-        sink.finished(total)
     execution = {
         "engine": "spark",
         "metric_packs": sorted(packs),
@@ -337,212 +301,3 @@ def profile(
         name, profiles, quality_report=qrep, execution=execution,
         patterns_scanned=patterns_scanned,
     )
-
-
-# ---------------------------------------------------------------- builder
-class Profiler:
-    """Builder-style profiler configuration — the reference's fluent
-    chain (python/dataprof/__init__.py:1262-1408) over the Spark
-    facade. Chainable methods accumulate settings; ``.profile(src)``
-    runs.
-
-    Example::
-
-        report = Profiler().metrics(["schema", "quality"]) \\
-            .quality_dimensions(["completeness"]).profile(df)
-        report = Profiler().sampling({"stages": [("systematic",
-            {"interval": 10})], "id_col": "id"}).profile("data.csv")
-
-    Spark-first mapping notes (honest, recorded in the report):
-    - ``engine``/``chunk_size``/``memory_limit_mb`` configure the
-      reference's single-node streaming engines; Spark owns execution
-      and memory, so these are validated, RECORDED in
-      ``report.execution["requested_options"]``, and not applied.
-    - ``stop_condition``/``stop_when``: a row-limit-only condition is
-      applied as the exact row cap (same truncation provenance); a
-      chunk-feedback condition (schema-stable, memory-pressure) has no
-      chunk loop in a whole-stage Spark scan — it is applied through
-      its row-limit component when it has one (e.g. the
-      schema_inference preset caps at 10k) and recorded otherwise.
-    - ``temporal_columns`` are recorded: Spark's timeliness dimension
-      derives from actual date/timestamp column TYPES, which is
-      strictly stronger than name hints.
-    """
-
-    _ENGINES = ("auto", "incremental", "columnar", "spark")
-
-    def __init__(self) -> None:
-        self._kwargs: dict[str, Any] = {}
-        self._recorded: dict[str, Any] = {}
-
-    # ---- applied settings -------------------------------------------
-    def format(self, fmt: str) -> "Profiler":
-        """Override format detection ("csv", "json", "parquet")."""
-        self._kwargs["format"] = fmt
-        return self
-
-    def max_rows(self, n: int) -> "Profiler":
-        """Set maximum rows to process (exact truncation provenance)."""
-        self._kwargs["max_rows"] = n
-        return self
-
-    def name(self, name: str) -> "Profiler":
-        """Set the source name used in the report."""
-        self._kwargs["name"] = name
-        return self
-
-    def csv_delimiter(self, d: str) -> "Profiler":
-        """Set single-character CSV delimiter (else autodetected)."""
-        if len(d) != 1:
-            raise ValueError("csv_delimiter must be a single character")
-        self._kwargs["csv_delimiter"] = d
-        return self
-
-    def csv_flexible(self, flexible: bool) -> "Profiler":
-        """Allow variable-length CSV records (PERMISSIVE vs FAILFAST)."""
-        self._kwargs["csv_flexible"] = flexible
-        return self
-
-    def sampling(self, strategy: Any) -> "Profiler":
-        """Set sampling: a callable ``df -> df`` or a dict
-        ``{"stages": [...], "id_col": ...}`` (multi_stage grammar)."""
-        self._kwargs["sampling"] = strategy
-        return self
-
-    def locale(self, locale: str) -> "Profiler":
-        """Set locale for pattern detection (e.g. "IT", "US", "GB")."""
-        self._kwargs["locale"] = locale
-        return self
-
-    def positive_columns(self, columns: list[str]) -> "Profiler":
-        """Mark columns whose numeric values must be non-negative."""
-        self._kwargs["positive_columns"] = list(columns)
-        return self
-
-    def identifier_columns(self, columns: list[str]) -> "Profiler":
-        """Mark identifier columns; the first becomes the key-uniqueness
-        column (key_col) of the quality pass."""
-        cols = list(columns)
-        if cols:
-            self._kwargs["key_col"] = cols[0]
-        self._recorded["identifier_columns"] = cols
-        return self
-
-    def quality_dimensions(self, dims: list[str]) -> "Profiler":
-        """Select quality dimensions to evaluate (unselected ones
-        contribute zero aggregate expressions)."""
-        self._kwargs["quality_dimensions"] = list(dims)
-        return self
-
-    def metrics(self, packs: list[str]) -> "Profiler":
-        """Select metric packs: "schema" (always included),
-        "statistics", "patterns", "quality". Omitting a pack skips
-        that computation entirely."""
-        normalized = [p.lower() for p in packs]
-        unknown = set(normalized) - _VALID_METRIC_PACKS
-        if unknown:
-            raise ValueError(
-                f"Unknown metric packs: {sorted(unknown)}. "
-                f"Valid packs: {sorted(_VALID_METRIC_PACKS)}"
-            )
-        self._kwargs["metrics"] = normalized
-        return self
-
-    def cardinality(self, tier: str) -> "Profiler":
-        """Distinct-count tier: "parity" (precision-14 HLL sketch +
-        exact follow-up) or "off" (no cardinality aggregates,
-        distinct_count=None)."""
-        _profiler.check_cardinality(tier)
-        self._kwargs["cardinality"] = tier
-        return self
-
-    def on_progress(self, cb: Any) -> "Profiler":
-        """Set a progress callback (ProgressEvent consumer)."""
-        self._kwargs["on_progress"] = cb
-        return self
-
-    def progress_interval_ms(self, ms: int) -> "Profiler":
-        """Minimum interval between chunk progress events in ms."""
-        self._kwargs["progress_interval_ms"] = ms
-        return self
-
-    def stop_condition(self, cond: Any) -> "Profiler":
-        """Set an early-stop condition (operators.stop_conditions).
-        Applied via its row-limit bound when it has one; recorded
-        otherwise (no chunk loop in a whole-stage Spark scan)."""
-        # the combinators compose their own bound (AnyOf: min of the
-        # children; AllOf: max, or None when any child is unbounded —
-        # rows alone can then never fire it). No fallback over
-        # .conditions here: a min() over AllOf children would silently
-        # truncate the profile in exactly the cases where None is the
-        # correct answer.
-        limit = None
-        try:
-            limit = cond.max_rows()
-        except AttributeError:
-            pass
-        if limit is not None:
-            self._kwargs["max_rows"] = limit
-        self._recorded["stop_condition"] = repr(cond)
-        return self
-
-    def stop_when(self, condition: Any) -> "Profiler":
-        """Stop condition from an object or shorthand string:
-        "schema_stable", "schema_inference", "quality_sample"."""
-        if isinstance(condition, str):
-            from dataprof_spark.operators import stop_conditions as _sc
-
-            factories = {
-                "schema_stable": lambda: _sc.SchemaStable(1_000),
-                "schema_inference": _sc.schema_inference,
-                "quality_sample": _sc.quality_sample,
-            }
-            if condition not in factories:
-                raise ValueError(
-                    f"Unknown stop_when shorthand: {condition!r}. "
-                    f"Valid shorthands: {sorted(factories)}"
-                )
-            condition = factories[condition]()
-        return self.stop_condition(condition)
-
-    # ---- recorded-only settings (Spark owns execution) ---------------
-    def engine(self, engine: str) -> "Profiler":
-        """Reference engines: "auto"/"incremental"/"columnar". Spark
-        is the engine here; the request is validated and recorded."""
-        if engine not in self._ENGINES:
-            raise ValueError(
-                f"unknown engine {engine!r}; valid: {self._ENGINES}"
-            )
-        self._recorded["requested_engine"] = engine
-        return self
-
-    def chunk_size(self, n: int) -> "Profiler":
-        """Streaming chunk size — Spark sizes partitions itself
-        (spark.sql.files.maxPartitionBytes); recorded."""
-        self._recorded["chunk_size"] = n
-        return self
-
-    def memory_limit_mb(self, mb: int) -> "Profiler":
-        """Memory budget — Spark executors manage memory; recorded."""
-        self._recorded["memory_limit_mb"] = mb
-        return self
-
-    def temporal_columns(self, columns: list[str]) -> "Profiler":
-        """Recorded: Spark timeliness derives from column TYPES."""
-        self._recorded["temporal_columns"] = list(columns)
-        return self
-
-    # ---- terminal ----------------------------------------------------
-    def profile(self, source: Any) -> ProfileReport:
-        """Profile the source with the accumulated settings."""
-        report = profile(source, **self._kwargs)
-        if self._recorded:
-            report.execution["requested_options"] = dict(self._recorded)
-        return report
-
-    def __repr__(self) -> str:
-        settings = ", ".join(
-            f"{k}={v!r}"
-            for k, v in {**self._kwargs, **self._recorded}.items()
-        )
-        return f"Profiler({settings})"

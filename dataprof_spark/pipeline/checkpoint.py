@@ -280,7 +280,6 @@ def run(
             "partition_id": k,
             "n_buckets": n_buckets,
             "input_fingerprint": fp,
-            "input_snapshot_id": 0,
             **counters.get(k, {
                 "docs_in": 0, "docs_out": 0,
                 "drop_reason_counts": {}, "scrub_counts": {},

@@ -515,11 +515,9 @@ ORDER BY p_partkey, s_name LIMIT 200
 
 def sessionize_events_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization in BATCH (lag + running sum of
-    session-break flags) — the SQL-expressible twin of the stateful
-    streaming operator (streaming/sessionize.py, 30-min gap), which
-    gives the sessionization SEMANTICS a DuckDB oracle instead of
-    pytest-only coverage. One shuffle on user_id; both window
-    functions share the exchange."""
+    session-break flags, 30-min gap), checked against a DuckDB
+    oracle. One shuffle on user_id; both window functions share the
+    exchange."""
     from pyspark.sql import Window as W
 
     ev = _t(spark, sf_dir, "events")
@@ -828,8 +826,8 @@ FROM lineitem, q
 
 
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window aggregation (batch twin of the streaming path in
-    streaming/events.py): per-hour per-type counts + value sums."""
+    """Tumbling-window aggregation: per-hour per-type counts + value
+    sums."""
     ev = _t(spark, sf_dir, "events")
     # r8: group on the TRUNCATED TIMESTAMP and format AFTER the agg —
     # date_format ran per input row (measured sf1.0: hour-projection

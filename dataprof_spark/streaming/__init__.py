@@ -1,3 +1,2 @@
-"""Structured Streaming operators: windowed event aggregation with
-watermarks, stateful sessionization, and the gated page stream, which
-runs checkpoint.run once per micro-batch."""
+"""The gated page stream (metrics.py), which runs checkpoint.run once
+per micro-batch."""

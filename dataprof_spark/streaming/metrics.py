@@ -8,8 +8,10 @@ same per-partition manifests (docs in/out, drop-reason histogram,
 scrub counts) as a batch run. There is no stream-only schema; the
 readers below union the per-batch outputs.
 
-No state store — the gate is stateless per document; stateful
-operators (sessionization, dedup) live in sessionize.py / events.py.
+This is the package's only module. No state store: the gate is
+stateless per document. The windowed event counts and sessions are
+batch driver queries (``queries.events_hourly``,
+``queries.sessionize_events_batch``).
 """
 
 from __future__ import annotations

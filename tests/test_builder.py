@@ -1,9 +1,10 @@
-"""Fluent Profiler() chain + metrics packs + describe()/
-quality_summary() — the reference API-surface parity items (VERDICT
-r4 #3 chain/packs, #4 describe).
+"""profile() options from the reference's fluent chain + metrics
+packs + describe()/quality_summary() — the reference API-surface
+parity items (VERDICT r4 #3 chain/packs, #4 describe). Each setter of
+the reference's chain is a ``facade.profile`` keyword here.
 
-The packs contract under test is the reference's quality.rs:63-72 /
-Profiler.metrics: an omitted pack (or an unrequested quality
+The packs contract under test is the reference's quality.rs:63-72
+metrics packs: an omitted pack (or an unrequested quality
 dimension) contributes ZERO aggregate work — verified with a Spark
 job-count probe, not just output shape.
 """
@@ -34,29 +35,27 @@ def _n_jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-# ------------------------------------------------------------- builder
+# ------------------------------------------------ reference chain
 def test_builder_chain_mirrors_reference(spark, orders_df, tmp_path):
-    """The reference's documented chain shapes, end to end."""
-    report = (
-        facade.Profiler()
-        .engine("auto")
-        .max_rows(500)
-        .name("orders-sample")
-        .metrics(["schema", "quality"])
-        .quality_dimensions(["completeness", "uniqueness"])
-        .identifier_columns(["o_orderkey"])
-        .locale("IT")
-        .profile(orders_df)
+    """The reference's documented chain shapes, end to end, as
+    profile() keywords."""
+    report = facade.profile(
+        orders_df,
+        max_rows=500,
+        name="orders-sample",
+        metrics=["schema", "quality"],
+        quality_dimensions=["completeness", "uniqueness"],
+        key_col="o_orderkey",
+        locale="IT",
     )
     assert report.source == "orders-sample"
     assert report.execution["rows_processed"] == 500
     assert report.execution["truncated"] is True
     assert set(report.execution["metric_packs"]) == {"schema", "quality"}
-    assert report.execution["requested_options"]["requested_engine"] == "auto"
     assert set(report.quality["dimensions"]) == {
         "completeness", "uniqueness"
     }
-    # key uniqueness wired through identifier_columns -> key_col
+    # key uniqueness wired through key_col
     assert "key_uniqueness" in report.quality["details"]["uniqueness"]
     # schema pack only: no statistics computed
     assert all(
@@ -64,34 +63,17 @@ def test_builder_chain_mirrors_reference(spark, orders_df, tmp_path):
     )
 
 
-def test_builder_rejects_unknowns():
+def test_builder_rejects_unknowns(orders_df):
     with pytest.raises(ValueError, match="Unknown metric packs"):
-        facade.Profiler().metrics(["nope"])
-    with pytest.raises(ValueError, match="unknown engine"):
-        facade.Profiler().engine("warp")
-    with pytest.raises(ValueError, match="Unknown stop_when shorthand"):
-        facade.Profiler().stop_when("sometime")
-    with pytest.raises(ValueError, match="single character"):
-        facade.Profiler().csv_delimiter("::")
-
-
-def test_builder_stop_when_maps_row_limit(orders_df):
-    """The schema_inference preset's MaxRows(10k) component becomes
-    the exact row cap; our source is smaller, so not truncated."""
-    b = facade.Profiler().stop_when("schema_inference")
-    assert b._kwargs["max_rows"] == 10_000
-    rep = b.metrics(["schema"]).profile(orders_df)
-    assert rep.execution["truncated"] is False
-    assert "stop_condition" in rep.execution["requested_options"]
+        facade.profile(orders_df, metrics=["nope"])
 
 
 def test_builder_sampling_stage(spark, orders_df):
-    rep = (
-        facade.Profiler()
-        .sampling({"stages": [("systematic", {"interval": 10})],
-                   "id_col": "o_orderkey"})
-        .metrics(["schema"])
-        .profile(orders_df)
+    rep = facade.profile(
+        orders_df,
+        sampling={"stages": [("systematic", {"interval": 10})],
+                  "id_col": "o_orderkey"},
+        metrics=["schema"],
     )
     total = orders_df.count()
     got = rep.execution["rows_processed"]
@@ -206,29 +188,6 @@ def test_quality_summary_single_row(orders_df):
 
 
 # ------------------------------------------- r5 review regressions
-def test_allof_stop_condition_never_truncates():
-    """AllOf with an unbounded child: rows alone can never fire it,
-    so the builder must NOT derive a row cap (the old fallback took
-    min() of the bounded children and silently truncated the
-    profile)."""
-    from dataprof_spark.operators import stop_conditions as _sc
-
-    cond = _sc.AllOf(conditions=[
-        _sc.MaxRows(100), _sc.MemoryPressure(0.9),
-    ])
-    assert cond.max_rows() is None
-    b = facade.Profiler().stop_condition(cond)
-    assert "max_rows" not in b._kwargs
-    # both bounded: AllOf needs BOTH to fire -> max, not min
-    both = _sc.AllOf(conditions=[_sc.MaxRows(100), _sc.MaxRows(500)])
-    assert facade.Profiler().stop_condition(both)._kwargs[
-        "max_rows"] == 500
-    # AnyOf keeps composing to the min
-    any_ = _sc.AnyOf(conditions=[_sc.MaxRows(100), _sc.MaxRows(500)])
-    assert facade.Profiler().stop_condition(any_)._kwargs[
-        "max_rows"] == 100
-
-
 def test_describe_survives_huge_magnitudes():
     """Decimal.quantize to 2/4 places cannot represent |v| >= ~1e25
     under the default 28-digit context; describe() must return the
@@ -259,23 +218,18 @@ def test_quality_dimensions_without_quality_pack_raises(orders_df):
 
 
 def test_cardinality_tier_threads_through_builder(orders_df):
-    """The builder shorthand threads the tier through to the profiler,
-    and only "parity" and "off" exist: any other tier is refused by
-    the builder and by the profiler behind facade.profile."""
-    rep = (
-        facade.Profiler()
-        .cardinality("off")
-        .metrics(["schema", "statistics"])
-        .profile(orders_df)
+    """profile(cardinality=) threads the tier through to the profiler,
+    and only "parity" and "off" exist: any other tier is refused,
+    whichever packs run."""
+    rep = facade.profile(
+        orders_df, cardinality="off", metrics=["schema", "statistics"],
     )
     assert all(
         c["distinct_confidence"] == "not_computed" for c in rep.columns
     )
-    for tier in ("cheap", "coarse"):
-        with pytest.raises(ValueError, match="cardinality tier"):
-            facade.Profiler().cardinality(tier)
     # the schema pack alone passes no tier on to an operator, so
     # facade.profile must refuse it itself
-    for packs in ({"quality": False}, {"metrics": ["schema"]}):
-        with pytest.raises(ValueError, match="cardinality must be"):
-            facade.profile(orders_df, cardinality="coarse", **packs)
+    for tier in ("cheap", "coarse"):
+        for packs in ({}, {"quality": False}, {"metrics": ["schema"]}):
+            with pytest.raises(ValueError, match="cardinality tier"):
+                facade.profile(orders_df, cardinality=tier, **packs)

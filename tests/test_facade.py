@@ -105,20 +105,20 @@ def test_report_exports_work_end_to_end(spark, tmp_path):
     assert ProfileReport.load(p).source == "orders.parquet"
 
 
-def test_analyze_to_arrow(spark, tmp_path):
+def test_profile_to_arrow(spark, tmp_path):
     """Reference analyze_csv_to_arrow/analyze_parquet_to_arrow parity:
     per-column statistics as a pyarrow Table through the facade's
-    format dispatch."""
+    format dispatch, spelled ``profile(...).to_arrow()``."""
     import pyarrow as pa
 
     p = tmp_path / "t.csv"
     p.write_text("a,b\n1,x\n2,y\n3,\n")
-    tbl = dp.analyze_to_arrow(str(p), spark=spark, quality=False)
+    tbl = dp.profile(str(p), spark=spark, quality=False).to_arrow()
     assert isinstance(tbl, pa.Table)
     assert tbl.num_rows == 2  # one row per column profiled
     assert "column" in tbl.column_names or "name" in tbl.column_names
 
-    tbl2 = dp.analyze_to_arrow(
+    tbl2 = dp.profile(
         f"{SF_DIR}/orders.parquet", spark=spark, quality=False
-    )
+    ).to_arrow()
     assert tbl2.num_rows > 0

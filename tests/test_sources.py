@@ -1,6 +1,6 @@
-"""Sources & sinks: delimiter autodetect, permissive/strict policy,
-metadata-only parquet ops, versioned report save/load, redacted LLM
-context."""
+"""Sources & sinks: delimiter and encoding autodetect,
+permissive/strict policy, metadata-only parquet ops, versioned report
+save/load, redacted LLM context."""
 
 from __future__ import annotations
 
@@ -21,6 +21,33 @@ def test_detect_delimiter(tmp_path):
         p = tmp_path / f"d{ord(want)}.csv"
         p.write_text(content)
         assert readers.detect_delimiter(str(p)) == want
+
+
+def test_detect_encoding(tmp_path):
+    p_utf8 = tmp_path / "a.csv"
+    p_utf8.write_bytes("col\ncafé\n".encode("utf-8"))
+    assert readers.detect_encoding(str(p_utf8)) == "UTF-8"
+
+    p_latin = tmp_path / "b.csv"
+    p_latin.write_bytes("col\ncaf\xe9\n".encode("latin-1"))
+    assert readers.detect_encoding(str(p_latin)) == "ISO-8859-1"
+
+    p_16 = tmp_path / "c.csv"
+    p_16.write_bytes(b"\xff\xfe" + "col\nx\n".encode("utf-16-le"))
+    assert readers.detect_encoding(str(p_16)) == "UTF-16LE"
+
+    p_bom = tmp_path / "d.csv"
+    p_bom.write_bytes(b"\xef\xbb\xbf" + "col\nx\n".encode("utf-8"))
+    assert readers.detect_encoding(str(p_bom)) == "UTF-8"
+
+
+def test_read_csv_latin1_autodetected(spark, tmp_path):
+    p = tmp_path / "latin.csv"
+    p.write_bytes("name;city\nRenée;Orléans\n".encode("latin-1"))
+    res = readers.read_csv_robust(spark, str(p), encoding=None)
+    row = res.df.collect()[0]
+    assert row["name"] == "Renée" and row["city"] == "Orléans"
+    assert res.options["encoding"] == "ISO-8859-1"
 
 
 def test_csv_permissive_ragged_pad_truncate(spark, tmp_path):
