@@ -27,7 +27,6 @@ the environment provides the dependency.
 
 from __future__ import annotations
 
-import importlib.util
 import os
 import threading
 from typing import Sequence
@@ -58,41 +57,6 @@ def resolved_config() -> dict:
         "fasttext_path": os.environ.get(_FASTTEXT_ENV) or None,
         "kenlm_path": os.environ.get(_KENLM_ENV) or None,
     }
-
-
-def langid_backend() -> str:
-    """'fasttext' when DATAPROF_FASTTEXT_MODEL is set, else 'standin'."""
-    return "fasttext" if os.environ.get(_FASTTEXT_ENV) else "standin"
-
-
-def perplexity_backend() -> str:
-    """'kenlm' when DATAPROF_KENLM_MODEL is set, else 'standin'."""
-    return "kenlm" if os.environ.get(_KENLM_ENV) else "standin"
-
-
-def _backend_status(env: str, package: str, configured: str) -> str:
-    """What a run would ACTUALLY use right now: the configured backend
-    name when it is servable, 'standin' when unconfigured, and
-    'misconfigured' when the env var names a model this host cannot
-    load (package or file missing) — a state in which a run raises
-    rather than using either engine, so reporting the backend name
-    would be a lie (ADVICE r6)."""
-    path = os.environ.get(env)
-    if not path:
-        return "standin"
-    if importlib.util.find_spec(package) is None or not os.path.exists(path):
-        return "misconfigured"
-    return configured
-
-
-def langid_status() -> str:
-    """'fasttext' | 'standin' | 'misconfigured' (see _backend_status)."""
-    return _backend_status(_FASTTEXT_ENV, "fasttext", "fasttext")
-
-
-def perplexity_status() -> str:
-    """'kenlm' | 'standin' | 'misconfigured' (see _backend_status)."""
-    return _backend_status(_KENLM_ENV, "kenlm", "kenlm")
 
 
 def _load_fasttext(path: str):
@@ -202,19 +166,3 @@ def perplexity_batch(
 def perplexity(text: str | None) -> float:
     """Scalar twin (labeler entry point)."""
     return float(perplexity_batch([text])[0])
-
-
-def capabilities() -> dict[str, object]:
-    """Honest runtime report of which backends are importable and
-    which are configured — surfaced by facade.capabilities()."""
-    caps: dict[str, object] = {
-        "langid_backend": langid_backend(),
-        "perplexity_backend": perplexity_backend(),
-    }
-    for name, mod in (("fasttext", "fasttext"), ("kenlm", "kenlm")):
-        try:
-            __import__(mod)
-            caps[f"{name}_importable"] = True
-        except ImportError:
-            caps[f"{name}_importable"] = False
-    return caps

@@ -82,11 +82,6 @@ def stopword_count(text: str) -> int:
     )
 
 
-def stopword_ratio(text: str) -> float:
-    n = word_count(text)
-    return (stopword_count(text) / n) if n else 0.0
-
-
 def line_counts(text: str) -> tuple[int, int]:
     """(total lines, distinct lines) splitting on '\\n'."""
     lines = text.split("\n")

@@ -109,42 +109,6 @@ def _to_df(spark: SparkSession, source: Any) -> DataFrame:
     )
 
 
-def analyze_structure(path: str, max_rows: int | None = None):
-    """Bounded-scan structure report — the reference's cheap first
-    pass (`dataprof-partial/src/lib.rs:63-180` analyze_structure):
-    format/delimiter/encoding diagnosis, exact-or-estimated row count,
-    per-column structural summaries from a ≤ max_rows sample. No
-    Spark job: the pass is bounded by construction, so it runs
-    driver-side (sources/structure.py); use profile() for the full
-    distributed pass once the structure is known."""
-    from dataprof_spark.sources import structure as _structure
-
-    return _structure.analyze_structure(path, max_rows=max_rows)
-
-
-def list_patterns(locale: str | None = None) -> list[dict[str, Any]]:
-    """Enumerate the built-in pattern detectors (reference
-    `dataprof-python/src/lib.rs` list_patterns export): name, regex,
-    category, specificity, locale, min report threshold, and whether
-    a checksum validator backs it. locale filters to patterns valid
-    for that locale (locale-neutral ones always included)."""
-    from dataprof_spark.core.patterns import PATTERN_DEFS
-
-    return [
-        {
-            "name": d.name,
-            "regex": d.regex,
-            "category": d.category,
-            "specificity": d.specificity,
-            "locale": d.locale,
-            "min_threshold": d.min_threshold,
-            "has_validator": d.validator is not None,
-        }
-        for d in PATTERN_DEFS
-        if locale is None or d.locale is None or d.locale == locale
-    ]
-
-
 _VALID_METRIC_PACKS = {"schema", "statistics", "patterns", "quality"}
 
 

@@ -107,13 +107,3 @@ def date_format_class(c: Column) -> Column:
     for name, pat in reversed(DATE_FORMAT_CLASSES):
         expr = F.when(c.rlike(pat), F.lit(name)).otherwise(expr)
     return expr
-
-
-def duckdb_format_class_expr(col_sql: str) -> str:
-    expr = "NULL"
-    for name, pat in reversed(DATE_FORMAT_CLASSES):
-        expr = (
-            f"CASE WHEN regexp_matches({col_sql}, '{pat}') "
-            f"THEN '{name}' ELSE {expr} END"
-        )
-    return expr

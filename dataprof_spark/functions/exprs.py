@@ -5,7 +5,11 @@ stays inside whole-stage codegen, shuffles nothing, and is exactly the
 kind of per-row projection that scales linearly to 100 TB. The regex
 patterns are restricted to constructs with identical semantics in
 Java regex (Spark), RE2 (DuckDB oracle), and Python `re` (labeler):
-plain character classes, non-capturing groups, `\\b` on ASCII text.
+plain character classes and non-capturing groups. Word boundaries
+are the exception: Java's `\\b` counts non-ASCII letters (é, 中, ١)
+as word characters where RE2 and Python `re.ASCII` do not, so the
+Spark-side phone/IPv4 counts spell the boundary as ASCII
+look-arounds. RE2 has no look-behind, so the DuckDB SQL keeps `\\b`.
 
 Parity is enforced by tests/test_exprs_parity.py (Spark expression vs
 pure-Python function on the same rows).
@@ -35,12 +39,22 @@ WORD_PAT = "[A-Za-z]+"
 NON_LETTER_PAT = "[^A-Za-z]"
 SYMBOL_PAT = "[^A-Za-z0-9\\s]"
 ELLIPSIS_PAT = "\\.\\.\\."
-STOPWORD_PAT = "\\b(?:" + "|".join(config.STOPWORDS_EN) + ")\\b"
 MOJIBAKE_PAT = "�|Ã¡|Ã©|Ã­|Ã³|Ãº|Ã±|Ã¨"
 
 EMAIL_PAT = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 PHONE_PAT = "\\b\\d{3}[-. ]\\d{3}[-. ]\\d{4}\\b"
 IPV4_PAT = "\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b"
+
+
+def _ascii_bounded(pat: str) -> str:
+    """``\\b<body>\\b`` for Java regex: the two ``\\b`` become ASCII
+    look-arounds (see the module docstring)."""
+    body = pat.removeprefix("\\b").removesuffix("\\b")
+    return f"(?<![A-Za-z0-9_]){body}(?![A-Za-z0-9_])"
+
+
+_PHONE_PAT_JAVA = _ascii_bounded(PHONE_PAT)
+_IPV4_PAT_JAVA = _ascii_bounded(IPV4_PAT)
 
 
 def word_count(c: Column) -> Column:
@@ -101,11 +115,6 @@ def stopword_count(c: Column) -> Column:
     ).cast("long")
 
 
-def stopword_ratio(c: Column) -> Column:
-    wc = word_count(c)
-    return F.when(wc > 0, stopword_count(c) / wc).otherwise(F.lit(0.0))
-
-
 def line_count(c: Column) -> Column:
     return F.size(F.split(c, "\n", -1)).cast("long")
 
@@ -140,11 +149,11 @@ def email_count(c: Column) -> Column:
 
 
 def phone_count(c: Column) -> Column:
-    return F.regexp_count(c, F.lit(PHONE_PAT)).cast("long")
+    return F.regexp_count(c, F.lit(_PHONE_PAT_JAVA)).cast("long")
 
 
 def ipv4_count(c: Column) -> Column:
-    return F.regexp_count(c, F.lit(IPV4_PAT)).cast("long")
+    return F.regexp_count(c, F.lit(_IPV4_PAT_JAVA)).cast("long")
 
 
 def _cascade(
@@ -363,20 +372,6 @@ def heuristic_reason_and_pnum(
         return F.struct(reason.alias("reason"), pnum.alias("pnum"))
 
     return bind_once(c0, _outer)
-
-
-def token_set_hits(c: Column, words: tuple[str, ...]) -> Column:
-    """Count whitespace-split lowercase tokens that are in `words`.
-
-    Used by the stopword-langid: regex `\\b` is deliberately avoided
-    because its word-char definition differs between Python re
-    (unicode) and Java/RE2 (ASCII) for words like 'più'. A split+filter
-    is identical in all three engines.
-    """
-    toks = F.split(F.lower(c), r"\s+", -1)
-    return F.size(
-        F.filter(toks, lambda x: x.isin(*words))
-    ).cast("long")
 
 
 def stopword_langid(c: Column) -> Column:

@@ -84,36 +84,6 @@ def _hash_family(n: int) -> list[tuple[int, int]]:
     return pairs
 
 
-def shingles(c: Column, k: int = SHINGLE_K) -> Column:
-    """Distinct word k-shingles of lowercased text (native: split +
-    transform + array_distinct; empty-safe).
-
-    REFERENCE/TEST-ONLY (r8, ADVICE r7): the production path hashes
-    shingles without materializing the strings (shingle_hashes below);
-    this string variant exists as the readable definition the hashed
-    fold mirrors and for tests that compare against a Python
-    reimplementation. No production operator calls it."""
-    toks = F.filter(F.split(F.lower(c), r"\s+", -1), lambda x: x != "")
-    n = F.size(toks)
-    # indices 0..n-k inclusive → n-k+1 shingles (sequence is inclusive)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.when(
-        n >= k,
-        F.array_distinct(
-            F.transform(
-                idx,
-                lambda i: F.concat_ws(
-                    " ", F.slice(toks, i + 1, k)
-                ),
-            )
-        ),
-    ).otherwise(
-        F.when(n > 0, F.array(F.concat_ws(" ", toks))).otherwise(
-            F.array().cast("array<string>")
-        )
-    )
-
-
 def shingle_hash(s: Column) -> Column:
     """Engine-portable 32-bit shingle hash: first 8 hex chars of md5."""
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")

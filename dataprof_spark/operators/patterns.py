@@ -53,20 +53,3 @@ def dominant_pattern(df: DataFrame, column: str,
     if pats and pats[0]["confidence"] >= 0.5:
         return pats[0]
     return None
-
-
-def validity_score(df: DataFrame, column: str,
-                   locale: str | None = None) -> float | None:
-    """Share of non-null values matching the dominant pattern over the
-    FULL column (native rlike — the sample only picks the pattern);
-    None when no dominant pattern exists ('not assessed')."""
-    dom = dominant_pattern(df, column, locale)
-    if dom is None:
-        return None
-    nn = df.filter(~exprs.nulllike(F.col(column)))
-    row = nn.agg(
-        F.avg(
-            F.col(column).cast("string").rlike(dom["regex"]).cast("double")
-        ).alias("r")
-    ).collect()[0]
-    return row["r"]

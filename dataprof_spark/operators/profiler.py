@@ -35,8 +35,7 @@ _NUMERIC_TYPES = (
 )
 _DATE_REGEXES = (
     # the reference's 8 date shapes (inference.rs:12-31), every
-    # alternative anchored at BOTH ends — kept in lockstep with
-    # sources/structure._DATE_RE (ADVICE r4: the old union was
+    # alternative anchored at BOTH ends (ADVICE r4: the old union was
     # end-unanchored, so minutes-only '2024-01-01 10:30' and trailing
     # garbage matched, and the DD/MM/YYYY datetime shape was missing)
     r"^(\d{4}-\d{2}-\d{2}"
@@ -77,8 +76,8 @@ def _is_numeric(dtype: T.DataType) -> bool:
 
 
 def _fits_i64(c):
-    """Native twin of Rust `str::parse::<i64>()` on a trimmed string
-    (structure._parses_as_i64): sign + digits AND within i64 range.
+    """Native twin of Rust `str::parse::<i64>()` on a trimmed string:
+    sign + digits AND within i64 range.
     Range is checked lexicographically on the zero-stripped digit
     string (equal-length digit strings compare numerically), so a
     21-digit id column infers float — as the reference does — instead
@@ -269,7 +268,7 @@ def profile(df: DataFrame, top_k: int = config.TOP_K_VALUES,
                 F.avg(
                     F.lower(F.trim(nn)).isin("true", "false").cast("double")
                 ).alias(f"{n}__bool_ratio"),
-                # trimmed like the other probes (structure.py trims
+                # trimmed like the other probes (the reference trims
                 # every value before its type checks — parity)
                 F.avg(F.trim(nn).rlike(_DATE_REGEXES).cast("double")).alias(
                     f"{n}__date_ratio"
@@ -619,36 +618,6 @@ def _infer_type(f_, row: dict, total: int) -> str:
     if date_r > 0.7:
         return "date"
     return "string"
-
-
-def profiles_to_df(spark, profiles: list[ColumnProfile]) -> DataFrame:
-    """Flatten to a metrics-table DataFrame (report sink S12)."""
-    import json
-
-    rows = [
-        (
-            p.name,
-            p.spark_type,
-            p.inferred_type,
-            p.total_count,
-            p.null_count,
-            p.distinct_count,
-            p.distinct_is_approximate,
-            p.distinct_confidence,
-            json.dumps(p.stats, default=str),
-            json.dumps(p.top_values, default=str),
-            ",".join(p.flags),
-        )
-        for p in profiles
-    ]
-    return spark.createDataFrame(
-        rows,
-        "name string, spark_type string, inferred_type string, "
-        "total_count long, null_count long, distinct_count long, "
-        "distinct_is_approximate boolean, distinct_confidence string, "
-        "stats string, "
-        "top_values string, flags string",
-    )
 
 
 def correlations(df: DataFrame, cols: list[str] | None = None) -> dict:

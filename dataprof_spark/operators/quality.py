@@ -25,7 +25,6 @@ from pyspark.sql import types as T
 from dataprof_spark import config
 from dataprof_spark.functions import dates, exprs
 from dataprof_spark.operators.profiler import (
-    _is_key_named,
     _is_numeric,
     _is_temporal,
     check_cardinality,

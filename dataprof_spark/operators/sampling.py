@@ -63,66 +63,6 @@ def importance(df: DataFrame, weight_col: str, threshold: float) -> DataFrame:
     return df.filter(F.col(weight_col) >= threshold)
 
 
-def stratified_fraction(df: DataFrame, key_col: str,
-                        fractions: dict, seed: int = config.SEED) -> DataFrame:
-    """Per-stratum fractional sample (Spark-native sampleBy)."""
-    return df.sampleBy(key_col, fractions, seed)
-
-
-def progressive(
-    df: DataFrame,
-    numeric_cols: list[str],
-    id_col: str,
-    initial: int = 1_000,
-    confidence: float = 0.95,
-    max_size: int = 100_000,
-    seed: int = config.SEED,
-) -> tuple[DataFrame, int]:
-    """Progressive sampling (strategies.rs Progressive): grow the
-    sample until the relative standard error of EVERY numeric mean is
-    ≤ 1 - confidence, or max_size is reached.
-
-    Scale shape: a size-k hash sample is a PREFIX of the size-max_size
-    hash sample (same content-derived order), so the full input is
-    scanned ONCE into a cached max_size candidate set and every
-    iteration's agg runs over a prefix of that small cache — the old
-    loop re-ran the full-corpus TakeOrdered per iteration (up to
-    ~log2(max/initial) 100 TB scans). The returned DataFrame is
-    rebuilt against the raw input (identical rows by construction),
-    so the cache is released before returning — no storage pinned."""
-    h = F.md5(
-        F.concat(F.lit(str(seed)), F.col(id_col).cast("string"))
-    )
-    candidates = exact_n_sample(df, max_size, id_col, seed).cache()
-    try:
-        size = initial
-        while True:
-            sample = candidates.orderBy(h).limit(size)
-            aggs = []
-            for c in numeric_cols:
-                d = F.col(c).cast("double")
-                aggs += [
-                    F.avg(d).alias(f"{c}__m"),
-                    F.stddev_samp(d).alias(f"{c}__s"),
-                    F.count(d).alias(f"{c}__n"),
-                ]
-            row = sample.agg(*aggs).collect()[0]
-            ok = True
-            for c in numeric_cols:
-                m, s, n = row[f"{c}__m"], row[f"{c}__s"], row[f"{c}__n"]
-                if not n or m is None or s is None or m == 0:
-                    continue
-                rse = (s / (n ** 0.5)) / abs(m)
-                if rse > (1.0 - confidence):
-                    ok = False
-                    break
-            if ok or size >= max_size:
-                return exact_n_sample(df, size, id_col, seed), size
-            size = min(size * 2, max_size)
-    finally:
-        candidates.unpersist()
-
-
 # ------------------------------------------------------------ multi-stage
 class InvalidSamplingCombination(ValueError):
     """A multi-stage combination with no coherent meaning (reference

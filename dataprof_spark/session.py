@@ -139,13 +139,3 @@ def rebalance(df, key: str | None = None):
             return df.repartition(target, F.col(key))
         return df.repartition(target)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict:
-    """Read driver-provided parquet tables and register temp views."""
-    out = {}
-    for name in names:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

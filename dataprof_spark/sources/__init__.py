@@ -1,2 +1,3 @@
-"""Sources & sinks: robust CSV/JSON readers, parquet metadata ops,
-schema-versioned report sinks (reference S1-S12, SURVEY.md §2.1)."""
+"""Sources & sinks: robust CSV/JSON readers for the profile() facade
+and the versioned ProfileReport JSON sink (reference S1-S12,
+SURVEY.md §2.1)."""

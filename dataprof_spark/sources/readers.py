@@ -11,8 +11,6 @@ the POLICY layer:
 - PERMISSIVE mode + corrupt-record column = ragged/parse recovery
   with error COUNTS kept (the reference's Skip-vs-Strict contract,
   dataprof-json/src/lib.rs:18-514)
-- metadata-only parquet ops: footer row count / schema without a scan
-  (dataprof-partial/src/lib.rs:63-180 quick_row_count/infer_schema)
 """
 
 from __future__ import annotations
@@ -241,19 +239,3 @@ def from_pandas(spark: SparkSession, pdf) -> DataFrame:
 def to_arrow(df: DataFrame):
     """Spark → pyarrow.Table (S11 zero-copy-ish interop path)."""
     return df.toArrow()
-
-
-# ------------------------------------------------ metadata-only ops (S5)
-def quick_row_count(path: str) -> int:
-    """Parquet footer-only row count — no data scan (partial S5)."""
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows
-
-
-def infer_schema(path: str) -> dict[str, str]:
-    """Parquet footer-only schema (partial infer_schema)."""
-    import pyarrow.parquet as pq
-
-    schema = pq.ParquetFile(path).schema_arrow
-    return {f.name: str(f.type) for f in schema}

@@ -1,13 +1,8 @@
-"""ProfileReport sink (reference S12): versioned JSON save/load,
-markdown export, redacted LLM-context export.
+"""ProfileReport sink (reference S12): versioned JSON save/load.
 
-Contracts ported from the reference:
-- schema_version gate on load — newer-versioned reports are refused,
-  not misread (profile_report.rs:160-171)
-- LLM context is FAIL-CLOSED: sensitive detector categories are never
-  echoed; if pattern scanning did not run, the report says so rather
-  than implying safety; newlines in values are escaped against prompt
-  injection (python/dataprof/__init__.py:737-790)
+The load side keeps the reference's schema_version gate: a report
+written by a newer version is refused, not misread
+(profile_report.rs:160-171).
 """
 
 from __future__ import annotations
@@ -15,13 +10,8 @@ from __future__ import annotations
 import dataclasses
 import json
 from dataclasses import dataclass, field
-from typing import Any
 
 REPORT_SCHEMA_VERSION = 1
-
-# detector categories never echoed into LLM context (fail-closed set)
-SENSITIVE_CATEGORIES = ("email", "phone", "ip", "blocklist", "ssn",
-                        "credit_card", "iban")
 
 
 @dataclass
@@ -56,24 +46,10 @@ class ProfileReport:
             patterns_scanned=patterns_scanned,
         )
 
-    # ------------------------------------------------------------ save
     def save(self, path: str) -> None:
-        """Format by extension (reference save() dispatch,
-        python/dataprof/__init__.py:2088-2111): .html → embeddable
-        fragment, .md/.markdown → GFM table, else versioned JSON."""
-        low = path.lower()
-        if low.endswith(".html"):
-            content = self.to_html()
-        elif low.endswith((".md", ".markdown")):
-            content = self.to_markdown()
-        else:
-            with open(path, "w") as f:
-                json.dump(
-                    dataclasses.asdict(self), f, default=str, indent=1
-                )
-            return
-        with open(path, "w", encoding="utf-8") as f:
-            f.write(content)
+        """Write the report as versioned JSON."""
+        with open(path, "w") as f:
+            json.dump(dataclasses.asdict(self), f, default=str, indent=1)
 
     @classmethod
     def load(cls, path: str) -> "ProfileReport":
@@ -86,321 +62,3 @@ class ProfileReport:
                 f"{REPORT_SCHEMA_VERSION}; refusing to misread it"
             )
         return cls(**raw)
-
-    # ------------------------------------------------- tabular exports
-    # Reference parity: ProfileReport.to_dataframe/to_polars/to_arrow
-    # (python/dataprof/__init__.py:1869-2275) — one flat record per
-    # column, nested stats flattened with dotted keys, so the profile
-    # itself can be analyzed/joined like any other table.
-    def _records(self) -> list[dict[str, Any]]:
-        recs = []
-        for c in self.columns:
-            rec: dict[str, Any] = {}
-            for k, v in c.items():
-                if k == "stats" and isinstance(v, dict):
-                    for sk, sv in v.items():
-                        rec[f"stats.{sk}"] = (
-                            round(sv, 4) if isinstance(sv, float) else sv
-                        )
-                elif k == "top_values":
-                    rec["top_values"] = json.dumps(v, default=str)
-                elif k == "flags":
-                    rec["flags"] = ",".join(v)
-                elif isinstance(v, float):
-                    rec[k] = round(v, 4)
-                else:
-                    rec[k] = v
-            recs.append(rec)
-        return recs
-
-    def to_dataframe(self):
-        """Column profiles as a pandas DataFrame (requires pandas)."""
-        try:
-            import pandas as pd
-        except ImportError:
-            raise ImportError(
-                "pandas is required for to_dataframe()"
-            ) from None
-        return pd.DataFrame(self._records())
-
-    def to_polars(self):
-        """Column profiles as a polars DataFrame (requires polars —
-        not bundled here; import-gated like the reference)."""
-        try:
-            import polars as pl
-        except ImportError:
-            raise ImportError(
-                "polars is required for to_polars()"
-            ) from None
-        return pl.DataFrame(self._records())
-
-    def to_arrow(self):
-        """Column profiles as a PyArrow Table (requires pyarrow).
-        Stat keys whose type varies across columns (e.g. stats.mode:
-        int for numeric columns, str for text) are stringified —
-        Arrow columns are monotyped."""
-        try:
-            import pyarrow as pa
-        except ImportError:
-            raise ImportError(
-                "pyarrow is required for to_arrow()"
-            ) from None
-        def _is_null(v):
-            return v is None or (isinstance(v, float) and v != v)
-
-        pdf = self.to_dataframe()
-        for c in pdf.columns:
-            if pdf[c].dtype == object:
-                kinds = {type(v) for v in pdf[c] if not _is_null(v)}
-                if len(kinds) > 1 or any(
-                    k not in (str, int, float, bool) for k in kinds
-                ):
-                    pdf[c] = pdf[c].map(
-                        lambda v: None if _is_null(v) else str(v)
-                    )
-        return pa.Table.from_pandas(pdf, preserve_index=False)
-
-    # -------------------------------------------------------- markdown
-    def describe(self):
-        """Transposed statistical summary, like pandas
-        ``DataFrame.describe()`` — reference parity with
-        python/dataprof/__init__.py:1994-2031: rows are stats
-        (count, null%, unique, mean, std, min, 25%, 50%, 75%, max,
-        min_length, max_length, avg_length, true_count, false_count,
-        true_ratio), columns are dataset columns. Returns a pandas
-        DataFrame when pandas is importable, else the dict-of-dicts.
-        Rounding matches the reference: half-away-from-zero, 2dp for
-        percentages/quartiles, 4dp for statistical metrics."""
-        import decimal as _decimal
-        import math as _math
-
-        def _half_up(v, nd):
-            if v is None:
-                return None
-            try:
-                fv = float(v)
-            except (TypeError, ValueError):
-                return None
-            if not _math.isfinite(fv):
-                return None
-            with _decimal.localcontext() as ctx:
-                ctx.rounding = _decimal.ROUND_HALF_UP
-                try:
-                    return float(
-                        _decimal.Decimal(str(fv)).quantize(
-                            _decimal.Decimal(1).scaleb(-nd)
-                        )
-                    )
-                except _decimal.InvalidOperation:
-                    # |v| ≳ 1e25: quantize to nd places needs more
-                    # digits than the context holds — the value has no
-                    # fractional part at that magnitude anyway
-                    return fv
-
-        summary: dict[str, dict[str, Any]] = {}
-        for c in self.columns:
-            st = c.get("stats") or {}
-            total = c.get("total_count")
-            nulls = c.get("null_count")
-            summary[c["name"]] = {
-                "count": total,
-                "null%": _half_up(
-                    100.0 * nulls / total if total else None, 2
-                ),
-                "unique": c.get("distinct_count"),
-                "mean": _half_up(st.get("mean"), 4),
-                "std": _half_up(st.get("std"), 4),
-                "min": _half_up(st.get("min"), 4),
-                "25%": _half_up(st.get("q1"), 2),
-                "50%": _half_up(st.get("median"), 2),
-                "75%": _half_up(st.get("q3"), 2),
-                "max": _half_up(st.get("max"), 4),
-                "min_length": st.get("min_length"),
-                "max_length": st.get("max_length"),
-                "avg_length": _half_up(st.get("avg_length"), 4),
-                "true_count": st.get("true_count"),
-                "false_count": st.get("false_count"),
-                "true_ratio": _half_up(st.get("true_ratio"), 4),
-            }
-        try:
-            import pandas as pd
-
-            return pd.DataFrame(summary)
-        except ImportError:
-            return summary
-
-    def quality_summary(self) -> dict[str, Any]:
-        """Single-row quality summary for easy aggregation across
-        reports (reference __init__.py:2033-2062): source, rows,
-        overall quality_score, each dimension's score (None when the
-        dimension had nothing to assess — never a vacuous 100), and
-        scan time."""
-        dims = (self.quality or {}).get("dimensions", {})
-        row: dict[str, Any] = {
-            "source": self.source,
-            "rows": self.execution.get("rows_processed"),
-            "quality_score": (self.quality or {}).get("overall_score"),
-        }
-        for d in ("completeness", "consistency", "uniqueness",
-                  "accuracy", "timeliness", "validity", "precision"):
-            row[d] = dims.get(d)
-        row["execution_time_ms"] = (
-            round(self.execution["scan_time_sec"] * 1000.0, 1)
-            if self.execution.get("scan_time_sec") is not None
-            else None
-        )
-        return row
-
-    def to_markdown(self) -> str:
-        lines = [f"# Profile: {self.source}", ""]
-        if self.quality:
-            lines.append(
-                f"**Overall quality:** "
-                f"{self.quality['overall_score']:.3f} "
-                f"({self.quality['confidence']})"
-            )
-            for d, v in sorted(self.quality["dimensions"].items()):
-                if v is not None:
-                    lines.append(f"- {d}: {v:.3f}")
-            lines.append("")
-        lines.append(
-            "| column | type | inferred | nulls | distinct | approx |"
-        )
-        lines.append("|---|---|---|---|---|---|")
-        for c in self.columns:
-            d = c.get("distinct_count")
-            lines.append(
-                f"| {c['name']} | {c['spark_type']} | "
-                f"{c['inferred_type']} | {c['null_count']} | "
-                f"{'n/a' if d is None else d} | "
-                f"{'~' if c['distinct_is_approximate'] else '='} |"
-            )
-        return "\n".join(lines)
-
-    # ------------------------------------------------------------ HTML
-    def to_html(self) -> str:
-        """Self-contained embeddable HTML fragment (reference
-        python/dataprof/__init__.py:2113 to_html / _repr_html_ —
-        same per-column summary as the markdown view, suitable for CI
-        summaries and notebooks). All values are HTML-escaped."""
-        import html as _html
-
-        e = lambda v: _html.escape(str(v))  # noqa: E731
-
-        rows = []
-        for c in self.columns:
-            null_pct = (
-                100.0 * c["null_count"] / c["total_count"]
-                if c["total_count"] else 0.0
-            )
-            rows.append(
-                "<tr>"
-                f"<td>{e(c['name'])}</td><td>{e(c['spark_type'])}</td>"
-                f"<td>{e(c['inferred_type'])}</td>"
-                f"<td>{c['total_count']}</td>"
-                f"<td>{null_pct:.1f}%</td>"
-                f"<td>{'~' if c['distinct_is_approximate'] else ''}"
-                f"{'n/a' if c.get('distinct_count') is None else c['distinct_count']}</td>"
-                f"<td>{e(','.join(c.get('flags') or []))}</td>"
-                "</tr>"
-            )
-        qual = ""
-        if self.quality:
-            dims = " ".join(
-                f"<span class='dim'>{e(d)}={v:.3f}</span>"
-                for d, v in sorted(self.quality["dimensions"].items())
-                if v is not None
-            )
-            qual = (
-                f"<p><b>Overall quality:</b> "
-                f"{self.quality['overall_score']:.3f} "
-                f"({e(self.quality['confidence'])})<br>{dims}</p>"
-            )
-        return (
-            "<div class='dataprof-report'>"
-            "<style>.dataprof-report table{border-collapse:collapse}"
-            ".dataprof-report td,.dataprof-report th"
-            "{border:1px solid #999;padding:2px 6px;"
-            "font:12px monospace}</style>"
-            f"<h3>Profile: {e(self.source)}</h3>{qual}"
-            "<table><tr><th>column</th><th>type</th><th>inferred</th>"
-            "<th>rows</th><th>null %</th><th>distinct</th>"
-            "<th>flags</th></tr>"
-            + "".join(rows)
-            + "</table></div>"
-        )
-
-    def _repr_html_(self) -> str:  # Jupyter rich display
-        return self.to_html()
-
-    # ----------------------------------------------------- LLM context
-    def to_llm_context(self, token_budget: int = 2000) -> str:
-        """Redacted summary for LLM consumption. Fail-closed: when
-        patterns were not scanned, say so explicitly; never echo raw
-        values from sensitive categories; escape newlines in anything
-        echoed (anti prompt-injection)."""
-        parts = [f"Dataset profile for {_escape(self.source)}."]
-        if not self.patterns_scanned:
-            parts.append(
-                "PII/pattern scanning DID NOT RUN — treat all text "
-                "fields as potentially sensitive."
-            )
-        for c in self.columns:
-            d = c.get("distinct_count")
-            desc = (
-                f"column {_escape(c['name'])}: {c['inferred_type']}, "
-                f"{c['null_count']}/{c['total_count']} null"
-                + (f", {d} distinct" if d is not None else "")
-            )
-            tops = [
-                t for t in c.get("top_values") or []
-                if not _is_sensitive_value(str(t[0]))
-            ][:3]
-            if tops and c.get("inferred_type") == "string":
-                desc += " e.g. " + ", ".join(
-                    _escape(str(t[0]))[:40] for t in tops
-                )
-            parts.append(desc)
-        if self.quality:
-            parts.append(
-                f"overall quality {self.quality['overall_score']:.2f}"
-            )
-        text = "\n".join(parts)
-        # ~4 chars/token budget (the reference's ceil(len/4) rule)
-        return text[: token_budget * 4]
-
-
-def compare(a: "ProfileReport", b: "ProfileReport") -> dict:
-    """Diff two reports (reference compare(),
-    python/dataprof/__init__.py:2277-2357): added / removed / common
-    columns and per-dimension quality deltas (b - a)."""
-    cols_a = {c["name"] for c in a.columns}
-    cols_b = {c["name"] for c in b.columns}
-    deltas = {}
-    if a.quality and b.quality:
-        for dim in set(a.quality["dimensions"]) | set(
-            b.quality["dimensions"]
-        ):
-            va = a.quality["dimensions"].get(dim)
-            vb = b.quality["dimensions"].get(dim)
-            if va is not None and vb is not None:
-                deltas[dim] = vb - va
-        deltas["overall_score"] = (
-            b.quality["overall_score"] - a.quality["overall_score"]
-        )
-    return {
-        "added_columns": sorted(cols_b - cols_a),
-        "removed_columns": sorted(cols_a - cols_b),
-        "common_columns": sorted(cols_a & cols_b),
-        "quality_deltas": deltas,
-    }
-
-
-def _escape(s: str) -> str:
-    return s.replace("\n", "\\n").replace("\r", "\\r")
-
-
-def _is_sensitive_value(v: str) -> bool:
-    from dataprof_spark.core.scrub import _COMPILED
-
-    return any(rx.search(v) for rx in _COMPILED.values())

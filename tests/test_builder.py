@@ -1,6 +1,6 @@
 """profile() options from the reference's fluent chain + metrics
-packs + describe()/quality_summary() — the reference API-surface
-parity items (VERDICT r4 #3 chain/packs, #4 describe). Each setter of
+packs — the reference API-surface parity items (VERDICT r4 #3
+chain/packs). Each setter of
 the reference's chain is a ``facade.profile`` keyword here.
 
 The packs contract under test is the reference's quality.rs:63-72
@@ -99,18 +99,9 @@ def test_schema_pack_is_one_action(spark, orders_df):
 
 def test_schema_pack_distinct_is_null_not_sentinel(spark, orders_df):
     """ADVICE r5: the schema pack's uncomputed distinct count must
-    surface as null/None everywhere — not a -1 sentinel leaking into
-    describe()/markdown/Arrow output."""
+    surface as None — not a -1 sentinel."""
     rep = facade.profile(orders_df, metrics=["schema"])
     assert all(c["distinct_count"] is None for c in rep.columns)
-    desc = rep.describe()
-    uniq = desc.loc["unique"]
-    assert not (uniq.fillna(0) < 0).any()
-    assert "-1" not in rep.to_markdown().replace("-1-", "")
-    assert "n/a" in rep.to_markdown()
-    tbl = rep.to_arrow()
-    col = tbl.column("distinct_count")
-    assert col.null_count == len(rep.columns)
 
 
 def test_unrequested_dimension_aggs_never_run(spark, orders_df):
@@ -157,56 +148,43 @@ def test_validity_dimension_explicit_request_opts_in(spark):
     assert set(rep.dimensions) == {"validity"}
 
 
-# --------------------------------------------------- describe/summary
-def test_describe_transposed_summary(orders_df):
-    rep = facade.profile(orders_df, quality=False)
-    df = rep.describe()
-    import pandas as pd
-
-    assert isinstance(df, pd.DataFrame)
-    # columns of the summary are the dataset's columns
-    assert set(df.columns) == {c["name"] for c in rep.columns}
-    assert "count" in df.index and "null%" in df.index
-    assert "50%" in df.index and "std" in df.index
-    total = orders_df.count()
-    assert all(df.loc["count"] == total)
-    # numeric column carries mean/quartiles; string column lengths
-    assert df.loc["mean", "o_totalprice"] is not None
-    assert df.loc["avg_length", "o_orderpriority"] is not None
-    assert pd.isna(df.loc["mean", "o_orderpriority"])
-
-
+# --------------------------------------------------- report summary
 def test_quality_summary_single_row(orders_df):
+    """The report's quality and execution blocks carry the one-row
+    summary (reference __init__.py:2033-2062): rows, overall score,
+    each dimension's score (None when not assessed, never a vacuous
+    100) and scan time."""
     rep = facade.profile(orders_df, key_col="o_orderkey")
-    row = rep.quality_summary()
-    assert row["rows"] == orders_df.count()
-    assert 0.0 <= row["quality_score"] <= 1.0
-    assert row["completeness"] is not None
+    assert rep.execution["rows_processed"] == orders_df.count()
+    assert 0.0 <= rep.quality["overall_score"] <= 1.0
+    dims = rep.quality["dimensions"]
+    assert dims["completeness"] is not None
     # validity is opt-in and was not requested -> None, not vacuous
-    assert row["validity"] is None
-    assert row["execution_time_ms"] > 0
+    assert dims.get("validity") is None
+    assert rep.execution["scan_time_sec"] > 0
 
 
 # ------------------------------------------- r5 review regressions
-def test_describe_survives_huge_magnitudes():
-    """Decimal.quantize to 2/4 places cannot represent |v| >= ~1e25
-    under the default 28-digit context; describe() must return the
-    value unrounded instead of raising InvalidOperation."""
+def test_describe_survives_huge_magnitudes(tmp_path):
+    """Statistics of |v| >= ~1e25 (past Decimal's default 28-digit
+    quantize range) survive the report's JSON save/load exactly."""
     from dataprof_spark.sources.report import ProfileReport
 
+    stats = {"mean": 1e30, "std": 2.5e27, "min": -1e30, "q1": 1e26,
+             "median": 1.5e30, "q3": 2e30, "max": 3e30}
     rep = ProfileReport(
         source="synthetic",
         columns=[{
             "name": "huge", "total_count": 3, "null_count": 0,
-            "distinct_count": 3,
-            "stats": {"mean": 1e30, "std": 2.5e27, "min": -1e30,
-                      "q1": 1e26, "median": 1.5e30, "q3": 2e30,
-                      "max": 3e30},
+            "distinct_count": 3, "stats": stats,
         }],
     )
-    df = rep.describe()
-    assert float(df.loc["mean", "huge"]) == 1e30
-    assert float(df.loc["max", "huge"]) == 3e30
+    p = str(tmp_path / "huge.json")
+    rep.save(p)
+    loaded = ProfileReport.load(p)
+    assert loaded.columns[0]["stats"] == stats
+    assert loaded.columns[0]["stats"]["max"] == 3e30
+
 
 
 def test_quality_dimensions_without_quality_pack_raises(orders_df):

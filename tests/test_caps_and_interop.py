@@ -1,5 +1,5 @@
-"""Row-cap truncation provenance, pandas/Arrow interop, progressive
-sampling, profiler mode/bottom-N additions."""
+"""Row-cap truncation provenance, pandas/Arrow interop, profiler
+mode/bottom-N additions."""
 
 from __future__ import annotations
 
@@ -36,16 +36,6 @@ def test_pandas_arrow_roundtrip(spark):
     tbl = readers.to_arrow(sdf.orderBy("a"))
     assert tbl.num_rows == 3
     assert tbl.column("b").to_pylist() == ["x", "y", "z"]
-
-
-def test_progressive_sampling(spark):
-    df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    sample, size = sampling.progressive(
-        df, ["l_quantity"], "l_orderkey", initial=500, confidence=0.95
-    )
-    assert sample.count() == size
-    # l_quantity is tight-ranged; 95% confidence needs a modest sample
-    assert size <= 4000
 
 
 def test_profiler_mode_and_bottom(spark):

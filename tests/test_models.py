@@ -34,8 +34,6 @@ TEXTS = [
 def test_default_dispatch_is_the_standin(monkeypatch):
     monkeypatch.delenv("DATAPROF_FASTTEXT_MODEL", raising=False)
     monkeypatch.delenv("DATAPROF_KENLM_MODEL", raising=False)
-    assert models.langid_backend() == "standin"
-    assert models.perplexity_backend() == "standin"
     assert models.predict_batch(TEXTS) == langid.predict_batch(TEXTS)
     np.testing.assert_array_equal(
         models.perplexity_batch(TEXTS), perplexity.perplexity_batch(TEXTS)
@@ -59,28 +57,6 @@ def test_configured_but_unloadable_fails_loud(monkeypatch, tmp_path):
     )
     with pytest.raises(RuntimeError):
         models.perplexity_batch(["hello"])
-
-
-def test_backend_reported_from_env(monkeypatch):
-    monkeypatch.setenv("DATAPROF_FASTTEXT_MODEL", "/nonexistent.bin")
-    monkeypatch.setenv("DATAPROF_KENLM_MODEL", "/nonexistent.arpa")
-    assert models.langid_backend() == "fasttext"
-    assert models.perplexity_backend() == "kenlm"
-
-
-def test_capabilities_reports_backends(monkeypatch):
-    monkeypatch.delenv("DATAPROF_FASTTEXT_MODEL", raising=False)
-    monkeypatch.delenv("DATAPROF_KENLM_MODEL", raising=False)
-    import dataprof_spark
-
-    caps = dataprof_spark.capabilities()
-    assert caps.langid_backend == "standin"
-    assert caps.perplexity_backend == "standin"
-    assert caps.fasttext_installed is _HAS_FASTTEXT
-    assert caps.kenlm_installed is _HAS_KENLM
-    mc = models.capabilities()
-    assert mc["fasttext_importable"] is _HAS_FASTTEXT
-    assert mc["kenlm_importable"] is _HAS_KENLM
 
 
 def test_labeler_dispatches_through_models(monkeypatch):
@@ -222,33 +198,3 @@ def test_udf_closure_standin_when_unconfigured(monkeypatch, spark):
         assert r["e"]["ppl"] == pytest.approx(
             float(perplexity.perplexity_batch([r["text"]])[0])
         )
-
-
-def test_misconfigured_backend_reported(monkeypatch, tmp_path):
-    """capabilities() must not claim 'fasttext'/'kenlm' when the env
-    var names a model this host cannot load — such a run raises, so
-    the honest report is 'misconfigured' (ADVICE r6)."""
-    import dataprof_spark
-
-    monkeypatch.setenv("DATAPROF_FASTTEXT_MODEL", str(tmp_path / "no.bin"))
-    monkeypatch.setenv("DATAPROF_KENLM_MODEL", str(tmp_path / "no.arpa"))
-    assert models.langid_status() == "misconfigured"
-    assert models.perplexity_status() == "misconfigured"
-    caps = dataprof_spark.capabilities()
-    assert caps.langid_backend == "misconfigured"
-    assert caps.perplexity_backend == "misconfigured"
-    monkeypatch.delenv("DATAPROF_FASTTEXT_MODEL")
-    monkeypatch.delenv("DATAPROF_KENLM_MODEL")
-    assert models.langid_status() == "standin"
-    assert models.perplexity_status() == "standin"
-
-
-def test_capabilities_snapshot():
-    import dataprof_spark as dp
-
-    caps = dp.capabilities()
-    assert caps.version == dp.__version__
-    assert caps.local_parquet and caps.arrow_interop
-    assert caps.pyarrow_installed and caps.pandas_installed
-    # this installation's Spark ships no Iceberg runtime jar
-    assert caps.iceberg_runtime is False

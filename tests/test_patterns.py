@@ -8,6 +8,7 @@ import pytest
 
 from dataprof_spark.core import patterns, validators
 from dataprof_spark.operators import patterns as spark_patterns
+from dataprof_spark.operators import quality
 
 
 # ------------------------------------------------------------ validators
@@ -123,15 +124,16 @@ def test_detect_on_spark_column(spark):
     df = spark.createDataFrame(rows, "email string")
     res = spark_patterns.detect_column_patterns(df, "email")
     assert res[0]["name"] == "Email"
-    v = spark_patterns.validity_score(df, "email")
-    assert v == pytest.approx(50 / 55)
+    rep = quality.assess(df, dimensions=["validity"])
+    assert rep.dimensions["validity"] == pytest.approx(50 / 55)
 
 
 def test_validity_not_assessed_without_dominant(spark):
     df = spark.createDataFrame(
         [("some plain text",), ("more words here",)], "t string"
     )
-    assert spark_patterns.validity_score(df, "t") is None
+    rep = quality.assess(df, dimensions=["validity"])
+    assert "validity" not in rep.dimensions
 
 
 def _n_jobs(spark, fn) -> int:

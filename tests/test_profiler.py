@@ -79,8 +79,8 @@ def test_inference_rules_on_string_columns(spark):
 
 
 def test_inference_parity_edges(spark):
-    """The Spark-side probes must agree with the (reference-parity)
-    driver-side rules in sources/structure.py (ADVICE r4 twin):
+    """The Spark-side probes must agree with the reference's
+    inference rules (ADVICE r4):
     i64 RANGE bounds the integer probe, the datetime shape is
     end-anchored (minutes-only is NOT a date), DD/MM/YYYY datetimes
     count, and values are trimmed before the date check."""

@@ -46,26 +46,6 @@ def test_exact_n_sample(orders):
     assert sorted(keys1) == sorted(keys2)
 
 
-def test_progressive_prefix_semantics(orders):
-    """The cached-candidate rewrite must return exactly the rows the
-    per-iteration full TakeOrdered used to return: a size-k hash
-    sample is a prefix of the size-max hash sample."""
-    sample, size = sampling.progressive(
-        orders, ["o_totalprice"], "o_orderkey",
-        initial=20, confidence=0.999, max_size=200,
-    )
-    got = sorted(r["o_orderkey"] for r in sample.collect())
-    want = sorted(
-        r["o_orderkey"]
-        for r in sampling.exact_n_sample(
-            orders, size, "o_orderkey"
-        ).collect()
-    )
-    assert got == want and len(got) == size
-    # 0.999 forces growth past the initial size on real spread
-    assert size > 20
-
-
 def test_stratified_first_k(orders):
     got = sampling.stratified_first_k(
         orders, ["o_orderstatus"], 5, "o_orderkey"

@@ -1,6 +1,5 @@
 """Sources & sinks: delimiter and encoding autodetect,
-permissive/strict policy, metadata-only parquet ops, versioned report
-save/load, redacted LLM context."""
+permissive/strict policy, versioned report save/load."""
 
 from __future__ import annotations
 
@@ -110,15 +109,6 @@ def test_robust_readers_never_cache(spark, tmp_path):
     assert res_j.corrupt_count == 1
 
 
-def test_parquet_metadata_ops():
-    path = "/root/testdata/sf0.001/orders.parquet"
-    n = readers.quick_row_count(path)
-    schema = readers.infer_schema(path)
-    assert n > 0
-    assert schema["o_orderkey"].startswith("int")
-    assert "o_orderdate" in schema
-
-
 def test_report_roundtrip_and_version_gate(spark, tmp_path):
     df = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     profs = profiler.profile(df)
@@ -143,30 +133,6 @@ def test_report_roundtrip_and_version_gate(spark, tmp_path):
     json.dump(raw, open(path, "w"))
     with pytest.raises(ValueError, match="newer"):
         report.ProfileReport.load(path)
-
-
-def test_markdown_and_llm_context_redaction():
-    rep = report.ProfileReport(
-        source="t",
-        columns=[
-            {
-                "name": "email", "spark_type": "string",
-                "inferred_type": "string", "total_count": 10,
-                "null_count": 0, "distinct_count": 10,
-                "distinct_is_approximate": False,
-                "top_values": [("bob@x.com", 3), ("hello", 2)],
-            }
-        ],
-        patterns_scanned=False,
-    )
-    md = rep.to_markdown()
-    assert "| email | string |" in md
-    ctx = rep.to_llm_context()
-    # fail-closed banner when patterns weren't scanned
-    assert "DID NOT RUN" in ctx
-    # sensitive value never echoed; benign one may be
-    assert "bob@x.com" not in ctx
-    assert "hello" in ctx
 
 
 def test_remote_fs_uri_scheme_path(spark):
